@@ -47,13 +47,18 @@ import datetime as _dt
 import os
 import re
 
+import pandas as pd
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import PythonEvalType
 
-from local_vectordb_spark.functions.embedding import hashed_embedding_udf
+from local_vectordb_spark.functions.embedding import (
+    EmbeddingClientError,
+    hashed_embedding_udf,
+)
 from local_vectordb_spark.operators import crud, ivf, knn
-from local_vectordb_spark.session import local_rows_df
+from local_vectordb_spark.session import local_rows_df, staging_suffix
 from local_vectordb_spark.sources.json_records import SCHEMAS
 
 INDEX_TYPES = ("cosine", "ivf", "sign", "nsw", "hybrid", "pq", "sq8", "auto")
@@ -291,7 +296,7 @@ class VectorDB:
                 # re-bootstraps — safe, never silently wrong.
                 try:
                     os.makedirs(self.root, exist_ok=True)
-                    tmp = f"{p}.tmp.{os.getpid()}"
+                    tmp = f"{p}.tmp.{staging_suffix()}"
                     with open(tmp, "w") as f:
                         f.write(uuid.uuid4().hex)
                         f.flush()
@@ -1026,13 +1031,43 @@ class VectorDB:
 
     # ---------------- search (Q7 dispatch) ----------------
 
-    def _embed_query(self, text: str) -> list[float]:
-        row = (
-            local_rows_df(self.spark, [(text,)], "t string")
-            .select(self.embedder(F.col("t")).alias("v"))
-            .collect()[0]
-        )
-        return [float(x) for x in row.v]
+    def _embed_texts(self, texts: list[str]) -> list[list[float]]:
+        """Embed a SMALL driver-side list of query texts, in order.
+
+        A scalar pandas-UDF embedder (both shipped backends) is called
+        directly on the driver: its function is Series -> Series, so
+        one in-process call returns the same vectors the UDF would,
+        without a Spark job or a Python-worker round trip. Any other
+        embedder (a Column expression such as ``md5_embedding``) runs
+        over a one-slice DataFrame and is collected. Corpus embedding
+        and ``_search_batch_table`` stay distributed."""
+        emb = self.embedder
+        if getattr(emb, "evalType", None) == PythonEvalType.SQL_SCALAR_PANDAS_UDF:
+            try:
+                vecs = list(emb.func(pd.Series(texts, dtype=object)))
+            except EmbeddingClientError:
+                raise
+            except Exception as e:
+                # an embedder fault is a server error, never a 400-mapped
+                # ValueError/KeyError from inside the backend
+                raise EmbeddingClientError(
+                    f"query embedding failed: {type(e).__name__}: {e}"
+                ) from e
+            if len(vecs) != len(texts):
+                raise EmbeddingClientError(
+                    f"embedder returned {len(vecs)} vectors for "
+                    f"{len(texts)} texts"
+                )
+        else:
+            vecs = [
+                r.v
+                for r in local_rows_df(
+                    self.spark, [(t,) for t in texts], "t string"
+                )
+                .select(emb(F.col("t")).alias("v"))
+                .collect()
+            ]
+        return [[float(x) for x in v] for v in vecs]
 
     def _chunks_for_search(
         self, metadata: dict | None, version: int | None = None
@@ -1083,6 +1118,11 @@ class VectorDB:
         directly, skipping the embedder), route to the strategy,
         hydrate content. Returns (id, score, content) — the
         FullSearchResult shape (src/models/search.py:17-31).
+
+        The query text is embedded on the driver (``_embed_texts``: a
+        pandas-UDF embedder is called in-process, so no Spark job and
+        no Python worker); corpus embedding on write stays
+        distributed.
 
         ``version`` (r12) pins the WHOLE search — scan, stored
         artifacts, hydration, and the auto dispatch's corpus count —
@@ -1157,7 +1197,7 @@ class VectorDB:
         qvec = (
             [float(x) for x in query_vec]
             if query_vec is not None
-            else self._embed_query(query)
+            else self._embed_texts([query])[0]
         )
         # ONE pointer read pins the whole search (r10 ADVICE, widened
         # in r11): the scan, any stored artifact (graph / sign layout),
@@ -1429,8 +1469,10 @@ class VectorDB:
         """Bulk kNN — a SET of queries against chunks in one job per
         strategy (SURVEY §7 hard part (a): search framed as batch, the
         shape that scales; the reference can only loop its single-query
-        endpoint). `queries` is [(query_id, text)] (embedded in ONE
-        batch job, not per query) or pass `query_vecs` directly.
+        endpoint). `queries` is [(query_id, text)] or pass
+        `query_vecs` directly. Up to `max_driver_queries` texts are
+        embedded on the driver in one call (``_embed_texts``, no Spark
+        job for a pandas-UDF embedder); larger sets embed distributed.
 
         Strategies: cosine = one corpus scan + BLAS matmul top-k per
         query (knn_batch); ivf = probe pairs broadcast-joined to the
@@ -1500,13 +1542,10 @@ class VectorDB:
                 version=version,
             )
         if query_vecs is None:
-            rows = local_rows_df(
-                self.spark,
-                [(int(i), t) for i, t in queries], "query_id long, t string"
-            ).select(
-                "query_id", self.embedder(F.col("t")).alias("v")
-            ).collect()
-            query_vecs = [(r.query_id, [float(x) for x in r.v]) for r in rows]
+            query_vecs = list(zip(
+                [int(i) for i, _ in queries],
+                self._embed_texts([t for _, t in queries]),
+            ))
         # one pointer read pins scan, stored layout, and hydration to
         # the same version — see search(); an explicit version replaces
         # the read (r12 time-travel batch)
@@ -3085,7 +3124,7 @@ def sync_bundle(src_bundle: str, dst_bundle: str) -> dict:
             kept += 1
             continue
         os.makedirs(os.path.dirname(dst_full), exist_ok=True)
-        tmp = f"{dst_full}.sync.{os.getpid()}"
+        tmp = f"{dst_full}.sync.{staging_suffix()}"
         if os.path.exists(tmp):
             os.remove(tmp)  # orphan from a torn sync: start it over
         donors = by_sha.get(info["sha256"])

@@ -281,6 +281,18 @@ def bfs_hops(
     return visited
 
 
+def _score_desc_key(item):
+    """Sort key for (id, score) pairs in Spark's ``desc(score),
+    asc(id)`` order: NaN sorts greatest (first), NULL last. A bare
+    ``-score`` key leaves NaN's place arbitrary and fails on NULL."""
+    i, s = item
+    if s is None:
+        return (2, 0.0, i)
+    if s != s:
+        return (0, 0.0, i)
+    return (1, -s, i)
+
+
 def graph_beam_search(
     edges: DataFrame,
     scored: DataFrame,
@@ -381,12 +393,9 @@ def graph_beam_search(
             # a subset of already-expanded nodes — a no-op by induction
             break
         frontier_ids = [
-            i
-            for i, _ in sorted(
-                visited.items(), key=lambda kv: (-kv[1], kv[0])
-            )[:beam]
+            i for i, _ in sorted(visited.items(), key=_score_desc_key)[:beam]
         ]
-    top = sorted(visited.items(), key=lambda kv: (-kv[1], kv[0]))[:k]
+    top = sorted(visited.items(), key=_score_desc_key)[:k]
     out_schema = StructType([scored.schema[id_col], scored.schema["score"]])
     # ONE-slice parallelize: bare createDataFrame spreads k rows over
     # defaultParallelism partitions (a 32-task job to serve 10 rows),
@@ -394,9 +403,7 @@ def graph_beam_search(
     # every python-served partition through its own socket round-trip
     # (measured ~5 s for 32 empty partitions)
     return spark.createDataFrame(
-        spark.sparkContext.parallelize(
-            [(i, float(s)) for i, s in top], 1
-        ),
+        spark.sparkContext.parallelize(top, 1),
         out_schema,
     )
 

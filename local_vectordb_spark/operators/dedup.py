@@ -592,10 +592,13 @@ def simhash_votes_arrow(
                 continue
             offsets = lst.offsets.to_numpy().astype(np.int64)
             cnt = offsets[1:] - offsets[:-1]
-            values = lst.values.to_numpy(zero_copy_only=False)
             sig = np.zeros(n, dtype=np.uint64)
-            t = len(values)
-            if t and cnt.max() > 0:
+            if cnt.max() > 0:
+                # this batch's tokens only: a sliced array's values
+                # buffer may extend past its last offset
+                values = lst.values.to_numpy(zero_copy_only=False)[
+                    offsets[0]:offsets[-1]
+                ]
                 # bit matrix (t, 64): column j = bit j of the int64's
                 # two's-complement representation == (h >> j) & 1
                 bits = np.unpackbits(
@@ -603,16 +606,20 @@ def simhash_votes_arrow(
                     axis=1,
                     bitorder="little",
                 )[:, :n_bits]
-                # per-row popcount of each bit column; reduceat yields
-                # x[idx[i]] (not 0) for empty segments and rejects
-                # idx == t — clamp, then zero empty/null rows below
-                starts = np.minimum(offsets[:-1], t - 1)
-                ones = np.add.reduceat(bits, starts, axis=0, dtype=np.int64)
-                packed = (
+                # per-row popcount of each bit column. reduceat over the
+                # NON-EMPTY rows' starts sums exactly each such row's
+                # tokens (an empty row adds none between its
+                # neighbours); empty rows, where reduceat would return
+                # a neighbour's token instead of 0, keep zero votes
+                nz = cnt > 0
+                ones = np.zeros((n, n_bits), dtype=np.int64)
+                ones[nz] = np.add.reduceat(
+                    bits, offsets[:-1][nz] - offsets[0], axis=0, dtype=np.int64
+                )
+                sig = (
                     ((2 * ones > cnt[:, None]).astype(np.uint64) << shifts)
                     .sum(axis=1, dtype=np.uint64)
                 )
-                sig = np.where(cnt > 0, packed, np.uint64(0))
             if lst.null_count:
                 sig[lst.is_null().to_numpy(zero_copy_only=False)] = 0
             yield pa.RecordBatch.from_arrays(

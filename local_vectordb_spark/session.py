@@ -9,6 +9,7 @@ test-data star schema (TESTDATA.md).
 from __future__ import annotations
 
 import os
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -88,10 +89,17 @@ def fixture_cache_dir(sf_dir: str, table: str, prefix: str = "lvdb_part") -> str
     )
 
 
+def staging_suffix() -> str:
+    """Suffix for a staging sibling that no other writer shares: the
+    pid alone is not enough, since the HTTP server's handler threads
+    in one process may stage the same target at the same time."""
+    return f"{os.getpid()}.{threading.get_ident()}"
+
+
 def materialize_once(path: str, write_fn) -> str:
     """Build a derived-cache directory exactly once, safely under
-    concurrent processes: ``write_fn(tmp_path)`` targets a
-    process-unique sibling directory which is atomically renamed into
+    concurrent processes and threads: ``write_fn(tmp_path)`` targets a
+    writer-unique sibling directory which is atomically renamed into
     place.  If a concurrent builder wins the rename race, ours fails
     (non-empty destination), we discard our copy and serve theirs —
     the bare check-then-write pattern this replaces could interleave
@@ -103,7 +111,7 @@ def materialize_once(path: str, write_fn) -> str:
     marker = os.path.join(path, "_SUCCESS")
     if os.path.exists(marker):
         return path
-    tmp = f"{path}.tmp.{os.getpid()}"
+    tmp = f"{path}.tmp.{staging_suffix()}"
     shutil.rmtree(tmp, ignore_errors=True)
     try:
         write_fn(tmp)

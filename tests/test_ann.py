@@ -273,6 +273,30 @@ def test_graph_beam_search_deterministic_and_recalls(spark, sf_dir):
     assert len(beam_ids & brute_ids) / 10 >= 0.5
 
 
+def test_graph_beam_search_orders_nan_and_null_like_spark(spark):
+    """The driver-side re-rank sorts like Spark's desc(score),
+    asc(id): a NaN score (score_all over a NaN embedding) is greatest,
+    a NULL score last, ties break id ascending."""
+    from pyspark.sql import functions as F
+
+    scored = spark.createDataFrame(
+        [(1, 0.5), (2, float("nan")), (3, 0.9), (4, 0.5), (5, None)],
+        "vec_id long, score double",
+    )
+    edges = spark.createDataFrame(
+        [(1, d) for d in (2, 3, 4, 5)], "src long, dst long"
+    )
+    want = [
+        r.vec_id
+        for r in scored.orderBy(F.desc("score"), F.asc("vec_id")).collect()
+    ]
+    assert want == [2, 3, 1, 4, 5]
+    got = ann.graph_beam_search(edges, scored, k=5, beam=8, hops=1).collect()
+    assert [r.vec_id for r in got] == want
+    top2 = ann.graph_beam_search(edges, scored, k=2, beam=8, hops=1).collect()
+    assert [r.vec_id for r in top2] == want[:2]
+
+
 def test_lsh_md5_buckets_agree_driver_vs_spark(spark, sf_dir):
     """The md5-hyperplane bucket must be bit-identical between the
     Spark expression (hyperplane_bucket) and the driver-side fold

@@ -752,6 +752,47 @@ def test_materialize_once_cleans_tmp_on_failure_and_serves_race_winner(tmp_path)
     assert leftovers == []
 
 
+def test_materialize_once_concurrent_threads_share_one_result(tmp_path):
+    """Two threads of one process cold-building the same cache path
+    (two HTTP handlers' first searches) each stage in their own
+    sibling directory; both return the complete destination and no
+    staging directory is left behind."""
+    import os
+    import pathlib
+    import threading
+
+    from local_vectordb_spark.session import materialize_once
+
+    dest = str(tmp_path / "cache")
+    both_writing = threading.Barrier(2, timeout=30)
+
+    def write(p):
+        os.makedirs(p)
+        both_writing.wait()  # each writer is mid-write when the other starts
+        (pathlib.Path(p) / "part-0").write_text("rows")
+        (pathlib.Path(p) / "_SUCCESS").touch()
+
+    got, errors = [], []
+
+    def build():
+        try:
+            got.append(materialize_once(dest, write))
+        except Exception as e:  # noqa: BLE001
+            errors.append(e)
+
+    threads = [threading.Thread(target=build) for _ in range(2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=60)
+        assert not t.is_alive()
+    assert errors == []
+    assert got == [dest, dest]
+    assert (pathlib.Path(dest) / "part-0").read_text() == "rows"
+    assert (pathlib.Path(dest) / "_SUCCESS").exists()
+    assert os.listdir(tmp_path) == ["cache"]
+
+
 def test_search_batch_auto_dispatches_on_corpus_size(db, monkeypatch):
     """search_batch(index_type='auto') is the batch twin of the single
     search's size dispatch: brute-force results at fixture scale, the
@@ -1041,7 +1082,7 @@ def test_facade_ivf_two_level_quantizer_dispatch_and_recall(
     for probe_text in (texts[3], texts[177], texts[399]):
         ivf_hits = d.search(probe_text, index_type="ivf", k=10).collect()
         assert max(ivf_hits, key=lambda r: r.score).content == probe_text
-        qv = d._embed_query(probe_text)
+        qv = d._embed_texts([probe_text])[0]
         full = ivf_mod.ivf_search(
             pinned, assignments, list(centroids), qv, k=10, id_col="id",
             n_probe=len(centroids),

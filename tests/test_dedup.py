@@ -1,6 +1,7 @@
 from pyspark.sql import functions as F
 
 from local_vectordb_spark.operators import dedup
+from local_vectordb_spark.session import local_rows_df
 
 
 def _docs(spark, rows):
@@ -296,13 +297,30 @@ def test_simhash_votes_arrow_parity(spark, sf_dir):
         ],
     )
     corpus = docs.unionByName(edges)
+    # one slice whose LAST rows are empty / NULL right after a
+    # multi-token row: the batch-tail shape where a segment sum that
+    # mishandles empty trailing segments drops the multi-token row's
+    # last votes
+    tail = local_rows_df(
+        spark,
+        [
+            (9_100_001, "alpha beta gamma delta epsilon"),
+            (9_100_002, ""),
+            (9_100_003, "zeta eta theta iota kappa lambda"),
+            (9_100_004, None),
+            (9_100_005, ""),
+        ],
+        "doc_id long, text string",
+    )
     for fn in (dedup.simhash_signatures, dedup.simhash_signatures_portable):
-        arrow = {
-            r["doc_id"]: r["simhash"]
-            for r in fn(corpus, use_arrow=True).collect()
-        }
-        expr = {
-            r["doc_id"]: r["simhash"]
-            for r in fn(corpus, use_arrow=False).collect()
-        }
-        assert arrow == expr
+        for frame in (corpus, tail):
+            arrow = {
+                r["doc_id"]: r["simhash"]
+                for r in fn(frame, use_arrow=True).collect()
+            }
+            expr = {
+                r["doc_id"]: r["simhash"]
+                for r in fn(frame, use_arrow=False).collect()
+            }
+            assert arrow == expr
+        assert arrow[9_100_001] != 0 and arrow[9_100_003] != 0

@@ -1,4 +1,5 @@
 import math
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -165,3 +166,58 @@ def test_md5_embedding_unit_norm_and_deterministic(spark):
     for i in (1, 3, 4):
         n = sum(x * x for x in vs[i]) ** 0.5
         assert abs(n - 1.0) < 1e-9   # L2-normalized (md5 of '' is still a hash)
+
+
+# ---------------------------------------------------------------------------
+# Query embedding on the driver (VectorDB._embed_texts)
+# ---------------------------------------------------------------------------
+
+EDGE_TEXTS = [
+    "",
+    "   \t\n ",
+    "naïve café — 東京の天気 🚀",
+    "x" * 5000,
+    "what is the capital of germany",
+]
+
+
+def _api_backend():
+    # builtins only: the Spark side ships this closure to a Python worker
+    def transport(chunk):
+        return [
+            [len(t) / 7.0, (sum(map(ord, t)) % 101) / 3.0, -0.1] for t in chunk
+        ]
+
+    return E.api_embedding_udf(transport=transport, batch_size=2)
+
+
+@pytest.mark.parametrize(
+    "make_udf", [E.hashed_embedding_udf, _api_backend], ids=["hashed", "api"]
+)
+def test_driver_query_embedding_bit_identical_to_udf_job(spark, tmp_path, make_udf):
+    """A pandas-UDF embedder is called in-process for query text: no
+    Spark job runs, and every component equals the UDF's output
+    through a Spark job bit for bit, on empty, whitespace-only,
+    non-ASCII and 5,000-character texts."""
+    from local_vectordb_spark.api import VectorDB
+    from local_vectordb_spark.session import local_rows_df
+
+    udf = make_udf()
+    db = VectorDB(spark, str(tmp_path), embedder=udf)
+    sc = spark.sparkContext
+    group = f"driver-embed-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "driver-side query embedding")
+    try:
+        got = db._embed_texts(EDGE_TEXTS)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    want = [
+        [float(x) for x in r.v]
+        for r in local_rows_df(spark, [(t,) for t in EDGE_TEXTS], "t string")
+        .select(udf(F.col("t")).alias("v"))
+        .collect()
+    ]
+    assert [[x.hex() for x in v] for v in got] == [
+        [x.hex() for x in v] for v in want
+    ]
