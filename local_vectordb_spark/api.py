@@ -9,9 +9,9 @@ DataFrame operations over parquet-backed tables:
   validation (C8) is a semi join, duplicate rejection (C9) an anti
   join, cascade delete (C7) an anti join on the FK, missing embeddings
   (E1) fill via the pluggable batch embedder;
-- `search` is the Q7 dispatch: index_type in {cosine, ivf, sign, nsw}
-  routes to brute-force / cluster-pruned / sign-bucket-pruned / LSH
-  strategies
+- `search` / `search_batch` are the Q7 dispatch: `_STRATEGIES` maps
+  each index_type (`INDEX_TYPES` = its keys plus the size-dispatched
+  `auto`) to its single-query, driver-batch and table-batch forms
   (/root/reference/src/models/collection.py:179-215; unknown type is a
   ValueError where the reference returns HTTP 400), with the Q8
   metadata filter applied ahead of scoring and Q6 hydration joining
@@ -46,6 +46,7 @@ from __future__ import annotations
 import datetime as _dt
 import os
 import re
+from typing import Callable, NamedTuple
 
 import pandas as pd
 from pyspark.errors import AnalysisException
@@ -60,8 +61,6 @@ from local_vectordb_spark.functions.embedding import (
 from local_vectordb_spark.operators import crud, ivf, knn
 from local_vectordb_spark.session import local_rows_df, staging_suffix
 from local_vectordb_spark.sources.json_records import SCHEMAS
-
-INDEX_TYPES = ("cosine", "ivf", "sign", "nsw", "hybrid", "pq", "sq8", "auto")
 
 
 def _dir_parquet_bytes(p: str) -> int:
@@ -162,6 +161,318 @@ class IncompleteChangeLog(ValueError):
 # chunk membership of each table's FK: child -> (fk_col, parent kind)
 _PARENTS = {"documents": ("library_id", "libraries"), "chunks": ("document_id", "documents")}
 _CHILDREN = {"libraries": "documents", "documents": "chunks"}
+
+
+# ---------------- search strategies (Q7 dispatch) ----------------
+
+
+class _Scope:
+    """What one search or batch reads, fixed before any strategy form
+    runs: generation ``disk_v`` of the chunks table (the caller's ONE
+    `_CURRENT` pointer read, or its explicit ``version`` pin; -1 on a
+    never-written store), ``chunks`` = that generation with the Q8
+    metadata filter applied, and ``k`` rows per query. Every form scans
+    ``chunks`` and reads stored artifacts for ``disk_v`` only, and
+    hydration joins the same generation, so a commit landing mid-search
+    never pairs a v(N) scan with v(N+1) artifacts or content;
+    keep_versions>=2 keeps the pinned generation readable across one
+    such commit. Single-query forms also read ``query`` (text or None),
+    ``qvec`` and the nsw ``beam``/``hops``."""
+
+    def __init__(self, db, disk_v, metadata, k, query=None, qvec=None,
+                 beam=None, hops=None):
+        self.db, self.disk_v, self.metadata, self.k = db, disk_v, metadata, k
+        self.pin = disk_v if disk_v >= 0 else None
+        self.chunks = db._chunks_for_search(metadata, version=self.pin)
+        self.query, self.qvec, self.beam, self.hops = query, qvec, beam, hops
+        # a form that already read its candidates' full rows (sq8's
+        # bucket-pruned point read) sets this, so the closing content
+        # join reuses that read instead of the whole table's columns
+        self.hydrate_src = None
+
+    def hydrate(self, scored: DataFrame, keep_cols=()) -> DataFrame:
+        src = self.hydrate_src
+        if src is None:
+            src = self.db.table("chunks", version=self.pin)
+        return knn.hydrate(
+            scored, src, id_col="id", record_id_col="id",
+            content_col="content", keep_cols=keep_cols,
+        )
+
+
+def _query_table(spark: SparkSession, vecs) -> DataFrame:
+    """Driver-side [(query_id, vector)] as the one-slice query table
+    (query_id, qv) every table-batch form joins."""
+    return local_rows_df(
+        spark,
+        [(int(i), [float(x) for x in v]) for i, v in vecs],
+        "query_id long, qv array<double>",
+    )
+
+
+def _via_query_table(table_form):
+    """Driver-batch form of a strategy whose probe set is an expression
+    of the query vector: its batch plan is already fully distributed,
+    so the driver-embedded vectors simply become its query table."""
+    return lambda s, vecs: table_form(s, _query_table(s.db.spark, vecs))
+
+
+def _ivf_probe(s: _Scope, search_fn, queries) -> DataFrame:
+    """Every ivf form: the centroids and assignments of the generation
+    being scanned (``_ivf_for(disk_v)``), never of a head that moved
+    past it."""
+    centroids, assignments = s.db._ivf_for(s.disk_v)
+    return search_fn(
+        s.chunks, assignments, centroids, queries, k=s.k, id_col="id",
+        n_probe=s.db._ivf_n_probe(centroids),
+    )
+
+
+def _sign(s: _Scope) -> DataFrame:
+    """Deterministic IVF tier: bucket = the vector's axis-sign bits, no
+    trained state, so results are reproducible in any engine (the
+    strategy e2e flows hash-check). Exact cosine over the Hamming-1
+    probe of the query's bucket."""
+    cand = s.db._sign_source(s.chunks, s.metadata, s.disk_v, s.qvec)
+    return knn.knn_brute_force(cand, s.qvec, k=s.k, id_col="id")
+
+
+def _sign_table(s: _Scope, qdf: DataFrame) -> DataFrame:
+    # joining on the stored `bucket` value lets a written store's probe
+    # join prune partitions dynamically (sign_search_batch_table)
+    return ivf.sign_search_batch_table(
+        s.db._sign_source(s.chunks, s.metadata, s.disk_v), qdf, k=s.k,
+        id_col="id", bucket_col="bucket",
+    )
+
+
+def _sq8(s: _Scope) -> DataFrame:
+    """Quantized serving tier: the sign tier's partition probe reads
+    only the SQ8 column triple (codes/vmin/vmax, ~1 byte per
+    dimension; column pruning never materializes the fp column, pinned
+    in tests/test_plans.py) and approx-scores the reconstructed
+    vectors; the top max(8*k, SQ8_RERANK_DEPTH) candidates are
+    rescored with their real fp embeddings from a bucket-pruned point
+    read of the base table. Every stage is deterministic arithmetic,
+    so the result is value-checked against DuckDB (api_search_sq8):
+    exact top-k BY TRUE SCORE among the approx top-c, ties by id at
+    both stages. No stage reads a corpus-wide column."""
+    c_depth = max(8 * s.k, SQ8_RERANK_DEPTH)
+    approx = s.db._sq8_approx(s.qvec, s.chunks, s.metadata, s.disk_v, c_depth)
+    # bounded driver surface: <= c_depth ids
+    cand_ids = [r.id for r in approx.select("id").collect()]
+    if s.disk_v >= 0:
+        exact = s.db._point_read("chunks", s.disk_v, cand_ids)
+    else:
+        exact = s.chunks.filter(F.col("id").isin(cand_ids))
+    if s.metadata is not None:
+        # the point read bypasses the metadata filter: re-intersect, so
+        # only ids of the filtered generation survive
+        exact = exact.join(s.chunks.select("id"), "id", "leftsemi")
+    # the scored ids are a subset of cand_ids: hydrate from this read
+    s.hydrate_src = exact
+    return knn.knn_brute_force(
+        exact.select("id", "embedding"), s.qvec, k=s.k, id_col="id"
+    )
+
+
+def _sq8_table(s: _Scope, qdf: DataFrame) -> DataFrame:
+    """Batch form of the sq8 tier, fully distributed. Stage 1: the sign
+    tier's probe join over the layout with its fp column REPLACED by
+    the reconstructed-SQ8 expression (the scan reads only id, bucket
+    and the code triple); per-query approx top-c by window. Stage 2:
+    the distinct candidate ids join the base generation on (bucket,
+    id) — the candidate side computes its data-layout bucket from the
+    id, so the broadcast join prunes the base scan to candidate
+    buckets — and the per-query exact top-k is one more window. Ties
+    by id at both stages, scores rounded like every batch surface."""
+    from pyspark.sql import Window
+
+    from local_vectordb_spark.functions import vector as V
+    from local_vectordb_spark.operators.knn import SCORE_DECIMALS
+
+    db = s.db
+    recon = db._sign_source(s.chunks, s.metadata, s.disk_v, sq8=True).select(
+        "id", "bucket",
+        V.sq8_reconstruct(
+            F.col("codes"), F.col("vmin"), F.col("vmax")
+        ).alias("embedding"),
+    )
+    approx = ivf.sign_search_batch_table(
+        recon, qdf, k=max(8 * s.k, SQ8_RERANK_DEPTH), id_col="id",
+        bucket_col="bucket",
+    )
+    cand_ids = approx.select("id").distinct()
+    gen_dir = os.path.join(db._table_dir("chunks"), f"v{s.disk_v}")
+    B = db._version_buckets(gen_dir) if s.disk_v >= 0 else None
+    if B is not None:
+        base = db.spark.read.parquet(gen_dir).select("id", "embedding", "bucket")
+        cb = cand_ids.withColumn("bucket", F.pmod(F.xxhash64("id"), F.lit(B)))
+        exact = base.join(F.broadcast(cb), ["bucket", "id"]).select(
+            "id", "embedding"
+        )
+    else:
+        exact = s.chunks.join(
+            F.broadcast(cand_ids), "id", "leftsemi"
+        ).select("id", "embedding")
+    rer = (
+        approx.select("query_id", "id")
+        .join(exact, "id")
+        .join(F.broadcast(qdf), "query_id")
+        .select(
+            "query_id",
+            "id",
+            F.round(
+                V.cosine_similarity(F.col("embedding"), F.col("qv")),
+                SCORE_DECIMALS,
+            ).alias("score"),
+        )
+    )
+    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("id"))
+    return (
+        rer.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") <= s.k)
+        .drop("_rn")
+    )
+
+
+def _nsw(s: _Scope) -> DataFrame:
+    """Beam search over the PERSISTED kNN graph of generation disk_v
+    (`_nsw_v{N}`, built at most once per version across processes;
+    the reference keeps its NSW index on the collection,
+    src/models/collection.py:251): each search pays the seed scan plus
+    one broadcast of a <=beam frontier against the edge table per hop.
+    The frontier SEEDS from the query's sign buckets, plus the min-id
+    node so a query whose buckets are empty still enters the graph, so
+    the walk starts next to the true neighbours and the default 3 hops
+    stay recall-safe at any corpus size. The default beam is 8 below
+    NSW_BEAM_KNEE rows of the searched generation and 16 at/above; an
+    explicit ``beam`` wins."""
+    if s.metadata is not None or s.disk_v < 0:
+        # the stored graph indexes the UNFILTERED corpus: a traversal
+        # over a filtered node set loses connectivity through excluded
+        # nodes, so a filtered (or never-written) search is an exact
+        # scan over the filtered candidates — the cosine shape. beam
+        # and hops tune a traversal this path does not run, so
+        # supplying them is an error, not a setting to drop.
+        if s.beam is not None or s.hops is not None:
+            raise ValueError(
+                "beam/hops tune the stored-graph nsw traversal, which "
+                "a metadata-filtered (or never-written) nsw search "
+                "does not use — it answers with an exact scan over "
+                "the filtered candidates; drop beam/hops here"
+            )
+        return knn.knn_brute_force(s.chunks, s.qvec, k=s.k, id_col="id")
+    from local_vectordb_spark.operators import ann
+
+    db = s.db
+    beam = s.beam
+    if beam is None:
+        beam = 8 if db._chunk_count(version=s.disk_v) < NSW_BEAM_KNEE else 16
+    probe = db._sign_source(s.chunks, None, s.disk_v, s.qvec)
+    seeds = (
+        knn.knn_brute_force(probe, s.qvec, k=beam, id_col="id")
+        .select("id")
+        .unionByName(s.chunks.select(F.min("id").alias("id")))
+        .na.drop()
+    )
+    return ann.graph_beam_search(
+        db._graph_stored(s.disk_v),
+        knn.score_all(s.chunks, s.qvec, id_col="id"),
+        k=s.k, beam=beam, hops=3 if s.hops is None else s.hops, id_col="id",
+        seeds=seeds,
+        # stored per-version graph: per-hop src-isin pushdown beats
+        # materializing the full edge table per search
+        checkpoint_edges=False,
+    )
+
+
+def _nsw_batch(s: _Scope, vecs) -> DataFrame:
+    """LSH candidates pooled across the queries, then exact cosine per
+    query over the pool (extra pool members can only improve a query's
+    recall vs its own buckets). The pooling is per-query driver work,
+    so nsw has no table-batch form."""
+    from functools import reduce
+
+    from local_vectordb_spark.operators.ann import lsh_search
+
+    pools = [
+        lsh_search(s.chunks, qv, k=s.k, id_col="id").select("id")
+        for _, qv in vecs
+    ]
+    cand_ids = reduce(lambda a, b: a.unionByName(b), pools).distinct()
+    candidates = s.chunks.join(F.broadcast(cand_ids), "id", "left_semi")
+    return knn.knn_batch(candidates, vecs, k=s.k, id_col="id")
+
+
+def _hybrid(s: _Scope) -> DataFrame:
+    """BM25 over chunk content fused with the cosine ranking by
+    reciprocal-rank fusion; the score column is the RRF score. Needs
+    query TEXT for the lexical side; per-query term sets make it a
+    single-query surface."""
+    from local_vectordb_spark.functions.text import normalize_text, tokens
+    from local_vectordb_spark.operators import fulltext as FT
+
+    if s.query is None:
+        raise ValueError("hybrid search needs query text for the BM25 side")
+    terms = local_rows_df(s.db.spark, [(s.query,)], "t string").select(
+        tokens(normalize_text(F.col("t"))).alias("terms")
+    ).first().terms
+    depth = max(100, s.k)
+    bm25 = FT.bm25_scores(
+        s.chunks, list(dict.fromkeys(terms)), text_col="content", id_col="id"
+    )
+    rb = FT.ranked_top(bm25, "bm25", "id", depth)
+    cos = knn.knn_brute_force(s.chunks, s.qvec, k=depth, id_col="id")
+    rc = FT.ranked_top(cos, "score", "id", depth)
+    return (
+        FT.rrf_fuse(rb, rc, id_col="id")
+        .withColumnRenamed("rrf", "score")
+        .orderBy(F.desc("score"), F.asc("id"))
+        .limit(s.k)
+    )
+
+
+def _pq(s: _Scope) -> DataFrame:
+    """Memory-compressed tier (operators/pq.py): ADC candidate scan
+    over md5-codebook codes, exact cosine rescore. The per-query ADC
+    table makes it a single-query surface."""
+    from local_vectordb_spark.operators import pq as pq_ops
+
+    return pq_ops.pq_adc_search(
+        s.chunks, s.qvec, k=s.k, n_candidates=max(50, 5 * s.k), id_col="id"
+    )
+
+
+class _Strategy(NamedTuple):
+    # (scope) -> (id, score): the top scope.k for scope.qvec
+    single: Callable
+    # (scope, [(query_id, vec)]) -> (query_id, id, score); None: the
+    # strategy is single-query only
+    driver_batch: Callable | None
+    # (scope, query table (query_id, qv)) -> (query_id, id, score) with
+    # no per-query driver state; None: capped at max_driver_queries
+    table_batch: Callable | None
+
+
+_STRATEGIES = {
+    "cosine": _Strategy(
+        lambda s: knn.knn_brute_force(s.chunks, s.qvec, k=s.k, id_col="id"),
+        lambda s, vecs: knn.knn_batch(s.chunks, vecs, k=s.k, id_col="id"),
+        lambda s, qdf: knn.knn_batch_table(s.chunks, qdf, k=s.k, id_col="id"),
+    ),
+    "ivf": _Strategy(
+        lambda s: _ivf_probe(s, ivf.ivf_search, s.qvec),
+        lambda s, vecs: _ivf_probe(s, ivf.ivf_search_batch, vecs),
+        lambda s, qdf: _ivf_probe(s, ivf.ivf_search_batch_table, qdf),
+    ),
+    "sign": _Strategy(_sign, _via_query_table(_sign_table), _sign_table),
+    "nsw": _Strategy(_nsw, _nsw_batch, None),
+    "hybrid": _Strategy(_hybrid, None, None),
+    "pq": _Strategy(_pq, None, None),
+    "sq8": _Strategy(_sq8, _via_query_table(_sq8_table), _sq8_table),
+}
+INDEX_TYPES = (*_STRATEGIES, "auto")
 
 
 class VectorDB:
@@ -1040,7 +1351,7 @@ class VectorDB:
         without a Spark job or a Python-worker round trip. Any other
         embedder (a Column expression such as ``md5_embedding``) runs
         over a one-slice DataFrame and is collected. Corpus embedding
-        and ``_search_batch_table`` stay distributed."""
+        and search_batch's table path stay distributed."""
         emb = self.embedder
         if getattr(emb, "evalType", None) == PythonEvalType.SQL_SCALAR_PANDAS_UDF:
             try:
@@ -1080,27 +1391,52 @@ class VectorDB:
 
     def _chunk_count(self, version: int | None = None) -> int:
         """Corpus size for the auto-strategy dispatch, cached per table
-        generation — keyed on the ON-DISK version (one tiny pointer-file
-        read per search), not the in-process write counter: another
-        instance/process committing through the same `_CURRENT` pointer
-        must invalidate this cache too, or index_type='auto' would
-        dispatch on a stale count indefinitely (r8 ADVICE). The count
-        job itself still runs once per write generation — dispatch is a
-        property of the corpus, not of any per-search filter, hence the
-        UNfiltered table. A version-pinned search (r12) counts ITS
-        generation; version numbers are never reused, so the cache
-        needs no invalidation beyond its key — which is also why the
-        count must be taken from the SNAPSHOT the key names (r12
-        ADVICE): counting via version=None here re-reads the pointer,
-        and a commit landing between the two reads would store the
-        NEWER generation's count under key v permanently, poisoning
-        every later search(version=v) dispatch."""
+        generation — keyed on the ON-DISK version, not the in-process
+        write counter, so a commit by another instance or process
+        through the same `_CURRENT` pointer moves the key too. The
+        count job runs once per generation — dispatch is a property of
+        the corpus, not of any per-search filter, hence the UNfiltered
+        table. Version numbers are never reused, so the cache needs no
+        invalidation beyond its key, and the count is taken from the
+        SNAPSHOT the key names: counting the live table here would
+        re-read the pointer, and a commit landing between the two
+        reads would store the NEWER generation's count under key v
+        permanently."""
         v = self._current_version("chunks") if version is None else version
         if v not in self._count_cache:
             self._count_cache[v] = self.table(
                 "chunks", version=v if v >= 0 else None
             ).count()
         return self._count_cache[v]
+
+    def _resolve(self, index_type: str, version: int | None):
+        """(strategy name, disk_v) for one search or batch: the type and
+        ``version`` checks, the ONE `_CURRENT` pointer read that pins
+        everything the search reads (an explicit ``version`` replaces
+        it; a negative / GC'd / future pin raises like table()), and
+        the `auto` dispatch on the size of THAT generation — exact
+        brute force up to AUTO_BRUTE_MAX rows, the sign-probed fp scan
+        up to AUTO_SQ8_MIN, the sq8 code scan + exact rerank past it.
+        The count is cached per generation (_chunk_count), so `auto`
+        costs one job per write, never one per search; every target
+        has both batch forms, so auto composes with any batch size."""
+        if index_type not in INDEX_TYPES:
+            raise ValueError(
+                f"index {index_type!r} not configured; choose from {INDEX_TYPES}"
+            )
+        if version is None:
+            disk_v = self._current_version("chunks")
+        else:
+            self.table("chunks", version=version)
+            disk_v = version
+        if index_type == "auto":
+            n = self._chunk_count(version=disk_v)
+            index_type = (
+                "cosine"
+                if n <= AUTO_BRUTE_MAX
+                else ("sign" if n <= AUTO_SQ8_MIN else "sq8")
+            )
+        return index_type, disk_v
 
     def search(
         self,
@@ -1115,324 +1451,63 @@ class VectorDB:
         version: int | None = None,
     ) -> DataFrame:
         """kNN over chunks: embed the query (or take `query_vec`
-        directly, skipping the embedder), route to the strategy,
-        hydrate content. Returns (id, score, content) — the
-        FullSearchResult shape (src/models/search.py:17-31).
+        directly, skipping the embedder), route to the strategy's
+        single-query form in `_STRATEGIES`, hydrate content. Returns
+        (id, score, content) — the FullSearchResult shape
+        (src/models/search.py:17-31).
 
         The query text is embedded on the driver (``_embed_texts``: a
         pandas-UDF embedder is called in-process, so no Spark job and
         no Python worker); corpus embedding on write stays
         distributed.
 
-        ``version`` (r12) pins the WHOLE search — scan, stored
-        artifacts, hydration, and the auto dispatch's corpus count —
-        to a retained historical generation: time-travel SEARCH, the
-        natural extension of the versioned store (every index artifact
-        is already per-version). A GC'd / future / negative version
-        raises like table() does. Writes always target the live head;
-        search_batch takes the same ``version`` pin for bulk
-        historical jobs.
+        ``version`` pins the WHOLE search — scan, stored artifacts,
+        hydration, and the auto dispatch's corpus count — to a
+        retained historical generation (time-travel search; every
+        index artifact is per-version and built on demand from the
+        pinned snapshot). A GC'd / future / negative version raises
+        like table() does. Writes always target the live head.
 
         index_type="hybrid" fuses BM25 over chunk content with the
         cosine ranking by reciprocal-rank fusion (requires query TEXT
         for the lexical side; score column is the RRF score).
         diversify="mmr" re-ranks a 5k-deep candidate tier by maximal
         marginal relevance (score column is the MMR score).
-        index_type="auto" dispatches on corpus size (the search twin
-        of ann.knn_graph_auto): exact brute force up to AUTO_BRUTE_MAX
-        rows, the deterministic sign-pruned tier beyond — the count is
-        cached per table VERSION (one job per write generation, never
-        per search).
+        index_type="auto" dispatches on corpus size (see _resolve).
 
-        ``beam``/``hops`` tune the nsw traversal (r10 ADVICE — the
-        fixed walk was un-tunable): beam defaults to 8 below
-        NSW_BEAM_KNEE rows and 16 at/above (the measured XL recall
-        knee, r12 verdict #5), hops to 3, which stays recall-safe
-        at ANY corpus size because the
-        frontier is SEEDED from the query's own sign buckets (the
-        walk starts next to the true neighbors and only refines
-        through graph edges), not grown from a fixed global entry
-        node whose distance to the answer scales with the corpus.
-        They apply ONLY to the stored-graph path: an nsw search that
-        carries a metadata filter (or hits a never-written store)
-        answers with an exact scan instead of a traversal, and
-        supplying beam/hops there raises rather than silently doing
-        nothing (r11 ADVICE)."""
-        if index_type not in INDEX_TYPES:
-            raise ValueError(
-                f"index {index_type!r} not configured; choose from {INDEX_TYPES}"
-            )
-        if version is not None:
-            # same contract as table(): negative / GC'd / future raises
-            # up front, never a silent live read (the serving layer's
-            # r11 ADVICE lesson, applied at the API too)
-            self.table("chunks", version=version)
-        if index_type == "auto":
-            # dispatch on the size of the corpus actually being
-            # searched: a pinned historical generation dispatches on
-            # ITS count, not the live head's. Three regimes (r18):
-            # exact float scan below the brute knee, sign-probed fp
-            # scan between, sign-probed CODE scan + exact rerank (sq8)
-            # past AUTO_SQ8_MIN — where even the probed partitions' fp
-            # bytes dominate.
-            n = self._chunk_count(version=version)
-            index_type = (
-                "cosine"
-                if n <= AUTO_BRUTE_MAX
-                else ("sign" if n <= AUTO_SQ8_MIN else "sq8")
-            )
+        ``beam``/``hops`` tune the nsw traversal (defaults: beam 8
+        below NSW_BEAM_KNEE rows and 16 at/above, hops 3). They apply
+        ONLY to the stored-graph path: an nsw search that carries a
+        metadata filter (or hits a never-written store) answers with
+        an exact scan instead of a traversal, and supplying beam/hops
+        there raises rather than silently doing nothing."""
+        name, disk_v = self._resolve(index_type, version)
         if diversify not in (None, "mmr"):
             raise ValueError(f"unknown diversify {diversify!r}; only 'mmr'")
-        if (beam is not None or hops is not None) and index_type != "nsw":
+        if (beam is not None or hops is not None) and name != "nsw":
             raise ValueError(
                 "beam/hops tune the nsw traversal only; "
-                f"index_type={index_type!r} does not use them"
+                f"index_type={name!r} does not use them"
             )
         if beam is not None and beam < 1 or hops is not None and hops < 0:
             raise ValueError("beam must be >=1 and hops >=0")
         if query_vec is None and query is None:
             raise ValueError("provide query text or query_vec")
-        if index_type == "hybrid" and query is None:
-            raise ValueError("hybrid search needs query text for the BM25 side")
         qvec = (
             [float(x) for x in query_vec]
             if query_vec is not None
             else self._embed_texts([query])[0]
         )
-        # ONE pointer read pins the whole search (r10 ADVICE, widened
-        # in r11): the scan, any stored artifact (graph / sign layout),
-        # and the closing hydration all read version disk_v — a
-        # concurrent commit mid-plan can no longer pair a v(N) scan
-        # with a v(N+1) artifact (dropped edges / missing seeds) or
-        # hydrate against rows the scan never scored. keep_versions>=2
-        # keeps the pinned snapshot readable across one such commit.
-        # An explicit ``version`` replaces the pointer read entirely
-        # (r12 time-travel search): scan, artifacts, and hydration all
-        # serve the retained generation — its per-version artifacts
-        # are built on demand from the pinned snapshot if that
-        # generation never built them, and ride the same retention GC.
-        disk_v = (
-            self._current_version("chunks") if version is None else version
+        s = _Scope(
+            self, disk_v, metadata, max(5 * k, 50) if diversify else k,
+            query=query, qvec=qvec, beam=beam, hops=hops,
         )
-        pin = disk_v if disk_v >= 0 else None
-        chunks = self._chunks_for_search(metadata, version=pin)
-        fetch = max(5 * k, 50) if diversify else k
-        hydrate_src = None  # a branch may supply a pruned source
-
-        if index_type == "hybrid":
-            from local_vectordb_spark.functions.text import tokens, normalize_text
-            from local_vectordb_spark.operators import fulltext as FT
-
-            terms_row = local_rows_df(self.spark, [(query,)], "t string").select(
-                tokens(normalize_text(F.col("t"))).alias("terms")
-            ).first()
-            bm25 = FT.bm25_scores(
-                chunks, list(dict.fromkeys(terms_row.terms)),
-                text_col="content", id_col="id",
-            )
-            rb = FT.ranked_top(bm25, "bm25", "id", max(100, fetch))
-            cos = knn.knn_brute_force(chunks, qvec, k=max(100, fetch), id_col="id")
-            rc = FT.ranked_top(cos, "score", "id", max(100, fetch))
-            scored = (
-                FT.rrf_fuse(rb, rc, id_col="id")
-                .withColumnRenamed("rrf", "score")
-                .orderBy(F.desc("score"), F.asc("id"))
-                .limit(fetch)
-            )
-        elif index_type == "cosine":
-            scored = knn.knn_brute_force(chunks, qvec, k=fetch, id_col="id")
-        elif index_type == "pq":
-            # memory-compressed tier (operators/pq.py): ADC candidate
-            # scan over md5-codebook codes, exact cosine rescore — the
-            # strategy a corpus too large to scan as floats selects
-            from local_vectordb_spark.operators import pq as pq_ops
-
-            scored = pq_ops.pq_adc_search(
-                chunks, qvec, k=fetch,
-                n_candidates=max(50, 5 * fetch), id_col="id",
-            )
-        elif index_type == "ivf":
-            # serve from the in-memory memo whenever it holds the
-            # generation THIS search scans — including a pinned search
-            # whose pin IS the memoized version (r12 ADVICE: the
-            # serving layer always pins, and routing every such query
-            # through _ivf_stored re-read centroids.json per request,
-            # bypassing the hot-path cache). The memo is matched on
-            # disk_v directly rather than via _ivf_index(), whose own
-            # pointer re-read could rebuild for a HEAD that moved past
-            # the pin; only a genuinely historical pin (or a cold /
-            # stale memo on the live path) goes to disk.
-            if self._ivf is not None and self._ivf_version == disk_v:
-                centroids, assignments = self._ivf
-            elif version is not None:
-                centroids, assignments = self._ivf_stored(disk_v)
-            else:
-                centroids, assignments = self._ivf_index()
-            scored = ivf.ivf_search(
-                chunks, assignments, centroids, qvec, k=fetch, id_col="id",
-                n_probe=self._ivf_n_probe(centroids),
-            )
-        elif index_type == "sign":
-            # deterministic IVF tier (ivf_sign_pruned's construction):
-            # bucket = axis-sign bits, a pure expression of the vector
-            # — no trained state, and the result is reproducible in
-            # any engine, which makes e2e flows over this strategy
-            # hash-checkable where the KMeans tier is rows-only. Any
-            # search on a written store serves from the PERSISTED
-            # bucket-partitioned layout (`_sign_v{N}`), so the probe
-            # prunes partition DIRECTORIES instead of filtering rows —
-            # the 100 TB difference, since `auto` routes here past the
-            # brute knee. A metadata filter INTERSECTS the pruned
-            # candidates with a semi join against the filtered id set
-            # (r17): the metadata column lives in the base table, not
-            # the layout, but the base-table side is an id+metadata
-            # column-pruned scan — the embedding bytes (the fat
-            # column) are only ever read for the probed partitions.
-            # The pre-r17 fallback row-filtered the FULL base table,
-            # i.e. a filtered search on the default large-corpus path
-            # paid a whole-corpus embedding scan. Only a never-written
-            # store keeps the expression form.
-            probes = ivf.sign_probe(qvec, n_bits=4)
-            if disk_v >= 0:
-                cand = self._sign_stored(disk_v).filter(
-                    F.col("bucket").isin(probes)
-                )
-                if metadata is not None:
-                    cand = cand.join(chunks.select("id"), "id", "leftsemi")
-            else:
-                cand = chunks.filter(
-                    ivf.sign_bucket("embedding", n_bits=4).isin(probes)
-                )
-            scored = knn.knn_brute_force(cand, qvec, k=fetch, id_col="id")
-        elif index_type == "sq8":
-            # QUANTIZED serving tier (r18): same Hamming-1 partition
-            # probe as 'sign', but the probed layout read touches only
-            # the SQ8 column triple (codes/vmin/vmax — ~1 byte of
-            # information per dimension; parquet column pruning never
-            # materializes the fp embedding column, pinned in
-            # tests/test_plans.py), approximate-scores the
-            # reconstructed vectors, and exact-rescores the top
-            # max(8*fetch, SQ8_RERANK_DEPTH) candidates with REAL fp
-            # embeddings via a bucket-pruned point read of the base
-            # table (_point_read — the id-hash data layout makes the
-            # rerank a partition-pruned read, not a corpus scan). At
-            # 100 TB the probed fp bytes are the sign tier's dominant
-            # cost (~31 TB of fp64 / ~15 TB of fp32 at a 5/16 probe);
-            # this path reads ~0.31x of the fp32 bytes (measured:
-            # BENCH_scale.json sq8_search — codes bit-pack to
-            # ~1.25 B/dim vs 4 B/dim float32) out of
-            # that, plus a candidate-sized rerank. Every stage is
-            # deterministic arithmetic (quantize/reconstruct/round),
-            # so the full two-stage result is value-checked against
-            # DuckDB (api_search_sq8). Result contract: exact top-k
-            # BY TRUE SCORE among the approx top-c — ties by id at
-            # both stages.
-            c_depth = max(8 * fetch, SQ8_RERANK_DEPTH)
-            approx = self._sq8_approx(qvec, chunks, metadata, disk_v, c_depth)
-            # bounded driver surface: <= c_depth ids (the same class as
-            # the <=k result collects and _write_data's touched-bucket
-            # list)
-            cand_ids = [r.id for r in approx.select("id").collect()]
-            if disk_v >= 0:
-                exact = self._point_read("chunks", disk_v, cand_ids)
-            else:
-                exact = chunks.filter(F.col("id").isin(cand_ids))
-            if metadata is not None:
-                # cand_ids are already metadata-filtered (semi join
-                # above); the point read bypasses _chunks_for_search,
-                # so re-intersect defensively against a concurrent
-                # layout/base drift — ids not in the filtered set drop
-                exact = exact.join(chunks.select("id"), "id", "leftsemi")
-            scored = knn.knn_brute_force(
-                exact.select("id", "embedding"), qvec, k=fetch, id_col="id"
-            )
-            # hydration reuses the SAME bucket-pruned point read (the
-            # scored ids are a subset of cand_ids): the closing content
-            # join must not scan the full table's (id, content) — on
-            # this tier NO stage reads a corpus-wide column
-            hydrate_src = exact
-        elif index_type == "nsw" and metadata is None and disk_v >= 0:
-            # TRUE NSW shape (r10): beam search over the PERSISTED kNN
-            # graph (`_nsw_v{version}` beside the table data — the
-            # reference keeps its NSW index on the collection across
-            # requests, src/models/collection.py:251; here the graph is
-            # a stored artifact built at most once per table version
-            # across processes, and each search pays only the seed scan
-            # + traversal: per hop, a broadcast of a ≤beam frontier
-            # against the edge table). The scan, the seeds, and the
-            # graph are all pinned to disk_v — one consistent version
-            # even under a concurrent commit (r10 ADVICE). The frontier
-            # SEEDS from the query's sign buckets (a 4-bit-pruned scan,
-            # the same construction the 'sign' strategy uses), plus the
-            # min-id node so a query whose buckets are empty still
-            # enters the graph: with near-query seeds a fixed 3-hop
-            # walk refines through graph edges at any corpus size,
-            # where the old fixed global entry capped the visited set
-            # ~200 nodes from the SAME corner of the graph regardless
-            # of n (r10 ADVICE — silent recall cliff on large corpora).
-            from local_vectordb_spark.operators import ann
-
-            pinned = chunks  # metadata is None here: the pinned table
-            edges = self._graph_stored(disk_v)
-            # size-aware default beam (r12 verdict #5): the measured
-            # XL knee — beam=8 reads recall@10 0.8 at 200k vectors,
-            # beam=16 reads 1.0 at no latency cost — would otherwise
-            # live only in BASELINE.md prose. Count keyed on disk_v
-            # (already cached per generation for the auto dispatch);
-            # explicit beam= always wins.
-            b = (
-                beam
-                if beam is not None
-                else (8 if self._chunk_count(version=disk_v) < NSW_BEAM_KNEE else 16)
-            )
-            h = hops if hops is not None else 3
-            # the seed scan reads the bucket-PARTITIONED sign layout
-            # (same version), so probing costs 5/16 of the layout's
-            # FILES — not a full-table scan with a row filter
-            probe = self._sign_stored(disk_v).filter(
-                F.col("bucket").isin(ivf.sign_probe(qvec, n_bits=4))
-            )
-            seed_ids = (
-                knn.knn_brute_force(probe, qvec, k=b, id_col="id")
-                .select("id")
-                .unionByName(pinned.select(F.min("id").alias("id")))
-                .na.drop()
-            )
-            scored = ann.graph_beam_search(
-                edges,
-                knn.score_all(pinned, qvec, id_col="id"),
-                k=fetch, beam=b, hops=h, id_col="id", seeds=seed_ids,
-                # stored per-version graph: per-hop src-isin pushdown
-                # beats materializing the full edge table per search
-                checkpoint_edges=False,
-            )
-        else:  # nsw + metadata filter (or a never-written store):
-            # pre-filter + EXACT scan. The stored graph indexes the
-            # UNFILTERED corpus — a traversal over a filtered node set
-            # loses connectivity through excluded nodes, and LSH
-            # probing over a small filtered candidate set can
-            # legitimately miss every bucket. The filter has already
-            # shrunk the scan (it pushes into the candidate read), so
-            # exact-over-filtered is both the correct and the cheap
-            # strategy — the same shape the cosine path uses. beam/hops
-            # tune the stored-graph traversal this branch does NOT run,
-            # so supplying them here is a contradiction the caller must
-            # hear about (r11 ADVICE: silently ignoring the knobs told
-            # a tuning caller nothing), not a setting to drop.
-            if beam is not None or hops is not None:
-                raise ValueError(
-                    "beam/hops tune the stored-graph nsw traversal, which "
-                    "a metadata-filtered (or never-written) nsw search "
-                    "does not use — it answers with an exact scan over "
-                    "the filtered candidates; drop beam/hops here"
-                )
-            scored = knn.knn_brute_force(chunks, qvec, k=fetch, id_col="id")
-
+        scored = _STRATEGIES[name].single(s)
         if diversify == "mmr":
             from local_vectordb_spark.operators import rerank
 
             cand = F.broadcast(scored).join(
-                self._chunks_for_search(None, version=pin).select(
+                self._chunks_for_search(None, version=s.pin).select(
                     "id", "embedding"
                 ),
                 "id",
@@ -1444,17 +1519,7 @@ class VectorDB:
                 .withColumnRenamed("mmr_score", "score")
                 .drop("mmr_rank")
             )
-        # the sq8 branch hydrates from its bucket-pruned candidate
-        # point read (its scored ids are already driver-known); every
-        # lazy tier joins the versioned table as before
-        return knn.hydrate(
-            scored,
-            hydrate_src
-            if hydrate_src is not None
-            else self.table("chunks", version=pin),
-            id_col="id",
-            record_id_col="id", content_col="content",
-        )
+        return s.hydrate(scored)
 
     def search_batch(
         self,
@@ -1470,196 +1535,62 @@ class VectorDB:
         strategy (SURVEY §7 hard part (a): search framed as batch, the
         shape that scales; the reference can only loop its single-query
         endpoint). `queries` is [(query_id, text)] or pass
-        `query_vecs` directly. Up to `max_driver_queries` texts are
-        embedded on the driver in one call (``_embed_texts``, no Spark
-        job for a pandas-UDF embedder); larger sets embed distributed.
+        `query_vecs` directly. Returns (query_id, id, score, content).
 
-        Strategies: cosine = one corpus scan + BLAS matmul top-k per
-        query (knn_batch); ivf = probe pairs broadcast-joined to the
-        assignments table, one scan for all queries (ivf_search_batch);
-        nsw = LSH candidates pooled across queries, then exact cosine
-        rescoring of the pool per query (extra pool members can only
-        improve a query's recall vs its own buckets). Returns
-        (query_id, id, score, content).
+        Query sets up to `max_driver_queries` take the strategy's
+        driver-batch form: texts are embedded on the driver in one
+        call (``_embed_texts``, no Spark job for a pandas-UDF
+        embedder) and the vectors close over the BLAS/probe kernels —
+        the fastest shape for small batches. Larger sets take its
+        table-batch form: embedding runs distributed and scoring joins
+        a broadcast query table (knn.knn_batch_table /
+        ivf.ivf_search_batch_table, including a distributed centroid
+        probe) — no vectors route through the driver, but the query
+        TABLE still broadcasts to every executor, which bounds this
+        path at roughly the hundreds-of-thousands of queries that fit
+        a broadcast; past that, pre-shard the query set and loop.
+        A strategy with no batch form (hybrid, pq) or no table form
+        (nsw, whose pooled LSH candidates are per-query driver work)
+        is refused before any embedding runs.
 
-        Query sets up to `max_driver_queries` take the interactive
-        path (embeddings collected to the driver, closed over the
-        BLAS/probe kernels — the fastest shape for small batches).
-        Larger sets embed distributed and join as a broadcast query
-        table (knn.knn_batch_table / ivf.ivf_search_batch_table,
-        including a distributed centroid probe) — no vectors route
-        through the driver, but the query TABLE still broadcasts to
-        every executor, which bounds this path at roughly the
-        hundreds-of-thousands of queries that fit a broadcast (see
-        knn_batch_table); past that, pre-shard the query set and loop,
-        or join it shuffled. nsw caps at the driver bound — its pooled
-        LSH candidate generation is per-query driver work by
-        construction; large sets should use cosine/ivf.
-
-        ``version`` (r12) pins the batch to a retained generation,
-        same contract as search(): scan, stored artifacts, hydration,
-        and the auto dispatch's count all serve that snapshot — the
-        bulk face of time-travel search (re-scoring an old corpus
-        generation against today's query set is exactly a training-
-        data backfill job)."""
-        if index_type not in INDEX_TYPES:
+        ``version`` pins the batch to a retained generation, same
+        contract as search(): scan, stored artifacts, hydration, and
+        the auto dispatch's count all serve that snapshot."""
+        name, disk_v = self._resolve(index_type, version)
+        st = _STRATEGIES[name]
+        if st.driver_batch is None:
+            batchable = tuple(n for n, t in _STRATEGIES.items() if t.driver_batch)
             raise ValueError(
-                f"index {index_type!r} not configured; choose from {INDEX_TYPES}"
-            )
-        if version is not None:
-            # negative / GC'd / future raises up front, like table()
-            self.table("chunks", version=version)
-        if index_type in ("hybrid", "pq"):
-            # refuse UP FRONT, before any embedding job runs: hybrid
-            # needs per-query BM25 term sets and pq a per-query ADC
-            # table — single-query surfaces; a late check would burn a
-            # Spark embed job just to raise
-            raise ValueError(
-                f"search_batch supports ('cosine', 'ivf', 'sign', 'sq8', "
-                f"'nsw'); {index_type!r} is single-query only — loop "
-                "search()"
-            )
-        if index_type == "auto":
-            # same size-dispatch rule as search(): exact brute force up
-            # to AUTO_BRUTE_MAX corpus rows, the deterministic
-            # sign-pruned tier beyond, the quantized sq8 tier past
-            # AUTO_SQ8_MIN (r18) — resolved ONCE per batch (the knee is
-            # a property of the corpus, not of any query), and every
-            # target supports the distributed table path, so auto
-            # composes with any batch size
-            n = self._chunk_count(version=version)
-            index_type = (
-                "cosine"
-                if n <= AUTO_BRUTE_MAX
-                else ("sign" if n <= AUTO_SQ8_MIN else "sq8")
+                f"search_batch supports {batchable}; {name!r} is "
+                "single-query only — loop search()"
             )
         if query_vecs is None and not queries:
             raise ValueError("provide queries or query_vecs")
         n_queries = len(queries) if query_vecs is None else len(query_vecs)
-        if n_queries > max_driver_queries:
-            return self._search_batch_table(
-                queries, index_type, k, metadata, query_vecs,
-                version=version,
-            )
-        if query_vecs is None:
-            query_vecs = list(zip(
-                [int(i) for i, _ in queries],
-                self._embed_texts([t for _, t in queries]),
-            ))
-        # one pointer read pins scan, stored layout, and hydration to
-        # the same version — see search(); an explicit version replaces
-        # the read (r12 time-travel batch)
-        disk_v = (
-            self._current_version("chunks") if version is None else version
-        )
-        pin = disk_v if disk_v >= 0 else None
-        chunks = self._chunks_for_search(metadata, version=pin)
-
-        if index_type == "cosine":
-            scored = knn.knn_batch(chunks, query_vecs, k=k, id_col="id")
-        elif index_type == "sign":
-            # the probe set is an expression of the query vector, so
-            # the batch form is the same fully-distributed join as the
-            # table path — no per-query driver work to preserve
-            qdf = local_rows_df(
-                self.spark,
-                [(int(i), [float(x) for x in v]) for i, v in query_vecs],
-                "query_id long, qv array<double>",
-            )
-            scored = self._sign_batch(chunks, qdf, k, metadata, disk_v)
-        elif index_type == "sq8":
-            qdf = local_rows_df(
-                self.spark,
-                [(int(i), [float(x) for x in v]) for i, v in query_vecs],
-                "query_id long, qv array<double>",
-            )
-            scored = self._sq8_batch(chunks, qdf, k, metadata, disk_v)
-        elif index_type == "ivf":
-            # a pinned batch reads the pinned generation's own stored
-            # index (built on demand) — see search()'s ivf branch
-            centroids, assignments = (
-                self._ivf_stored(disk_v)
-                if version is not None
-                else self._ivf_index()
-            )
-            scored = ivf.ivf_search_batch(
-                chunks, assignments, centroids, query_vecs, k=k, id_col="id",
-                n_probe=self._ivf_n_probe(centroids),
-            )
-        else:  # nsw -> pooled-LSH candidates + exact rescore
-            from functools import reduce
-
-            from local_vectordb_spark.operators.ann import lsh_search
-
-            pools = [
-                lsh_search(chunks, qv, k=k, id_col="id").select("id")
-                for _, qv in query_vecs
-            ]
-            cand_ids = reduce(lambda a, b: a.unionByName(b), pools).distinct()
-            candidates = chunks.join(F.broadcast(cand_ids), "id", "left_semi")
-            scored = knn.knn_batch(candidates, query_vecs, k=k, id_col="id")
-        return knn.hydrate(
-            scored, self.table("chunks", version=pin), id_col="id",
-            record_id_col="id", content_col="content",
-            keep_cols=("query_id",),
-        )
-
-    def _search_batch_table(
-        self,
-        queries,
-        index_type: str,
-        k: int,
-        metadata: dict | None,
-        query_vecs,
-        version: int | None = None,
-    ) -> DataFrame:
-        """Large-set batch search: the query set becomes a DataFrame,
-        embedding runs distributed, and scoring joins a broadcast query
-        table — no per-query driver state at any point. ``version``
-        pins the whole job to a retained generation (r12)."""
-        if index_type not in ("cosine", "ivf", "sign", "sq8"):
+        on_driver = n_queries <= max_driver_queries
+        if not on_driver and st.table_batch is None:
+            scalable = tuple(n for n, t in _STRATEGIES.items() if t.table_batch)
             raise ValueError(
-                f"index {index_type!r} does not scale past max_driver_queries "
+                f"index {name!r} does not scale past max_driver_queries "
                 "(its candidate generation is per-query driver work); use "
-                "'cosine', 'ivf', 'sign' or 'sq8' for large query sets"
+                f"one of {scalable} for large query sets"
             )
-        if query_vecs is not None:
-            qdf = local_rows_df(
-                self.spark,
-                [(int(i), [float(x) for x in v]) for i, v in query_vecs],
-                "query_id long, qv array<double>",
-            )
+        s = _Scope(self, disk_v, metadata, k)
+        if on_driver:
+            if query_vecs is None:
+                query_vecs = list(zip(
+                    [int(i) for i, _ in queries],
+                    self._embed_texts([t for _, t in queries]),
+                ))
+            scored = st.driver_batch(s, query_vecs)
+        elif query_vecs is not None:
+            scored = st.table_batch(s, _query_table(self.spark, query_vecs))
         else:
-            qdf = local_rows_df(
+            scored = st.table_batch(s, local_rows_df(
                 self.spark,
                 [(int(i), t) for i, t in queries], "query_id long, t string"
-            ).select("query_id", self.embedder(F.col("t")).alias("qv"))
-        disk_v = (
-            self._current_version("chunks") if version is None else version
-        )
-        pin = disk_v if disk_v >= 0 else None
-        chunks = self._chunks_for_search(metadata, version=pin)
-        if index_type == "cosine":
-            scored = knn.knn_batch_table(chunks, qdf, k=k, id_col="id")
-        elif index_type == "sign":
-            scored = self._sign_batch(chunks, qdf, k, metadata, disk_v)
-        elif index_type == "sq8":
-            scored = self._sq8_batch(chunks, qdf, k, metadata, disk_v)
-        else:
-            centroids, assignments = (
-                self._ivf_stored(disk_v)
-                if version is not None
-                else self._ivf_index()
-            )
-            scored = ivf.ivf_search_batch_table(
-                chunks, assignments, centroids, qdf, k=k, id_col="id",
-                n_probe=self._ivf_n_probe(centroids),
-            )
-        return knn.hydrate(
-            scored, self.table("chunks", version=pin), id_col="id",
-            record_id_col="id", content_col="content",
-            keep_cols=("query_id",),
-        )
+            ).select("query_id", self.embedder(F.col("t")).alias("qv")))
+        return s.hydrate(scored, keep_cols=("query_id",))
 
     @staticmethod
     def _ivf_n_probe(centroids) -> int:
@@ -1671,34 +1602,43 @@ class VectorDB:
         is pinned by tests/test_api_e2e.py."""
         return max(3, -(-len(centroids) // 8))
 
-    def _sign_batch(
+    def _sign_source(
         self,
         chunks: DataFrame,
-        qdf: DataFrame,
-        k: int,
         metadata: dict | None,
         disk_v: int,
+        qvec=None,
+        sq8: bool = False,
     ) -> DataFrame:
-        """Shared sign-strategy batch scoring: the persisted
-        bucket-partitioned layout with its stored `bucket` column on a
-        written store (the probe join then triggers dynamic partition
-        pruning — see ivf.sign_search_batch_table's bucket_col note);
-        a metadata filter intersects the layout with a semi join
-        against the filtered id set (r17, same shape as the
-        single-query path: the base-table side is an id+metadata
-        column-pruned scan, so embedding bytes are only read for
-        probed partitions — the pre-r17 fallback row-filtered the
-        full base table). Only a never-written store uses the
-        bucket-expression form. ``disk_v`` is the caller's single
-        pointer read, so layout and scan stay on one version."""
-        if disk_v >= 0:
-            layout = self._sign_stored(disk_v)
-            if metadata is not None:
-                layout = layout.join(chunks.select("id"), "id", "leftsemi")
-            return ivf.sign_search_batch_table(
-                layout, qdf, k=k, id_col="id", bucket_col="bucket",
+        """The sign tier's rows of generation ``disk_v`` with a
+        ``bucket`` column (the 4-bit axis-sign bucket), cut to the
+        Hamming-1 probe of ``qvec`` when one is given — the one place
+        the stored-layout choice is made, for sign, sq8 and the nsw
+        seed scan. A written store serves the persisted layout
+        (`_sign_stored`), so a probe prunes partition DIRECTORIES
+        instead of filtering rows; a metadata filter intersects it with
+        a semi join against the filtered ``chunks`` ids, whose
+        base-table side is an id+metadata column-pruned scan, so
+        embedding bytes are read only for probed partitions. A
+        never-written store — or, for ``sq8``, a layout generation
+        without the SQ8 code columns — derives the bucket from the real
+        vector of the already-filtered ``chunks`` (and attaches the
+        codes): same rows, no byte win."""
+        from local_vectordb_spark.functions import vector as V
+
+        src = self._sign_stored(disk_v) if disk_v >= 0 else None
+        if src is None or sq8 and "codes" not in src.columns:
+            src = (V.sq8_attach(chunks) if sq8 else chunks).withColumn(
+                "bucket", ivf.sign_bucket("embedding", n_bits=4)
             )
-        return ivf.sign_search_batch_table(chunks, qdf, k=k, id_col="id")
+            metadata = None  # chunks already carries the filter
+        if qvec is not None:
+            src = src.filter(
+                F.col("bucket").isin(ivf.sign_probe(qvec, n_bits=4))
+            )
+        if metadata is not None:
+            src = src.join(chunks.select("id"), "id", "leftsemi")
+        return src
 
     def _sq8_approx(
         self,
@@ -1712,27 +1652,12 @@ class VectorDB:
         candidate frame (id, score) — the Hamming-1 partition probe of
         the stored layout reading ONLY the SQ8 column triple (the plan
         gate in tests/test_plans.py holds this seam to it: no
-        embedding bytes), scored on the reconstructed vectors. Falls
-        back to the expression form on a never-written store or a
-        pre-sq8 layout generation (no byte win, same semantics)."""
+        embedding bytes), scored on the reconstructed vectors."""
         from local_vectordb_spark.functions import vector as V
 
-        probes = ivf.sign_probe(qvec, n_bits=4)
-        lay = self._sign_stored(disk_v) if disk_v >= 0 else None
-        if lay is not None and "codes" in lay.columns:
-            cand = lay.filter(F.col("bucket").isin(probes)).select(
-                "id", "vmin", "vmax", "codes"
-            )
-            if metadata is not None:
-                cand = cand.join(chunks.select("id"), "id", "leftsemi")
-        else:
-            cand = V.sq8_attach(
-                chunks.filter(
-                    ivf.sign_bucket("embedding", n_bits=4).isin(probes)
-                )
-            ).select("id", "vmin", "vmax", "codes")
+        cand = self._sign_source(chunks, metadata, disk_v, qvec, sq8=True)
         return knn.knn_brute_force(
-            cand.withColumn(
+            cand.select("id", "vmin", "vmax", "codes").withColumn(
                 "embedding",
                 V.sq8_reconstruct(
                     F.col("codes"), F.col("vmin"), F.col("vmax")
@@ -1741,130 +1666,42 @@ class VectorDB:
             qvec, k=c_depth, id_col="id",
         )
 
-    def _sq8_batch(
-        self,
-        chunks: DataFrame,
-        qdf: DataFrame,
-        k: int,
-        metadata: dict | None,
-        disk_v: int,
-    ) -> DataFrame:
-        """Batch form of the sq8 tier (r18), fully distributed — no
-        per-query driver work at any stage, so it serves
-        search_batch_table's unbounded query sets too. Stage 1: the
-        probe join of `_sign_batch` over the layout with its fp column
-        REPLACED by the reconstructed-SQ8 expression — column pruning
-        reads only (id, bucket, codes, vmin, vmax); per-query approx
-        top-c by window. Stage 2: the distinct candidate ids join the
-        base generation on (bucket, id) — the candidate side computes
-        its data-layout bucket from the id, so the broadcast join
-        dynamically prunes the base scan to candidate buckets — and
-        the per-query exact top-k is one more window. Ties by id at
-        both stages, scores rounded like every batch surface."""
-        from pyspark.sql import Window
-
-        from local_vectordb_spark.functions import vector as V
-        from local_vectordb_spark.operators.knn import SCORE_DECIMALS
-
-        c_depth = max(8 * k, SQ8_RERANK_DEPTH)
-        recon_col = V.sq8_reconstruct(
-            F.col("codes"), F.col("vmin"), F.col("vmax")
-        )
-        lay = self._sign_stored(disk_v) if disk_v >= 0 else None
-        if lay is not None and "codes" in lay.columns:
-            recon = lay.select(
-                "id", "bucket", recon_col.alias("embedding")
-            )
-            if metadata is not None:
-                recon = recon.join(chunks.select("id"), "id", "leftsemi")
-            approx = ivf.sign_search_batch_table(
-                recon, qdf, k=c_depth, id_col="id", bucket_col="bucket",
-            )
-        else:
-            # expression fallback: probe buckets come from the REAL
-            # vector (quantization can flip a near-zero component's
-            # sign — the probe set must match the sign tier's), the
-            # score from the reconstruction
-            recon = V.sq8_attach(chunks).select(
-                "id",
-                ivf.sign_bucket("embedding", n_bits=4).alias("bucket"),
-                recon_col.alias("embedding"),
-            )
-            approx = ivf.sign_search_batch_table(
-                recon, qdf, k=c_depth, id_col="id", bucket_col="bucket",
-            )
-
-        cand_ids = approx.select("id").distinct()
-        gen_dir = os.path.join(self._table_dir("chunks"), f"v{disk_v}")
-        B = self._version_buckets(gen_dir) if disk_v >= 0 else None
-        if B is not None:
-            base = self.spark.read.parquet(gen_dir).select(
-                "id", "embedding", "bucket"
-            )
-            cb = cand_ids.withColumn(
-                "bucket", F.pmod(F.xxhash64("id"), F.lit(B))
-            )
-            exact = base.join(F.broadcast(cb), ["bucket", "id"]).select(
-                "id", "embedding"
-            )
-        else:
-            exact = chunks.join(
-                F.broadcast(cand_ids), "id", "leftsemi"
-            ).select("id", "embedding")
-
-        rer = (
-            approx.select("query_id", "id")
-            .join(exact, "id")
-            .join(F.broadcast(qdf), "query_id")
-            .select(
-                "query_id",
-                "id",
-                F.round(
-                    V.cosine_similarity(F.col("embedding"), F.col("qv")),
-                    SCORE_DECIMALS,
-                ).alias("score"),
-            )
-        )
-        w = Window.partitionBy("query_id").orderBy(
-            F.desc("score"), F.asc("id")
-        )
-        return (
-            rer.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= k)
-            .drop("_rn")
-        )
-
     def _ivf_index(self):
-        """Build-once IVF index, invalidated when any write bumps the
-        table version — keyed on the ON-DISK _CURRENT version like
-        _chunk_count (r9 ADVICE): a commit by ANOTHER instance/process
-        through the shared pointer must invalidate this cache too, or
-        this instance serves search candidates from a stale index
-        indefinitely. One tiny pointer-file read per search.
+        """The live generation's IVF index (centroids, assignments)."""
+        return self._ivf_for(self._current_version("chunks"))
 
-        Always built from the UNFILTERED chunks table: search() applies
-        its metadata filter to the candidate set only (ivf_search's
-        semi join), so a filtered first search can't poison the cache
-        for later differently-filtered ones."""
-        disk_v = self._current_version("chunks")
-        if self._ivf is None or self._ivf_version != disk_v:
-            if disk_v >= 0:
-                centroids, assignments = self._ivf_stored(disk_v)
-            else:  # never-written store: nothing to train or persist
-                chunks = self.table("chunks")
-                _, centroids, assignments = ivf.ivf_build(
-                    chunks, n_clusters=2, id_col="id"
-                )
-            # the stored assignments are deliberately NOT .cache()d: a
-            # cached scan materializes EVERY cell and hides the file
-            # source from Catalyst, so the probe filter degrades to an
-            # in-memory row filter; the un-cached read keeps the
-            # cluster_id partition layout visible and each probe scans
-            # only its cells' directories (tests/test_plans.py pins
-            # PartitionFilters in the search plan)
-            self._ivf = (centroids, assignments)
-            self._ivf_version = disk_v
-        return self._ivf
+    def _ivf_for(self, disk_v: int):
+        """(centroids, assignments) of generation ``disk_v`` — the one
+        IVF lookup every ivf form makes, so probes always come from
+        the generation being scanned: the in-memory memo when it was
+        built for ``disk_v``, else the persisted `_ivf_v{N}` (built at
+        most once per version across processes), else, on a
+        never-written store, an in-memory build. The memo is keyed on
+        the ON-DISK version and follows the newest generation served:
+        a commit by another instance or process moves the key, and a
+        historical pin does not evict the live index.
+
+        Always built from the UNFILTERED chunks table: a metadata
+        filter applies to the candidate set only (ivf_search's semi
+        join), so a filtered first search can't poison the memo. The
+        stored assignments are deliberately NOT .cache()d: a cached
+        scan materializes EVERY cell and hides the file source from
+        Catalyst, so the probe filter would degrade to an in-memory row
+        filter; the un-cached read keeps the cluster_id partition
+        layout visible and each probe scans only its cells'
+        directories (tests/test_plans.py pins PartitionFilters)."""
+        if self._ivf is not None and self._ivf_version == disk_v:
+            return self._ivf
+        if disk_v >= 0:
+            index = self._ivf_stored(disk_v)
+        else:  # never-written store: nothing to train or persist
+            index = ivf.ivf_build(
+                self.spark.createDataFrame([], SCHEMAS["chunks"]),
+                n_clusters=2, id_col="id",
+            )[1:]
+        if self._ivf is None or disk_v > self._ivf_version:
+            self._ivf, self._ivf_version = index, disk_v
+        return index
 
     def _incremental_base(self, kind: str, version: int, prefix: str):
         """Find the newest retained artifact generation the build for

@@ -9,8 +9,23 @@ import uuid
 
 import pytest
 
-from local_vectordb_spark.api import ConcurrentWriteError, VectorDB
+from local_vectordb_spark.api import (
+    _STRATEGIES,
+    INDEX_TYPES,
+    ConcurrentWriteError,
+    VectorDB,
+)
 from local_vectordb_spark.sources.json_records import SCHEMAS
+
+# strategy capabilities, read from the dispatch table itself; `auto`
+# resolves to a strategy with both batch forms
+BATCH_TYPES = [n for n, st in _STRATEGIES.items() if st.driver_batch] + ["auto"]
+TABLE_TYPES = [n for n, st in _STRATEGIES.items() if st.table_batch] + ["auto"]
+SINGLE_ONLY = [n for n, st in _STRATEGIES.items() if st.driver_batch is None]
+DRIVER_ONLY = [
+    n for n, st in _STRATEGIES.items()
+    if st.driver_batch is not None and st.table_batch is None
+]
 
 QUESTIONS = [
     "What is the capital of Germany ?",
@@ -78,17 +93,18 @@ def test_embeddings_filled_on_create(db):
     assert d.table("chunks").filter("embedding IS NULL").count() == 0
 
 
-@pytest.mark.parametrize("index_type", ["cosine", "ivf", "sign", "nsw", "pq", "auto"])
+@pytest.mark.parametrize("index_type", INDEX_TYPES)
 def test_query_each_strategy_finds_exact_match(db, index_type):
     d, *_ = db
     hits = d.search(QUESTIONS[0], index_type=index_type, k=3).collect()
     assert hits, index_type
     top = max(hits, key=lambda r: r.score)
     assert top.content == QUESTIONS[0]
-    assert top.score == pytest.approx(1.0, abs=1e-5)
+    if index_type != "hybrid":  # hybrid's score is RRF, not cosine
+        assert top.score == pytest.approx(1.0, abs=1e-5)
 
 
-@pytest.mark.parametrize("index_type", ["cosine", "ivf", "nsw"])
+@pytest.mark.parametrize("index_type", BATCH_TYPES)
 def test_search_batch_each_strategy(db, index_type):
     """search_batch must find each query's exact-match chunk in one
     job, per strategy, with results tagged by query_id."""
@@ -435,7 +451,7 @@ def test_keep_versions_retention(spark, tmp_path):
     assert len(vdirs) == 3
 
 
-@pytest.mark.parametrize("index_type", ["cosine", "ivf"])
+@pytest.mark.parametrize("index_type", TABLE_TYPES)
 def test_search_batch_table_path_matches_driver_path(db, index_type):
     """A query set just over the driver bound must route through the
     distributed table path and return exactly what the driver path
@@ -474,34 +490,58 @@ def test_search_batch_10k_queries_distributed(db):
 
 
 def test_search_batch_nsw_rejects_oversized_set(db):
+    """Strategies without a table-batch form (nsw: pooled LSH
+    candidates are per-query driver work) refuse a set past the driver
+    bound and still serve one within it."""
     d, *_ = db
-    with pytest.raises(ValueError, match="does not scale"):
-        d.search_batch(
-            queries=[(i, "x") for i in range(3)],
-            index_type="nsw",
+    assert DRIVER_ONLY == ["nsw"]
+    for t in DRIVER_ONLY:
+        with pytest.raises(ValueError, match="does not scale"):
+            d.search_batch(
+                queries=[(i, "x") for i in range(3)],
+                index_type=t,
+                max_driver_queries=2,
+            )
+        assert d.search_batch(
+            queries=[(0, QUESTIONS[0])], index_type=t, k=1,
             max_driver_queries=2,
-        )
+        ).count() == 1
 
 
 def test_search_batch_rejects_single_query_strategies(db):
-    """hybrid/pq must raise, not silently fall through to the nsw
-    branch of the batch dispatch."""
+    """Strategies without a batch form (hybrid, pq) must raise on both
+    the driver and the table path, not fall through to another
+    strategy's batch form."""
     d, *_ = db
-    for bad in ("hybrid", "pq"):
-        with pytest.raises(ValueError, match="single-query only"):
-            d.search_batch(
-                queries=[(0, "anything")], index_type=bad, k=2
-            )
+    assert SINGLE_ONLY == ["hybrid", "pq"]
+    for bad in SINGLE_ONLY:
+        for mdq in (1024, 0):
+            with pytest.raises(ValueError, match="single-query only"):
+                d.search_batch(
+                    queries=[(0, "anything")], index_type=bad, k=2,
+                    max_driver_queries=mdq,
+                )
 
 
-def test_search_batch_rejects_single_query_types_before_embedding(db):
-    """hybrid/pq are single-query surfaces; the rejection must fire up
-    front — before any Spark embedding job runs (a late check burned
-    an embed job just to raise)."""
+def test_search_batch_rejects_single_query_types_before_embedding(db, monkeypatch):
+    """The capability refusals fire up front — before any embedding
+    runs, on the driver or distributed (a late check burned an embed
+    job just to raise)."""
     d, *_ = db
-    for t in ("hybrid", "pq"):
+
+    def no_embedding(*_a, **_k):
+        raise AssertionError("embedding ran before the refusal")
+
+    monkeypatch.setattr(d, "_embed_texts", no_embedding)
+    monkeypatch.setattr(d, "embedder", no_embedding)
+    for t in SINGLE_ONLY:
         with pytest.raises(ValueError, match="single-query only"):
             d.search_batch(queries=[(0, "q")], index_type=t)
+    for t in DRIVER_ONLY:
+        with pytest.raises(ValueError, match="does not scale"):
+            d.search_batch(
+                queries=[(0, "q")], index_type=t, max_driver_queries=0
+            )
 
 
 def test_search_batch_sign_matches_cosine_hits(db):
@@ -1283,6 +1323,42 @@ def test_chunk_count_pinned_version_counts_that_snapshot(spark, tmp_path):
     # each key holds ITS generation's count
     assert fresh._count_cache[v0] == len(chunk_ids)
     assert fresh._count_cache[v1] == len(chunk_ids) - 3
+
+
+def test_live_ivf_forms_probe_the_scanned_generation(spark, tmp_path, monkeypatch):
+    """Every ivf form reads the index of the generation its scan
+    pinned: a commit landing right after a live call's one pointer
+    read must not pair the v(N) scan and hydration with v(N+1)
+    assignments. Each live call races another instance's delete of
+    the query's own exact-match chunk and must equal the same call
+    pinned to the generation it read (a cold memo for the first)."""
+    texts = [f"note {i} on topic {i % 7}: words {i * 13 % 97}" for i in range(24)]
+    a, _, ids = _seed_store(spark, tmp_path, texts)
+    b = VectorDB(spark, a.root)
+    read = a._current_version
+    doomed: list[str] = []
+
+    def racing_read(kind):
+        v = read(kind)
+        if doomed and kind == "chunks":
+            b.delete("chunks", spark.createDataFrame([(doomed.pop(),)], "id string"))
+        return v
+
+    monkeypatch.setattr(a, "_current_version", racing_read)
+    calls = {
+        "search": lambda t, **kw: a.search(t, index_type="ivf", k=3, **kw),
+        "driver batch": lambda t, **kw: a.search_batch(
+            queries=[(0, t)], index_type="ivf", k=3, **kw),
+        "table batch": lambda t, **kw: a.search_batch(
+            queries=[(0, t)], index_type="ivf", k=3, max_driver_queries=0, **kw),
+    }
+    for i, (label, call) in zip((3, 11, 17), calls.items()):
+        v = read("chunks")
+        doomed.append(ids[i])
+        live = call(texts[i]).collect()
+        assert not doomed and read("chunks") == v + 1, label  # raced
+        assert live == call(texts[i], version=v).collect(), label
+        assert max(live, key=lambda r: r.score).content == texts[i], label
 
 
 def test_live_pinned_ivf_search_serves_from_memo(spark, tmp_path, monkeypatch):

@@ -19,7 +19,7 @@ import uuid
 import pytest
 from pyspark.sql import functions as F
 
-from local_vectordb_spark.api import VectorDB
+from local_vectordb_spark.api import INDEX_TYPES, VectorDB
 from local_vectordb_spark.functions import embedding as E
 from local_vectordb_spark.serving import make_server
 from local_vectordb_spark.session import local_rows_df
@@ -97,7 +97,7 @@ def _embed_sites(sites):
     return [s for s in sites if s.split(" at ", 1)[-1] in inside]
 
 
-@pytest.mark.parametrize("index_type", ["cosine", "sign", "sq8", "pq"])
+@pytest.mark.parametrize("index_type", INDEX_TYPES)
 def test_query_route_matches_facade_search(db, index_type):
     with _serving(db) as base:
         code, body = _query(
