@@ -46,6 +46,7 @@ from __future__ import annotations
 import datetime as _dt
 import os
 import re
+import shutil
 from typing import Callable, NamedTuple
 
 import pandas as pd
@@ -119,17 +120,31 @@ NSW_EXACT_BUILD_MAX = 20_000
 # quantizer usable past the 4096-cell / ~16M-row flat regime.
 IVF_TWO_LEVEL_MIN_CELLS = 256
 
-# Incremental index maintenance (r13): when a stored IVF build can
-# reuse a previous generation's artifact (frozen centroids + delta
-# assignment + affected-cell rewrite + hard-linked untouched cells),
-# it does — UNTIL the cumulative drift (rows upserted or removed since
-# the last actual KMeans train) exceeds this fraction of the trained
-# corpus size, at which point the build retrains from scratch: frozen
-# centroids track the data distribution only as long as the data is
-# mostly the data they were trained on, and the √n cell-count rule
-# drifts too as n moves. 20% is FAISS-practice territory — far below
-# it a retrain buys ~nothing; far above it cells go stale and lopsided.
+# Drift budget of the trained index artifacts: an ivf build extends
+# the previous generation's artifact (frozen centroids, delta
+# assignment, affected-cell rewrite, hard-linked untouched cells) and
+# an nsw build inserts the delta into the previous graph, UNTIL the
+# cumulative churn (rows upserted or removed since the last full
+# build) exceeds this fraction of the corpus size at that build; then
+# the build starts from scratch. Frozen centroids track the data
+# distribution only while the data is mostly the data they were
+# trained on, and the √n cell-count rule drifts as n moves. 20% is
+# FAISS-practice territory: far below it a retrain buys ~nothing; far
+# above it cells go stale and lopsided.
 IVF_RETRAIN_FRACTION = 0.2
+
+
+def _within_drift_budget(drift: int, n_built: int) -> bool:
+    """Whether an ivf or nsw artifact built over ``n_built`` rows may
+    still be extended once its cumulative churn reaches ``drift``."""
+    return drift <= IVF_RETRAIN_FRACTION * n_built
+
+
+# The stored index artifacts of a chunks generation N, each in
+# `chunks/_{prefix}_v{N}`: the sign-bucket layout, the IVF index and
+# the nsw graph. They ride the retention GC of the version they index.
+ARTIFACTS = ("sign", "ivf", "nsw")
+_ARTIFACT_DIR = re.compile(rf"_({'|'.join(ARTIFACTS)})_v(\d+)$")
 
 # nsw default-beam knee (r12 verdict #5): the XL recall curve
 # (BENCH_scale.json recall_curve, 200k vectors) measured recall@10 =
@@ -220,8 +235,15 @@ def _via_query_table(table_form):
 def _ivf_probe(s: _Scope, search_fn, queries) -> DataFrame:
     """Every ivf form: the centroids and assignments of the generation
     being scanned (``_ivf_for(disk_v)``), never of a head that moved
-    past it."""
-    centroids, assignments = s.db._ivf_for(s.disk_v)
+    past it. A never-written store has nothing to train cells on: it
+    probes no cell and answers with no rows."""
+    if s.disk_v < 0:
+        centroids = []
+        assignments = s.chunks.select(
+            "id", "embedding", F.lit(0).alias("cluster_id")
+        )
+    else:
+        centroids, assignments = s.db._ivf_for(s.disk_v)
     return search_fn(
         s.chunks, assignments, centroids, queries, k=s.k, id_col="id",
         n_probe=s.db._ivf_n_probe(centroids),
@@ -391,11 +413,14 @@ def _nsw_batch(s: _Scope, vecs) -> DataFrame:
     """LSH candidates pooled across the queries, then exact cosine per
     query over the pool (extra pool members can only improve a query's
     recall vs its own buckets). The pooling is per-query driver work,
-    so nsw has no table-batch form."""
+    so nsw has no table-batch form. A never-written store has nothing
+    to fit LSH on: the exact scan answers, with no rows."""
     from functools import reduce
 
     from local_vectordb_spark.operators.ann import lsh_search
 
+    if s.disk_v < 0:
+        return knn.knn_batch(s.chunks, vecs, k=s.k, id_col="id")
     pools = [
         lsh_search(s.chunks, qv, k=s.k, id_col="id").select("id")
         for _, qv in vecs
@@ -838,7 +863,7 @@ class VectorDB:
         private staging directory, so no checkpoint is needed to avoid
         overwriting one's own input.
 
-        ``delta`` (r13) — ``(upserts, removes)``, both in the table
+        ``delta`` is ``(upserts, removes)``, both in the table
         schema: the NET row-level change this commit applies, recorded
         as ``v{N}/_delta/{upserts,removes}`` parquet beside the
         snapshot (underscore-prefixed, so every snapshot reader
@@ -871,7 +896,6 @@ class VectorDB:
         exactly-one-winner semantics even on filesystems where flock
         is a no-op (some NFS mounts)."""
         import fcntl
-        import shutil
         import uuid
 
         d = self._table_dir(kind)
@@ -940,11 +964,8 @@ class VectorDB:
                     and int(entry[1:]) <= nxt - self.keep_versions
                 ):
                     shutil.rmtree(os.path.join(d, entry), ignore_errors=True)
-                # persisted index artifacts (IVF, NSW graph, sign
-                # layout) ride the same retention as the table
-                # versions they index
-                m = re.match(r"_(?:ivf|nsw|sign)_v(\d+)$", entry)
-                if m and int(m.group(1)) <= nxt - self.keep_versions:
+                m = _ARTIFACT_DIR.match(entry)
+                if m and int(m.group(2)) <= nxt - self.keep_versions:
                     shutil.rmtree(os.path.join(d, entry), ignore_errors=True)
         finally:
             os.close(lock_fd)  # closing the fd releases the flock
@@ -962,44 +983,38 @@ class VectorDB:
             return None
 
     def _write_data(self, kind, df, delta, base, stage) -> None:
-        """The data half of a commit (r17): DELTA-PROPORTIONAL when it
-        can be, wholesale only when it must.
+        """The data half of a commit: delta-proportional when it can
+        be, wholesale only when it must.
 
         The versioned snapshot is laid out hive-partitioned by
-        ``bucket = pmod(xxhash64(id), B)`` — the same construction the
-        CDF consumer's mirror uses — so a delta commit rewrites ONLY
-        the buckets the delta touches (read partition-pruned from the
-        previous generation, broadcast-anti-joined against the changed
-        ids, unioned with the upserts) and HARD-LINKS every untouched
-        bucket directory from the previous generation: commit cost is
-        ∝ churn × (corpus/B), never ∝ corpus. Before r17 every commit
-        rewrote the whole table — the one remaining corpus-bound cost
-        in the write path after the index artifacts went incremental
-        (r13); a 20-row add to a 100 TB corpus must not rewrite
-        100 TB.
+        ``bucket = pmod(xxhash64(id), B)``, the construction the CDF
+        consumer's mirror uses, so a delta commit goes through
+        ``rewrite_partitions``: only the buckets the changed ids hash
+        to are rewritten (prev − changed ids + upserts) and every
+        untouched bucket directory is hard-linked from the previous
+        generation. Commit cost is ∝ churn × (corpus/B), never ∝
+        corpus. The derivation new = prev − changed ids + upserts is
+        the contract the incremental artifact builders and the CDF feed
+        already rely on: the delta IS the net change this commit
+        applies (see _write).
 
-        The derivation new = prev − changed_ids + upserts is the SAME
-        contract the incremental artifact builders and the CDF feed
-        already rely on (the delta IS the net change this commit
-        applies — api._write's docstring); a caller whose merged plan
-        disagreed with its recorded delta was already corrupting every
-        downstream consumer.
-
-        Wholesale writes (delta=None — reset, initial bulk load — or a
+        Wholesale writes (delta=None: reset, initial bulk load; or a
         flat/differently-bucketed previous generation, a corpus that
-        outgrew its bucket sizing (see __init__), or a GC race on the
-        previous directory) write the merged ``df``: bucketed when a
-        delta chain could extend this commit (delta given), flat
-        otherwise. The bucket count is self-sized from the previous
-        generation's bytes unless the caller pinned one. A bucketed result that materialized ZERO parquet
-        files (a partitioned write of an empty table writes no files
-        and the generation would be unreadable) falls back to the flat
-        empty write. Readers never see the physical bucket column
+        outgrew its bucket sizing (see __init__), a null id or a
+        null-bucket directory, or a GC race on the previous directory)
+        write the merged ``df``: bucketed when a delta chain could
+        extend this commit (delta given), flat otherwise. The bucket
+        count is self-sized from the previous generation's bytes unless
+        the caller pinned one. A bucketed result with ZERO parquet
+        files (the commit emptied the table; a partitioned directory
+        without files is unreadable) falls back to the flat empty
+        write. Readers never see the physical bucket column
         (_read_version drops it)."""
         import math
-        import shutil as _shutil
 
-        from local_vectordb_spark.operators.incremental import link_tree
+        from local_vectordb_spark.operators.incremental import (
+            rewrite_partitions,
+        )
 
         d = self._table_dir(kind)
         prev_dir = os.path.join(d, f"v{base}")
@@ -1010,24 +1025,32 @@ class VectorDB:
                 8192, math.ceil(nbytes / self.data_bucket_target_bytes)
             ))
 
+        def _sealed() -> bool:
+            # a bucketed write that left no parquet file emptied the
+            # table: drop it for the flat empty write
+            if any(n.endswith(".parquet")
+                   for _r, _d, names in os.walk(stage) for n in names):
+                with open(os.path.join(stage, "_BUCKETS"), "w") as f:
+                    f.write(str(B))
+                return True
+            shutil.rmtree(stage, ignore_errors=True)
+            return False
+
         # resolve this commit's bucket count and whether the previous
         # layout can be extended incrementally (see __init__ for the
         # sizing policy)
-        prev_bytes = None
         if self.data_buckets is not None:
             B = self.data_buckets
             extend = prev_b is not None and prev_b == B
         elif prev_b is not None:
             prev_bytes = _dir_parquet_bytes(prev_dir)
             if prev_bytes > 4 * self.data_bucket_target_bytes * prev_b:
-                # outgrown layout: one wholesale re-layout at the new B.
-                # UNLESS the sizing resolves to the SAME count (the
-                # 8192 cap, reached at ~1 TiB per defaults): a
-                # re-layout that cannot change B would repeat on every
-                # subsequent commit — a permanent full-corpus rewrite,
-                # exactly the cost this path exists to remove (r17
-                # ADVICE, medium). Keep extending at the cap instead;
-                # oversized buckets are the capped trade, not a loop.
+                # outgrown layout: one wholesale re-layout at the new
+                # B, unless the sizing resolves to the SAME count (the
+                # 8192 cap, reached at ~1 TiB per defaults): such a
+                # re-layout would repeat on every later commit, a
+                # permanent full-corpus rewrite. Keep extending at the
+                # cap; oversized buckets are the capped trade.
                 B = _auto_b(prev_bytes)
                 extend = B == prev_b
             else:
@@ -1045,65 +1068,31 @@ class VectorDB:
             try:
                 changed = ups.select("id").unionByName(
                     rem.select("id")).distinct()
-                touched = [
-                    r.b for r in changed.select(
-                        F.pmod(F.xxhash64("id"), F.lit(B)).alias("b")
-                    ).distinct().collect()
-                ]
-                prev_names = os.listdir(prev_dir)
-                # a null id in the delta hashes to a null bucket, and a
-                # generation holding null-id rows carries a
+                touched = {
+                    r.b for r in changed.select(bucket_of.alias("b"))
+                    .distinct().collect()
+                }
+                # a null id hashes to a null bucket, and a generation
+                # holding null-id rows carries a
                 # bucket=__HIVE_DEFAULT_PARTITION__ dir: neither fits
-                # the numeric touched-set arithmetic (int() on that dir
-                # name aborted the whole commit pre-r18 — r17 ADVICE,
-                # low). Wholesale handles nulls like any other value,
-                # so route both cases there.
-                numeric = all(b is not None for b in touched) and all(
+                # the integer partition arithmetic, and the wholesale
+                # write handles nulls like any other value
+                numeric = None not in touched and all(
                     n.split("=", 1)[1].lstrip("-").isdigit()
-                    for n in prev_names if n.startswith("bucket=")
+                    for n in os.listdir(prev_dir) if n.startswith("bucket=")
                 )
                 if numeric:
-                    prev = self.spark.read.parquet(prev_dir)
                     cols = [f.name for f in SCHEMAS[kind].fields]
-                    rewritten = (
-                        prev.filter(F.col("bucket").isin(touched))
-                        .drop("bucket")
-                        .join(F.broadcast(changed), "id", "left_anti")
-                        .unionByName(ups.select(*cols))
-                        .withColumn("bucket", bucket_of)
+                    rewrite_partitions(
+                        prev_dir, stage, "bucket", touched, changed,
+                        ups.select(*cols).withColumn("bucket", bucket_of),
                     )
-                    # one shuffle ON the bucket key before the
-                    # partitioned write: every bucket lands in exactly
-                    # one task, so the generation carries ONE file per
-                    # bucket instead of (tasks × buckets) — bounded
-                    # file counts under maintenance is as much a 100 TB
-                    # property as bounded bytes (the shuffle is
-                    # churn-sized here)
-                    rewritten.repartition("bucket").write.mode(
-                        "overwrite").partitionBy("bucket").parquet(stage)
-                    for name in prev_names:
-                        if (name.startswith("bucket=")
-                                and int(name.split("=", 1)[1])
-                                not in touched):
-                            link_tree(os.path.join(prev_dir, name),
-                                      os.path.join(stage, name))
-                    if any(n.endswith(".parquet")
-                           for _r, _dd, names in os.walk(stage)
-                           for n in names):
-                        with open(
-                            os.path.join(stage, "_BUCKETS"), "w"
-                        ) as f:
-                            f.write(str(B))
+                    if _sealed():
                         return
-                    # the commit emptied the table (every bucket
-                    # touched, zero rows left): a partitioned dir with
-                    # no files is unreadable — take the flat empty
-                    # write below
-                    _shutil.rmtree(stage, ignore_errors=True)
             except (FileNotFoundError, AnalysisException):
                 # lost prev to a concurrent GC / unreadable layout:
                 # fall through to the wholesale write below
-                _shutil.rmtree(stage, ignore_errors=True)
+                shutil.rmtree(stage, ignore_errors=True)
 
         if delta is not None:
             # wholesale but BUCKETED: this is the layout-upgrade (or
@@ -1112,15 +1101,8 @@ class VectorDB:
             df.withColumn("bucket", bucket_of).repartition(
                 "bucket").write.mode("overwrite").partitionBy(
                 "bucket").parquet(stage)
-            has_files = any(
-                n.endswith(".parquet")
-                for _r, _d, names in os.walk(stage) for n in names
-            )
-            if has_files:
-                with open(os.path.join(stage, "_BUCKETS"), "w") as f:
-                    f.write(str(B))
+            if _sealed():
                 return
-            _shutil.rmtree(stage, ignore_errors=True)  # empty table
 
         df.write.mode("overwrite").parquet(stage)
 
@@ -1671,15 +1653,14 @@ class VectorDB:
         return self._ivf_for(self._current_version("chunks"))
 
     def _ivf_for(self, disk_v: int):
-        """(centroids, assignments) of generation ``disk_v`` — the one
-        IVF lookup every ivf form makes, so probes always come from
-        the generation being scanned: the in-memory memo when it was
-        built for ``disk_v``, else the persisted `_ivf_v{N}` (built at
-        most once per version across processes), else, on a
-        never-written store, an in-memory build. The memo is keyed on
-        the ON-DISK version and follows the newest generation served:
-        a commit by another instance or process moves the key, and a
-        historical pin does not evict the live index.
+        """(centroids, assignments) of written generation ``disk_v``:
+        the one IVF lookup every ivf form makes, so probes always come
+        from the generation being scanned. The in-memory memo when it
+        was built for ``disk_v``, else the persisted `_ivf_v{N}` (built
+        at most once per version across processes). The memo is keyed
+        on the ON-DISK version and follows the newest generation
+        served: a commit by another instance or process moves the key,
+        and a historical pin does not evict the live index.
 
         Always built from the UNFILTERED chunks table: a metadata
         filter applies to the candidate set only (ivf_search's semi
@@ -1692,34 +1673,66 @@ class VectorDB:
         directories (tests/test_plans.py pins PartitionFilters)."""
         if self._ivf is not None and self._ivf_version == disk_v:
             return self._ivf
-        if disk_v >= 0:
-            index = self._ivf_stored(disk_v)
-        else:  # never-written store: nothing to train or persist
-            index = ivf.ivf_build(
-                self.spark.createDataFrame([], SCHEMAS["chunks"]),
-                n_clusters=2, id_col="id",
-            )[1:]
+        index = self._ivf_stored(disk_v)
         if self._ivf is None or disk_v > self._ivf_version:
             self._ivf, self._ivf_version = index, disk_v
         return index
 
-    def _incremental_base(self, kind: str, version: int, prefix: str):
+    def _artifact_dir(self, prefix: str, version: int) -> str:
+        """Directory of stored index artifact ``prefix`` (one of
+        ARTIFACTS) for chunks generation ``version``."""
+        return os.path.join(self._table_dir("chunks"), f"_{prefix}_v{version}")
+
+    def _stored_artifact(self, prefix: str, version: int, incremental,
+                         full) -> str:
+        """Build artifact ``_{prefix}_v{version}`` at most once per
+        generation across processes (materialize_once) and return its
+        directory.
+
+        Incremental first: when a retained earlier artifact plus a
+        complete delta chain exists (_incremental_base),
+        ``incremental(p, version, w, steps)`` extends it at delta cost
+        and returns True. It returns False to decline (no drift ledger,
+        drift budget spent, oversized delta, count invariant tripped);
+        a FileNotFoundError or AnalysisException means the base lost
+        the race to the retention GC mid-read, or is an older layout.
+        Either way its partial output is removed and ``full(p)`` builds
+        from the pinned `v{version}` snapshot, so a concurrent commit
+        can't mislabel the artifact. The `_SUCCESS` seal is written
+        here, after whichever build ran."""
+        from local_vectordb_spark.session import materialize_once
+
+        def _build(p: str) -> None:
+            inc = self._incremental_base(version, prefix)
+            try:
+                done = inc is not None and incremental(p, version, *inc)
+            except (FileNotFoundError, AnalysisException):
+                done = False
+            if not done:
+                shutil.rmtree(p, ignore_errors=True)
+                full(p)
+            with open(os.path.join(p, "_SUCCESS"), "w"):
+                pass
+
+        return materialize_once(self._artifact_dir(prefix, version), _build)
+
+    def _incremental_base(self, version: int, prefix: str):
         """Find the newest retained artifact generation the build for
         ``version`` can extend incrementally: a complete
         ``_{prefix}_v{w}`` with ``w < version`` such that EVERY commit
         in (w, version] recorded its delta. Returns ``(w, steps)``
         with ``steps`` the ordered [(upserts, removes), ...] chain, or
-        None — in which case the caller does a full build (a missing
-        link, e.g. a reset or a pre-r13 commit, breaks the chain
-        loudly-by-construction rather than risking a wrong artifact).
-        """
-        d = self._table_dir(kind)
+        None, in which case the caller does a full build (a missing
+        link, e.g. a reset or a bulk write, breaks the chain rather
+        than risking a wrong artifact)."""
+        d = self._table_dir("chunks")
         cands = sorted(
             (
-                int(m.group(1))
+                int(m.group(2))
                 for e in os.listdir(d)
-                if (m := re.match(rf"_{prefix}_v(\d+)$", e))
-                and int(m.group(1)) < version
+                if (m := _ARTIFACT_DIR.match(e))
+                and m.group(1) == prefix
+                and int(m.group(2)) < version
                 and os.path.exists(os.path.join(d, e, "_SUCCESS"))
             ),
             reverse=True,
@@ -1729,11 +1742,10 @@ class VectorDB:
             for i in range(w + 1, version + 1):
                 dd = os.path.join(d, f"v{i}", "_delta")
                 if not os.path.exists(os.path.join(dd, "_OK")):
-                    # A commit with no delta record inside (w, version]
-                    # is inside (w', version] for EVERY older w' < w —
-                    # all remaining candidates are provably broken too,
-                    # so retrying them only re-stats the same missing
-                    # paths (r13 ADVICE). Full build, immediately.
+                    # a commit with no delta record inside (w, version]
+                    # is inside (w', version] for EVERY older w' < w:
+                    # every remaining candidate is broken too, so full
+                    # build immediately
                     return None
                 try:
                     steps.append(
@@ -1748,10 +1760,9 @@ class VectorDB:
                     )
                 except AnalysisException:
                     # lost the delta to the retention GC between the
-                    # marker check and the read — a RACE, not a proof:
-                    # keep the candidate loop (unlike the missing-_OK
-                    # case above, the filesystem is moving under us and
-                    # the cheap next iteration re-checks the marker)
+                    # marker check and the read: a RACE, not a proof,
+                    # so keep the candidate loop (the next iteration
+                    # re-checks the marker)
                     steps = None
                     break
             if steps:
@@ -1760,160 +1771,116 @@ class VectorDB:
 
     def _sign_build_incremental(
         self, p: str, version: int, w: int, steps
-    ) -> None:
-        """Incremental `_sign_v{version}` from `_sign_v{w}` + the
-        delta chain (r13): rewrite ONLY the bucket directories the net
-        delta touches (read partition-pruned from the previous layout,
-        minus touched ids, plus the upserted rows), and HARD-LINK
-        every untouched bucket's files from the previous artifact.
-        Produces the exact row set the full build would — buckets are
-        pure expressions of the vectors — at delta-plus-affected-
-        buckets cost instead of a corpus shuffle. With 16 buckets the
-        fixture-scale saving is modest; the shape is what matters: the
-        IVF twin below applies it across √n-thousands of cells."""
-        from local_vectordb_spark.operators.incremental import (
-            compose_delta_chain,
-            link_tree,
-        )
+    ) -> bool:
+        """Extend `_sign_v{w}` through the delta chain into
+        `_sign_v{version}` (rewrite_partitions): only the sign buckets
+        the net delta's old and new rows fall in are rewritten; every
+        other bucket is hard-linked. The row set equals the full
+        build's, because the bucket and the SQ8 triple are pure
+        expressions of the vector, so rewritten buckets carry the same
+        columns the linked ones hold. A previous layout without the SQ8
+        columns raises AnalysisException in the rewrite, and the full
+        build upgrades it. Returns True."""
+        import json as _json
 
         from local_vectordb_spark.functions import vector as V
+        from local_vectordb_spark.operators.incremental import (
+            compose_delta_chain,
+            rewrite_partitions,
+        )
 
         ups, olds = compose_delta_chain(steps, key_col="id")
         bucket = ivf.sign_bucket("embedding", n_bits=4).alias("bucket")
-        # the SQ8 triple is a pure expression of the vector, so the
-        # incrementally-rewritten buckets carry the same columns the
-        # linked ones already hold; a PRE-sq8 previous layout (no
-        # codes column) fails the `kept` select below with
-        # AnalysisException, which the caller catches — the full
-        # build upgrades the layout
-        ups_b = V.sq8_attach(ups.select("id", "embedding", bucket))
-        olds_b = olds.select("id", "embedding", bucket)
-        affected = {
+        rows = V.sq8_attach(ups.select("id", "embedding", bucket))
+        touched = {
             r.bucket
-            for r in ups_b.select("bucket")
-            .unionByName(olds_b.select("bucket"))
+            for r in rows.select("bucket")
+            .unionByName(olds.select(bucket))
             .distinct()
             .collect()
         }
-        prev_root = os.path.join(self._table_dir("chunks"), f"_sign_v{w}")
-        prev = os.path.join(prev_root, "layout")
-        layout = os.path.join(p, "layout")
-        # carry the previous layout's sub width (r18): a rewritten
-        # bucket must keep the SAME physical shape as the linked ones —
-        # partition discovery requires one schema across the tree. The
-        # sub column is a pure id expression, so recomputed values
-        # match the linked directories'. (Width upgrades land on the
-        # next FULL build; extension never re-layouts — same rule as
-        # the data snapshot's pinned-B mode.)
+        prev = self._artifact_dir("sign", w)
+        # carry the previous layout's sub width: a rewritten bucket
+        # must keep the physical shape of the linked ones (partition
+        # discovery requires one schema across the tree), and the sub
+        # column is a pure id expression, so recomputed values match
+        # the linked directories'. A width change waits for the next
+        # full build; extension never re-layouts.
         try:
-            with open(os.path.join(prev_root, "_SUBS")) as f:
+            with open(os.path.join(prev, "_SUBS")) as f:
                 S = max(1, int(f.read().strip()))
         except (OSError, ValueError):
             S = 1
-        if affected:
-            touched = (
-                ups.select("id").unionByName(olds.select("id")).distinct()
-            )
-            kept = (
-                self.spark.read.parquet(prev)
-                .filter(F.col("bucket").isin(sorted(affected)))
-                .join(touched, "id", "left_anti")
-                .select(
-                    "id", "embedding", "bucket", "vmin", "vmax", "codes"
-                )
-            )
-            out = kept.unionByName(ups_b)
-            if S > 1:
-                (
-                    out.withColumn(
-                        "sub", F.pmod(F.xxhash64("id"), F.lit(S))
-                    )
-                    .repartition("bucket", "sub")
-                    .write.mode("overwrite")
-                    .partitionBy("bucket", "sub")
-                    .parquet(layout)
-                )
-            else:
-                out.write.mode("overwrite").partitionBy(
-                    "bucket"
-                ).parquet(layout)
-        else:  # net-empty chain: every bucket carries over untouched
-            os.makedirs(layout, exist_ok=True)
+        part_cols = ("bucket",)
+        if S > 1:
+            rows = rows.withColumn("sub", F.pmod(F.xxhash64("id"), F.lit(S)))
+            part_cols = ("bucket", "sub")
+        rewrite_partitions(
+            os.path.join(prev, "layout"), os.path.join(p, "layout"),
+            "bucket", touched,
+            ups.select("id").unionByName(olds.select("id")).distinct(),
+            rows, part_cols,
+        )
         if S > 1:
             with open(os.path.join(p, "_SUBS"), "w") as f:
                 f.write(str(S))
-        for name in os.listdir(prev):
-            if (
-                name.startswith("bucket=")
-                and int(name.split("=", 1)[1]) not in affected
-            ):
-                link_tree(
-                    os.path.join(prev, name), os.path.join(layout, name)
-                )
-        # provenance: which base this artifact extends and how much of
-        # it was rewritten — the operational record that says "this
-        # generation's index cost ∝ delta" (and the loud gate the
-        # incremental registry entry checks, so a silent full-rebuild
-        # fallback can never masquerade as the maintained path)
-        import json as _json
-
+        # provenance: the base this artifact extends and how much of it
+        # was rewritten, so a silent full-rebuild fallback can never
+        # pass for the maintained path (the incremental registry entry
+        # gates on it)
         with open(os.path.join(p, "provenance.json"), "w") as f:
             _json.dump(
                 {
                     "base_version": w,
                     "chain_commits": len(steps),
-                    "buckets_rewritten": sorted(affected),
+                    "buckets_rewritten": sorted(touched),
                 },
                 f,
             )
-        with open(os.path.join(p, "_SUCCESS"), "w"):
-            pass
+        return True
 
     def _ivf_build_incremental(
         self, p: str, version: int, w: int, steps
     ) -> bool:
-        """Incremental `_ivf_v{version}` from `_ivf_v{w}` + the delta
-        chain (r13): FREEZE the trained centroids (and their supercell
-        level — centroids unchanged means the coarse quantizer carries
-        over verbatim), assign only the net-upserted rows to cells
-        (``ivf.assign_cells`` — |delta|·k flops, no KMeans fit),
-        rewrite only the affected cell directories, hard-link the
-        rest. Cumulative drift is tracked in centroids.json; past
-        ``IVF_RETRAIN_FRACTION`` of the trained corpus size this
-        returns False and the caller retrains from scratch (frozen
-        cells only describe data that mostly IS the trained data).
-        A row-count invariant (prev − removes + upserts) guards the
-        one silent failure mode — a removed row whose recomputed cell
-        missed its stored partition — by falling back to a full build
-        rather than shipping a stale row. At 100 TB this is the write
-        path's difference between per-commit index cost ∝ corpus
-        (KMeans fit + full shuffle) and ∝ delta + touched cells."""
+        """Extend `_ivf_v{w}` through the delta chain into
+        `_ivf_v{version}`: FREEZE the trained centroids (and their
+        supercell level: unchanged centroids mean the coarse quantizer
+        carries over verbatim), assign only the net-upserted rows to
+        cells (``ivf.assign_cells``: |delta|·k flops, no KMeans fit),
+        and rewrite only the affected cells (rewrite_partitions).
+        Cumulative drift is tracked in centroids.json; past the drift
+        budget (_within_drift_budget) this returns False and the caller
+        retrains from scratch, because frozen cells only describe data
+        that mostly IS the trained data. A row-count invariant
+        (prev − removes + upserts) guards the one silent failure mode,
+        a removed row whose recomputed cell missed its stored
+        partition, by returning False rather than shipping a stale
+        row."""
         import json as _json
 
         from local_vectordb_spark.operators.incremental import (
             compose_delta_chain,
-            link_tree,
+            rewrite_partitions,
         )
 
-        prev_dir = os.path.join(self._table_dir("chunks"), f"_ivf_v{w}")
+        prev_dir = self._artifact_dir("ivf", w)
         with open(os.path.join(prev_dir, "centroids.json")) as f:
             data = _json.load(f)
         if not isinstance(data, dict) or "n_at_train" not in data:
-            return False  # pre-r13 artifact: no drift ledger to extend
+            return False  # a flat-list artifact has no drift ledger
         ups, olds = compose_delta_chain(steps, key_col="id")
         # materialize the delta-sized frames once: counted here, then
         # reused for assignment + the anti-join
         ups = ups.select("id", "embedding").localCheckpoint(eager=True)
         olds = olds.select("id", "embedding").localCheckpoint(eager=True)
         n_ups, n_olds = ups.count(), olds.count()
-        if data["drift"] + n_ups + n_olds > IVF_RETRAIN_FRACTION * data[
-            "n_at_train"
-        ]:
+        drift = data["drift"] + n_ups + n_olds
+        if not _within_drift_budget(drift, data["n_at_train"]):
             return False
         cells = data["cells"]
         new_asg = ivf.assign_cells(ups, cells, id_col="id", vec_col="embedding")
         old_asg = ivf.assign_cells(olds, cells, id_col="id", vec_col="embedding")
-        affected = {
+        touched = {
             r.cluster_id
             for r in new_asg.select("cluster_id")
             .unionByName(old_asg.select("cluster_id"))
@@ -1921,140 +1888,81 @@ class VectorDB:
             .collect()
         }
         prev_asg = os.path.join(prev_dir, "assignments")
-        # the count invariant below guards exactly one failure mode: a
+        # the count invariant guards exactly one failure mode: a
         # REMOVED row whose recomputed cell missed its stored
         # partition. An add-only delta has no removals (add() rejects
-        # duplicate ids, update() always pairs old+new), so the two
-        # corpus-footer count jobs are skipped for it — the common
-        # append-mostly write pattern pays delta cost only.
+        # duplicate ids, update() always pairs old+new), so it skips
+        # the two corpus-footer count jobs and pays delta cost only.
         prev_count = (
             self.spark.read.parquet(prev_asg).count() if n_olds else None
         )
         out_dir = os.path.join(p, "assignments")
-        if affected:
-            touched = (
-                ups.select("id").unionByName(olds.select("id")).distinct()
-            )
-            # the layout carries embeddings (r18): kept rows keep
-            # theirs from the previous artifact; upserts take theirs
-            # from the delta. A pre-r18 artifact (no embedding column)
-            # fails this select with AnalysisException and the caller
-            # upgrades via full rebuild.
-            kept = (
-                self.spark.read.parquet(prev_asg)
-                .filter(F.col("cluster_id").isin(sorted(affected)))
-                .join(touched, "id", "left_anti")
-                .select("id", "embedding", "cluster_id")
-            )
-            ups_rows = new_asg.join(ups, "id").select(
-                "id", "embedding", "cluster_id"
-            )
-            kept.unionByName(ups_rows).write.mode(
-                "overwrite"
-            ).partitionBy("cluster_id").parquet(out_dir)
-        else:
-            os.makedirs(out_dir, exist_ok=True)
-        for name in os.listdir(prev_asg):
-            if (
-                name.startswith("cluster_id=")
-                and int(name.split("=", 1)[1]) not in affected
-            ):
-                link_tree(
-                    os.path.join(prev_asg, name), os.path.join(out_dir, name)
-                )
+        # the cells carry embeddings: kept rows keep theirs from the
+        # previous artifact, upserts take theirs from the delta; an
+        # artifact without the embedding column raises
+        # AnalysisException and the full build upgrades it
+        rewrite_partitions(
+            prev_asg, out_dir, "cluster_id", touched,
+            ups.select("id").unionByName(olds.select("id")).distinct(),
+            new_asg.join(ups, "id").select("id", "embedding", "cluster_id"),
+        )
         if prev_count is not None:
             got = self.spark.read.parquet(out_dir).count()
             if got != prev_count - n_olds + n_ups:
-                # the only way here is a stored assignment that
-                # disagrees with the recomputed one (an exact-tie
-                # broken differently by MLlib's approximate
-                # fast-distance path) — vanishingly rare, but a stale
-                # row in an index is a silent wrong answer, so: loud
-                # fallback, never ship it
+                # a stored assignment disagrees with the recomputed one
+                # (an exact tie broken differently by MLlib's
+                # approximate fast-distance path): vanishingly rare,
+                # but a stale row in an index is a silent wrong answer
                 return False
-        meta = dict(data)
-        meta["drift"] = data["drift"] + n_ups + n_olds
         with open(os.path.join(p, "centroids.json"), "w") as f:
-            _json.dump(meta, f)
-        # provenance, like the sign builder: the operational record
-        # that this generation's index cost ∝ delta + touched cells
+            _json.dump({**data, "drift": drift}, f)
         with open(os.path.join(p, "provenance.json"), "w") as f:
             _json.dump(
                 {
                     "base_version": w,
                     "chain_commits": len(steps),
-                    "cells_rewritten": sorted(affected),
+                    "cells_rewritten": sorted(touched),
                     "cells_total": len(cells),
                 },
                 f,
             )
-        with open(os.path.join(p, "_SUCCESS"), "w"):
-            pass
         return True
 
     def _ivf_stored(self, version: int):
-        """PERSISTED IVF index (r10): centroids (json) + assignments
+        """PERSISTED IVF index: centroids (json) + assignments
         (parquet) live beside the table data as `_ivf_v{version}` and
         are built AT MOST ONCE PER TABLE VERSION across every process
-        sharing the store — train-once/serve-many, where the in-memory
-        cache alone retrained KMeans per process per version (at 100 TB
-        an index build is a batch job, never a per-reader side effect).
-        Built from the pinned `v{version}` snapshot, not the live
-        pointer, so a concurrent commit can't mislabel the artifact;
-        materialize_once makes concurrent builders race-safe; GC rides
-        the table-version GC in _write."""
+        sharing the store (train-once/serve-many; at 100 TB an index
+        build is a batch job, never a per-reader side effect). Built
+        by _stored_artifact; GC rides the table-version GC in _write."""
         import json as _json
 
-        from local_vectordb_spark.session import materialize_once
-
-        path = os.path.join(self._table_dir("chunks"), f"_ivf_v{version}")
-
-        def _build(p: str) -> None:
+        def _full(p: str) -> None:
             import math as _math
-            import shutil as _shutil
-
-            # INCREMENTAL first (r13): previous artifact + complete
-            # delta chain → frozen-centroid maintenance at delta cost.
-            # Falls through to the full build when no base exists, the
-            # drift budget is spent, the count invariant trips, or the
-            # previous artifact loses the race to the retention GC
-            # mid-read (the only two exception types that race throws).
-            inc = self._incremental_base("chunks", version, "ivf")
-            if inc is not None:
-                try:
-                    if self._ivf_build_incremental(p, version, *inc):
-                        return
-                except (FileNotFoundError, AnalysisException):
-                    pass
-                _shutil.rmtree(p, ignore_errors=True)
 
             chunks = self.table("chunks", version=version)
             n = chunks.count()
-            # √n cells (r10 verdict #5 — the classic IVF shape; SURVEY
-            # X3's k=100 reference point lands at n=10k): per-probe
-            # candidate work scales as n/√n = √n instead of n/16, the
-            # difference between an index and a 1/16th-corpus scan at
-            # millions of rows. Bounded by n//4 so tiny fixtures keep
-            # >1-member cells, and by 4096 cells — the bound is the
-            # KMeans TRAIN cost (every iteration scans its input × k
-            # centroids), which ivf_build's sampled fit relieves past
-            # TRAIN_SAMPLE_MAX rows; routing past the flat regime is
-            # handled by the two-level coarse quantizer below (r11
-            # verdict #6), so the cap marks where cells get coarser
-            # than √n, not where the index stops working.
+            # √n cells (the classic IVF shape; SURVEY X3's k=100
+            # reference point lands at n=10k): per-probe candidate work
+            # scales as n/√n = √n instead of n/16. Bounded by n//4 so
+            # tiny fixtures keep >1-member cells, and by 4096 cells:
+            # the bound is the KMeans TRAIN cost (every iteration scans
+            # its input × k centroids), which ivf_build's sampled fit
+            # relieves past TRAIN_SAMPLE_MAX rows; routing past the
+            # flat regime is the two-level coarse quantizer's job, so
+            # the cap marks where cells get coarser than √n, not where
+            # the index stops working.
             k_clusters = max(2, min(4096, int(_math.isqrt(n)), n // 4))
             _, cents, assigns = ivf.ivf_build(
                 chunks, n_clusters=k_clusters, id_col="id", n_rows=n
             )
-            # two-level coarse quantizer past the dispatch (r11 verdict
-            # #6): √k supercells trained over the k cell centroids
-            # (driver-side numpy — the input is index metadata, k×dim),
-            # persisted with the cells; probes then route
-            # supercell→cell in ~(√k + n_super·√k) flops instead of
-            # ranking all k cells per query, driver-side AND in the
-            # distributed batch probe. Below the dispatch the flat
-            # bare-list format is written unchanged (old artifacts and
-            # small stores read identically).
+            # two-level coarse quantizer past the dispatch: √k
+            # supercells trained over the k cell centroids (driver-side
+            # numpy; the input is index metadata, k×dim), persisted with
+            # the cells; probes then route supercell→cell in
+            # ~(√k + n_super·√k) flops instead of ranking all k cells
+            # per query, driver-side AND in the distributed batch
+            # probe. Below the dispatch the flat format is written.
             if k_clusters >= IVF_TWO_LEVEL_MIN_CELLS:
                 supers, c2s = ivf.train_supercells(
                     cents, n_super=max(2, int(_math.isqrt(k_clusters)))
@@ -2065,41 +1973,37 @@ class VectorDB:
                 }
             else:
                 cents = {"cells": cents}
-            # drift ledger (r13): a FULL build is a fresh train — the
+            # drift ledger: a FULL build is a fresh train; the
             # incremental path extends it until the cumulative
-            # upsert+remove volume crosses IVF_RETRAIN_FRACTION of
-            # this n, then the next build lands back here
+            # upsert+remove volume spends the drift budget, then the
+            # next build lands back here
             cents["n_at_train"] = n
             cents["drift"] = 0
             # PARTITION the stored assignments by cell: ivf_search's
             # probe filter (cluster_id isin [...]) then prunes whole
-            # directories at the scan — a probe reads n_probe/k of the
-            # index FILES, not a full scan filtered row-by-row (the
-            # plan-level difference between an index and a table;
-            # pinned by tests/test_plans.py). The EMBEDDING rides in
-            # the cell partitions (r18, the sign layout's r11 move
-            # applied to the trained tier): without it every search
-            # semi-joined the full base table for candidate vectors —
-            # a corpus-wide fat-column scan per query; with it the
-            # probed cells' embedding bytes come partition-pruned from
-            # the artifact and the base contributes only its id set.
-            # Storage = one more hard-link-maintained corpus copy,
-            # the same trade `_sign_v{N}` made.
+            # directories at the scan, so a probe reads n_probe/k of
+            # the index FILES (pinned by tests/test_plans.py). The
+            # EMBEDDING rides in the cell partitions, so the probed
+            # cells' embedding bytes come partition-pruned from the
+            # artifact and the base table contributes only its id set
+            # (no corpus-wide fat-column scan per query). Storage = one
+            # more hard-link-maintained corpus copy, the same trade
+            # `_sign_v{N}` makes.
             assigns = assigns.join(chunks.select("id", "embedding"), "id")
             assigns.write.mode("overwrite").partitionBy("cluster_id").parquet(
                 os.path.join(p, "assignments")
             )
             with open(os.path.join(p, "centroids.json"), "w") as f:
                 _json.dump(cents, f)
-            with open(os.path.join(p, "_SUCCESS"), "w"):
-                pass
 
-        materialize_once(path, _build)
+        path = self._stored_artifact(
+            "ivf", version, self._ivf_build_incremental, _full
+        )
         with open(os.path.join(path, "centroids.json")) as f:
             data = _json.load(f)
         # dict with supercells = the two-level format; dict without =
-        # the flat regime carrying the r13 drift ledger; bare list =
-        # every pre-r13 flat artifact — all three stay readable forever
+        # the flat regime carrying the drift ledger; bare list = a flat
+        # artifact from before the ledger; all three stay readable
         if isinstance(data, dict) and "supercells" in data:
             centroids = ivf.TwoLevelCentroids(
                 data["cells"], data["supercells"], data["cell_to_super"]
@@ -2113,9 +2017,9 @@ class VectorDB:
 
     def _sign_subs(self, version: int) -> int:
         """Self-sized id-hash sub-partition count for the stored sign
-        layout (r17 verdict #7): ceil(generation bytes / 16 sign
-        buckets / data_bucket_target_bytes), clamped to [1, 4096].
-        Floor 1 = the pre-r18 flat-bucket layout, so every
+        layout: ceil(generation bytes / 16 sign buckets /
+        data_bucket_target_bytes), clamped to [1, 4096]. Floor 1 = the
+        flat-bucket layout, so every
         fixture-scale store (and its oracles and pinned plans) is
         byte-identical; a corpus whose per-sign-bucket slice outgrows
         one task split gets task-shaped leaves instead."""
@@ -2127,67 +2031,41 @@ class VectorDB:
         )))
 
     def _sign_stored(self, version: int) -> DataFrame:
-        """PERSISTED sign-bucket layout (r11): (id, embedding) written
+        """PERSISTED sign-bucket layout: (id, embedding) written
         hive-partitioned by the 4-bit sign bucket as `_sign_v{version}`
-        beside the table data — the physical form that turns the sign
+        beside the table data, the physical form that turns the sign
         strategy's probe from a full-table row filter into PARTITION
         PRUNING (the scan reads ~(n_bits+1)/2^n_bits of the FILES; the
         plan shows PartitionFilters, pinned in tests/test_plans.py).
         This is the layout the `auto` strategy serves past
         AUTO_BRUTE_MAX, i.e. the 100 TB default path. Same contract as
-        the other stored artifacts: built at most once per table
-        version across processes (materialize_once), pinned to the
+        the other stored artifacts (_stored_artifact): built at most
+        once per table version across processes, pinned to the
         `v{version}` snapshot, GC'd with its version."""
-        from local_vectordb_spark.session import materialize_once
+        from local_vectordb_spark.functions import vector as V
 
-        path = os.path.join(self._table_dir("chunks"), f"_sign_v{version}")
-
-        def _build(p: str) -> None:
-            import shutil as _shutil
-
-            # INCREMENTAL first (r13): previous layout + complete
-            # delta chain → rewrite only the touched buckets and
-            # hard-link the rest; identical row set to the full build
-            # (buckets are pure vector expressions). Falls through on
-            # a broken chain or on losing the previous artifact to the
-            # retention GC mid-build.
-            inc = self._incremental_base("chunks", version, "sign")
-            if inc is not None:
-                try:
-                    self._sign_build_incremental(p, version, *inc)
-                    return
-                except (FileNotFoundError, AnalysisException):
-                    _shutil.rmtree(p, ignore_errors=True)
-
-            from local_vectordb_spark.functions import vector as V
-
-            chunks = self.table("chunks", version=version)
-            # the SQ8 column triple rides in the SAME layout files
-            # (r18): parquet is columnar, so the sign tier's
-            # (id, embedding) scans never touch the code columns and
-            # the sq8 tier's (id, codes, vmin, vmax) scans never touch
-            # the fp column — one artifact, column pruning picks the
-            # bytes. Storage cost ~0.31x of the fp32 column (measured
-            # at XL); no second
-            # build/GC/bundle/incremental machinery.
+        def _full(p: str) -> None:
+            # the SQ8 column triple rides in the SAME layout files:
+            # parquet is columnar, so the sign tier's (id, embedding)
+            # scans never touch the code columns and the sq8 tier's
+            # (id, codes, vmin, vmax) scans never touch the fp column.
+            # One artifact, column pruning picks the bytes; storage
+            # cost ~0.31x of the fp32 column (measured at XL).
             sel = V.sq8_attach(
-                chunks.select(
+                self.table("chunks", version=version).select(
                     "id",
                     "embedding",
                     ivf.sign_bucket("embedding", n_bits=4).alias("bucket"),
                 )
             )
-            # r18 (r17 verdict #7): the SAME self-sizing policy the
-            # data snapshot uses, applied to the artifact layout. The
-            # 16 sign buckets are SEMANTIC (4 sign bits — more would
-            # change the probe set and every oracle), so the scale
-            # lever is a physical id-hash SUB-partition under each
-            # sign bucket: one (bucket, sub) leaf ≈ one task-sized
-            # split. At 100 TB a flat 16-bucket layout is ~6 TB per
-            # partition directory; with subs the probe still prunes
-            # on `bucket` (top-level dirs) and each pruned read is
-            # task-shaped. S resolves to 1 at fixture scale — the
-            # pre-r18 layout and plans, byte-identical.
+            # the data snapshot's self-sizing policy, applied to the
+            # artifact layout. The 16 sign buckets are SEMANTIC (4 sign
+            # bits; more would change the probe set and every oracle),
+            # so the scale lever is a physical id-hash SUB-partition
+            # under each sign bucket: one (bucket, sub) leaf ≈ one
+            # task-sized split. The probe still prunes on `bucket`
+            # (top-level dirs) and each pruned read is task-shaped.
+            # S resolves to 1 at fixture scale: flat buckets.
             S = self._sign_subs(version)
             if S > 1:
                 (
@@ -2195,8 +2073,7 @@ class VectorDB:
                         "sub", F.pmod(F.xxhash64("id"), F.lit(S))
                     )
                     # one shuffle on the leaf key: one file per
-                    # (bucket, sub), bounded file counts (same
-                    # rationale as _write_data's repartition)
+                    # (bucket, sub), bounded file counts
                     .repartition("bucket", "sub")
                     .write.mode("overwrite")
                     .partitionBy("bucket", "sub")
@@ -2208,56 +2085,36 @@ class VectorDB:
                 sel.write.mode("overwrite").partitionBy("bucket").parquet(
                     os.path.join(p, "layout")
                 )
-            with open(os.path.join(p, "_SUCCESS"), "w"):
-                pass
 
-        materialize_once(path, _build)
-        # the physical sub column (when present) is layout, not data —
+        path = self._stored_artifact(
+            "sign", version, self._sign_build_incremental, _full
+        )
+        # the physical sub column (when present) is layout, not data:
         # consumers see the same (id, embedding, bucket) frame at any S
         return self._cached_parquet(
             os.path.join(path, "layout")
         ).drop("sub")
 
     def _graph_stored(self, version: int) -> DataFrame:
-        """PERSISTED kNN graph for the nsw strategy (r10): (src, dst,
-        score) edges live beside the table data as `_nsw_v{version}`,
-        built at most once per table version across processes, so each
-        nsw search pays ONLY the fixed-hop beam traversal. The graph
-        the reference persists on its collection
-        (src/models/collection.py:251), as a shared stored artifact
-        instead of per-process state. SIZE-DISPATCHED build (r10
-        verdict #1): up to NSW_EXACT_BUILD_MAX rows the exact
+        """PERSISTED kNN graph for the nsw strategy: (src, dst, score)
+        edges live beside the table data as `_nsw_v{version}`, built at
+        most once per table version across processes
+        (_stored_artifact), so each nsw search pays ONLY the fixed-hop
+        beam traversal. The graph the reference persists on its
+        collection (src/models/collection.py:251), as a shared stored
+        artifact instead of per-process state. SIZE-DISPATCHED full
+        build: up to NSW_EXACT_BUILD_MAX rows the exact
         id-type-agnostic batch form (the corpus as its own query table
-        through knn.knn_batch_table — one scan against the broadcast
+        through knn.knn_batch_table: one scan against the broadcast
         query matrix, O(n²) scoring, uuid string ids); PAST the knee
         the LSH-bucketed graph tier (ann.knn_graph_lsh via
-        _lsh_graph_edges — sub-all-pairs candidate generation, the
-        form measured at 22.6 s vs 1564 s for exact at 200k vectors,
+        _lsh_graph_edges: sub-all-pairs candidate generation, measured
+        at 22.6 s vs 1564 s for exact at 200k vectors,
         BENCH_scale.json). Rides the same retention GC as the table
         versions."""
         import json as _json
 
-        from local_vectordb_spark.session import materialize_once
-
-        path = os.path.join(self._table_dir("chunks"), f"_nsw_v{version}")
-
-        def _build(p: str) -> None:
-            import shutil as _shutil
-
-            # INCREMENTAL first (r13): previous graph + complete delta
-            # chain → per-delta kNN insertion with bidirectional edges,
-            # no corpus-wide graph build. Falls through on a broken
-            # chain, a spent drift budget, an oversized delta, or
-            # losing the previous artifact to the retention GC.
-            inc = self._incremental_base("chunks", version, "nsw")
-            if inc is not None:
-                try:
-                    if self._nsw_build_incremental(p, version, *inc):
-                        return
-                except (FileNotFoundError, AnalysisException):
-                    pass
-                _shutil.rmtree(p, ignore_errors=True)
-
+        def _full(p: str) -> None:
             chunks = self.table("chunks", version=version)
             n = chunks.count()
             if n > NSW_EXACT_BUILD_MAX:
@@ -2280,30 +2137,28 @@ class VectorDB:
                     [], "src string, dst string, score double"
                 )
             edges.write.mode("overwrite").parquet(os.path.join(p, "edges"))
-            # build ledger (r13): a full build is the fresh-graph
-            # datum the incremental inserter extends until drift
-            # (cumulative churn) spends IVF_RETRAIN_FRACTION of it
+            # build ledger: a full build is the fresh-graph datum the
+            # incremental inserter extends until the drift budget is
+            # spent
             with open(os.path.join(p, "meta.json"), "w") as f:
                 _json.dump({"n_at_build": n, "drift": 0}, f)
-            with open(os.path.join(p, "_SUCCESS"), "w"):
-                pass
 
-        materialize_once(path, _build)
-        return self._nsw_edges_df(path)
+        return self._nsw_edges_df(self._stored_artifact(
+            "nsw", version, self._nsw_build_incremental, _full
+        ))
 
     def _nsw_edges_df(self, p: str) -> DataFrame:
         """The stored graph's LOGICAL edge set. A full build writes one
         plain ``edges`` parquet and this is just its scan. An
-        INCREMENTAL artifact (r14) is LAYERED — ``edges`` hard-linked
+        INCREMENTAL artifact is LAYERED: ``edges`` hard-linked
         unchanged from the base generation, plus two delta-sized
-        parquets: ``tombstones`` (every id whose edges are dead) and
-        ``edges_add`` (the insertions) — so maintenance never rewrites
-        the corpus-sized edge set (the r13 materialized form rewrote
-        all ~1.6M kept edges to drop 160, measuring a 1.1× "speedup"
-        at XL). Composition = base ⊖ tombstoned-endpoints ∪ adds: two
-        BROADCAST anti-joins (tombstones are churn-sized, capped by the
-        20% drift budget that forces a true rebuild) folded into the
-        scan the traversal does anyway — the LSM/Iceberg delete-file
+        parquets, ``tombstones`` (every id whose edges are dead) and
+        ``edges_add`` (the insertions), so maintenance never rewrites
+        the corpus-sized edge set. Composition = base ⊖
+        tombstoned-endpoints ∪ adds: two BROADCAST anti-joins
+        (tombstones are churn-sized, capped by the 20% drift budget
+        that forces a true rebuild) folded into the scan the traversal
+        does anyway — the LSM/Iceberg delete-file
         pattern applied to a graph artifact."""
         edges = self._cached_parquet(os.path.join(p, "edges"))
         tomb = os.path.join(p, "tombstones")
@@ -2330,36 +2185,32 @@ class VectorDB:
     def _nsw_build_incremental(
         self, p: str, version: int, w: int, steps
     ) -> bool:
-        """Incremental `_nsw_v{version}` from `_nsw_v{w}` + the delta
-        chain (r13) — classic NSW insertion, batched: every edge
+        """Extend `_nsw_v{w}` through the delta chain into
+        `_nsw_v{version}`: classic NSW insertion, batched. Every edge
         touching a net-touched id is dead, each net-upserted row's kNN
         is computed against the pinned snapshot (ONE corpus scan
-        against the broadcast delta matrix — no LSH rebuild, no O(n²)),
+        against the broadcast delta matrix: no LSH rebuild, no O(n²)),
         and those edges insert BIDIRECTIONALLY (forward so the new
-        node can leave, reverse so walks from elsewhere can reach it —
+        node can leave, reverse so walks from elsewhere can reach it:
         the reference's nsw insert shape, src/models/nsw_index.py,
         done as set algebra instead of per-node mutation).
 
-        LAYERED since r14: the base ``edges`` parquet is HARD-LINKED
-        from the previous artifact, deletions are recorded as a
-        churn-sized ``tombstones`` id list and insertions as
-        ``edges_add``, both composed at read by _nsw_edges_df. The r13
-        form materialized the surviving edge set per maintenance —
-        anti-join, dedup and REWRITE of ~1.6M kept edges to drop 160,
-        which benched at only 1.1× the full LSH rebuild at 200k
-        vectors (BENCH_scale.json r13 row); writing the delta instead
-        makes maintenance cost ∝ churn, the same shape as the
-        sign/IVF tiers. Chained maintenance stays flat, not recursive:
-        the new layer re-links the SAME base edges and carries
-        cumulative tombstones ∪ touched and (adds ⊖ touched) ∪ new —
-        an id re-upserted later keeps exactly its newest edges. The
-        same drift ledger as the IVF tier forces a true rebuild past
-        IVF_RETRAIN_FRACTION cumulative churn, which also bounds the
-        tombstone/add layers (insertion keeps recall but slowly
-        densifies reached nodes; the rebuild re-balances degree and
-        re-compacts the layers). Deltas past NSW_EXACT_BUILD_MAX rows
-        fall back (their broadcast matrix stops being "small"; at that
-        size the LSH builder is the right tool anyway)."""
+        The artifact is LAYERED: the base ``edges`` parquet is
+        HARD-LINKED from the previous artifact, deletions are recorded
+        as a churn-sized ``tombstones`` id list and insertions as
+        ``edges_add``, both composed at read by _nsw_edges_df, so
+        maintenance cost is ∝ churn, never a rewrite of the kept edge
+        set. Chained maintenance stays flat, not recursive: the new
+        layer re-links the SAME base edges and carries cumulative
+        tombstones ∪ touched and (adds ⊖ touched) ∪ new, so an id
+        re-upserted later keeps exactly its newest edges. The drift
+        budget shared with the IVF tier (_within_drift_budget) forces
+        a true rebuild, which also bounds the tombstone/add layers
+        (insertion keeps recall but slowly densifies reached nodes;
+        the rebuild re-balances degree and re-compacts the layers).
+        Deltas past NSW_EXACT_BUILD_MAX rows return False (their
+        broadcast matrix stops being "small"; at that size the LSH
+        builder is the right tool anyway)."""
         import json as _json
 
         from local_vectordb_spark.operators.incremental import (
@@ -2367,21 +2218,20 @@ class VectorDB:
             link_tree,
         )
 
-        prev_dir = os.path.join(self._table_dir("chunks"), f"_nsw_v{w}")
+        prev_dir = self._artifact_dir("nsw", w)
         meta_path = os.path.join(prev_dir, "meta.json")
         if not os.path.exists(meta_path):
-            return False  # pre-r13 artifact: no ledger to extend
+            return False  # an artifact without a build ledger
         with open(meta_path) as f:
             meta = _json.load(f)
         ups, olds = compose_delta_chain(steps, key_col="id")
         ups = ups.select("id", "embedding").localCheckpoint(eager=True)
         olds = olds.select("id").localCheckpoint(eager=True)
         n_ups, n_olds = ups.count(), olds.count()
-        if n_ups > NSW_EXACT_BUILD_MAX:
-            return False
-        if meta["drift"] + n_ups + n_olds > IVF_RETRAIN_FRACTION * meta[
-            "n_at_build"
-        ]:
+        drift = meta["drift"] + n_ups + n_olds
+        if n_ups > NSW_EXACT_BUILD_MAX or not _within_drift_budget(
+            drift, meta["n_at_build"]
+        ):
             return False
 
         chunks = self.table("chunks", version=version)
@@ -2392,16 +2242,14 @@ class VectorDB:
                 F.col("id").alias("query_id"),
                 F.col("embedding").cast("array<double>").alias("qv"),
             )
-            # Insertion kNN at the FIDELITY OF THE TIER the full build
-            # would use (r14): below NSW_EXACT_BUILD_MAX the full build
-            # is the exact O(n²) form, so insertion scores the whole
+            # insertion kNN at the FIDELITY OF THE TIER the full build
+            # would use: below NSW_EXACT_BUILD_MAX the full build is
+            # the exact O(n²) form, so insertion scores the whole
             # corpus; past the knee the full build is LSH-approximate,
             # so insertion prunes candidates to each query's sign-probe
-            # buckets (Hamming≤1 = ~5/16 of rows) — exact within. The
-            # unpruned scan was the maintenance wall at XL: 24M scored
-            # pairs + their top-k window shuffle made "incremental"
-            # cost 1.1-1.2× of the LSH rebuild it replaces
-            # (BENCH_scale.json r13/r14 first measure).
+            # buckets (Hamming≤1 = ~5/16 of rows), exact within. An
+            # unpruned scan at that size costs as much as the LSH
+            # rebuild it replaces (BENCH_scale.json).
             if n > NSW_EXACT_BUILD_MAX:
                 topk = ivf.sign_search_batch_table(
                     chunks, qdf, k=min(8, n - 1) + 1, id_col="id"
@@ -2430,8 +2278,8 @@ class VectorDB:
         # cumulative layers: a layered previous artifact contributes
         # its own tombstones/adds (its base `edges` is the SAME files
         # this build re-links, so the algebra stays one level deep).
-        # Adds touching a NEWLY-touched id die with it — the new kNN
-        # edges replace them; a base edge needs no such filter because
+        # Adds touching a NEWLY-touched id die with it (the new kNN
+        # edges replace them); a base edge needs no such filter because
         # its endpoints, once tombstoned, stay tombstoned.
         prev_tomb_dir = os.path.join(prev_dir, "tombstones")
         if os.path.exists(os.path.join(prev_tomb_dir, "_SUCCESS")):
@@ -2459,13 +2307,7 @@ class VectorDB:
         adds.write.mode("overwrite").parquet(os.path.join(p, "edges_add"))
         link_tree(os.path.join(prev_dir, "edges"), os.path.join(p, "edges"))
         with open(os.path.join(p, "meta.json"), "w") as f:
-            _json.dump(
-                {
-                    "n_at_build": meta["n_at_build"],
-                    "drift": meta["drift"] + n_ups + n_olds,
-                },
-                f,
-            )
+            _json.dump({"n_at_build": meta["n_at_build"], "drift": drift}, f)
         with open(os.path.join(p, "provenance.json"), "w") as f:
             _json.dump(
                 {
@@ -2477,11 +2319,9 @@ class VectorDB:
                 },
                 f,
             )
-        with open(os.path.join(p, "_SUCCESS"), "w"):
-            pass
         return True
 
-    # ---------------- serving export (r16) ----------------
+    # ---------------- serving export ----------------
 
     def export_serving_bundle(
         self,
@@ -2541,25 +2381,24 @@ class VectorDB:
         hashes are byte-true.
 
         Scope: by default the bundle carries the ``chunks`` generation
-        only — the search artifact, whose hydration is self-contained
-        (r16 verdict, missing #4). ``siblings=True`` (r17 verdict #6)
-        additionally links the ``documents`` and ``libraries`` tables'
-        live generations (same hard-link + manifest discipline — they
-        are just more manifested files, so ``sync_bundle``'s triage and
-        ``open_serving_bundle``'s integrity gates cover them with no
-        new machinery), making the bundle a FULL offline read replica:
-        the bundle-served facade answers ``get``/``table`` for all
-        three kinds and runs hydration-with-join workloads with no
-        live store. The incremental cost is ~zero at scale — sibling
-        tables are corpus-metadata-sized next to the chunk corpus and
-        hard-linked like everything else (measured in
+        only: the search artifact, whose hydration is self-contained.
+        ``siblings=True`` additionally links the ``documents`` and
+        ``libraries`` tables' live generations (same hard-link +
+        manifest discipline — they are just more manifested files, so
+        ``sync_bundle``'s triage and ``open_serving_bundle``'s
+        integrity gates cover them with no new machinery), making the
+        bundle a FULL offline read replica: the bundle-served facade
+        answers ``get``/``table`` for all three kinds and runs
+        hydration-with-join workloads with no live store. The
+        incremental cost is ~zero at scale — sibling tables are
+        corpus-metadata-sized next to the chunk corpus and hard-linked
+        like everything else (measured in
         ``BENCH_scale.json`` ``export_bundle``). Siblings pin their
         LIVE generation at export time: the store has no cross-table
         transaction, so (chunks v, documents live, libraries live) is
         exactly the snapshot a reader of the live store sees at that
         moment; each pinned sibling version is recorded in the
         manifest and gated by its own ``_CURRENT`` on open."""
-        import hashlib
         import json as _json
 
         from local_vectordb_spark.operators.incremental import link_tree
@@ -2578,7 +2417,7 @@ class VectorDB:
         # exists-fallback and quietly degrade the zero-copy links into
         # byte copies while manifesting stale temp files — both fail
         # loudly instead; the caller removes the debris first. The
-        # guard runs BEFORE the artifact builds (r16 ADVICE, low): a
+        # guard runs BEFORE the artifact builds: a
         # dirty out_dir should refuse immediately, not after paying
         # the 80-second-at-XL build pass
         os.makedirs(out_dir, exist_ok=True)
@@ -2593,10 +2432,7 @@ class VectorDB:
         self._ivf_stored(v)
         self._graph_stored(v)
         artifacts = {
-            "data": f"v{v}",
-            "sign": f"_sign_v{v}",
-            "ivf": f"_ivf_v{v}",
-            "nsw": f"_nsw_v{v}",
+            "data": f"v{v}", **{a: f"_{a}_v{v}" for a in ARTIFACTS}
         }
         for name in artifacts.values():
             link_tree(os.path.join(d, name),
@@ -2627,33 +2463,25 @@ class VectorDB:
         # bundle's manifest: the reuse key is the INODE, not the path —
         # an incrementally-maintained artifact carries the same inode
         # under a new `_sign_v{N+1}/...` path. The device is part of
-        # the key (r16 ADVICE, low): inode numbers are only unique per
-        # filesystem, so a cross-device base (where link_tree fell
-        # back to copies and the new bundle allocated fresh inodes)
-        # must never alias a coincidental ino+size+mtime match into a
-        # stale sha256. Pre-dev manifests (no "dev" field) simply get
-        # no reuse — correct, just slower once.
+        # the key (_still_recorded), so a cross-device base, where
+        # link_tree fell back to copies, never aliases a coincidental
+        # ino+size+mtime match into a stale sha256; an older manifest
+        # without "dev" simply gets no reuse.
         known: dict[tuple[int, int], tuple[int, int, str]] = {}
         if base_bundle is not None:
             bm = os.path.join(base_bundle, "MANIFEST.json")
             if os.path.exists(bm):
                 with open(bm) as f:
                     for rel, info in _json.load(f)["files"].items():
-                        if "ino" in info and "dev" in info:
-                            full = os.path.join(base_bundle, rel)
-                            if os.path.exists(full):
-                                st = os.stat(full)
-                                # trust the recorded hash only while
-                                # the base file still IS that file
-                                if (st.st_ino == info["ino"]
-                                        and st.st_dev == info["dev"]
-                                        and st.st_size == info["bytes"]
-                                        and st.st_mtime_ns
-                                        == info["mtime_ns"]):
-                                    known[(info["dev"], info["ino"])] = (
-                                        info["bytes"], info["mtime_ns"],
-                                        info["sha256"],
-                                    )
+                        # trust the recorded hash only while the base
+                        # file still IS that file
+                        if _still_recorded(
+                            os.path.join(base_bundle, rel), info
+                        ):
+                            known[(info["dev"], info["ino"])] = (
+                                info["bytes"], info["mtime_ns"],
+                                info["sha256"],
+                            )
         files: dict[str, dict] = {}
         reused = hashed = 0
         for root, _dirs, names in os.walk(out_dir):
@@ -2667,11 +2495,7 @@ class VectorDB:
                     digest = prior[2]
                     reused += 1
                 else:
-                    h = hashlib.sha256()
-                    with open(full, "rb") as f:
-                        for block in iter(lambda: f.read(1 << 20), b""):
-                            h.update(block)
-                    digest = h.hexdigest()
+                    digest = _sha256(full)
                     hashed += 1
                 files[rel] = {"bytes": st.st_size, "sha256": digest,
                               "ino": st.st_ino, "dev": st.st_dev,
@@ -2695,8 +2519,8 @@ class VectorDB:
         manifest = {
             "kind": "chunks",
             "table_version": v,
-            # pinned sibling-table generations (r17 verdict #6); absent
-            # key = chunks-only bundle (pre-r18 manifests stay valid)
+            # pinned sibling-table generations; absent key =
+            # chunks-only bundle
             **({"siblings": sib_versions} if siblings else {}),
             "timeline": self.timeline_id(),
             "n_rows": self._chunk_count(version=v),
@@ -2770,6 +2594,31 @@ class VectorDB:
         )
 
 
+def _sha256(path: str) -> str:
+    """Hex sha256 of one file, read in 1 MiB blocks."""
+    import hashlib
+
+    h = hashlib.sha256()
+    with open(path, "rb") as f:
+        for block in iter(lambda: f.read(1 << 20), b""):
+            h.update(block)
+    return h.hexdigest()
+
+
+def _still_recorded(path: str, info: dict) -> bool:
+    """Whether ``path`` is still the file a bundle manifest entry
+    recorded: same (dev, ino, size, mtime_ns). Inode numbers are only
+    unique per filesystem, so the device is part of the identity; an
+    entry without dev/ino (an older manifest) never vouches."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return False
+    return "ino" in info and "dev" in info and (
+        st.st_dev, st.st_ino, st.st_size, st.st_mtime_ns
+    ) == (info["dev"], info["ino"], info["bytes"], info["mtime_ns"])
+
+
 def open_serving_bundle(
     spark: SparkSession, bundle_dir: str, *, verify_checksums: bool = False
 ) -> VectorDB:
@@ -2787,7 +2636,6 @@ def open_serving_bundle(
     strategy from the bundled artifacts with zero rebuilds; treat it
     as read-only — a write would advance the bundle past its
     manifest."""
-    import hashlib
     import json as _json
 
     mp = os.path.join(bundle_dir, "MANIFEST.json")
@@ -2797,7 +2645,7 @@ def open_serving_bundle(
     with open(mp) as f:
         manifest = _json.load(f)
     # _CURRENT is itself a manifested file: a bundle missing it is an
-    # integrity failure, not a raw FileNotFoundError (r16 ADVICE, low)
+    # integrity failure, not a raw FileNotFoundError
     try:
         with open(os.path.join(bundle_dir, "chunks", "_CURRENT")) as f:
             cur = int(f.read().strip())
@@ -2811,7 +2659,7 @@ def open_serving_bundle(
             f"bundle _CURRENT (v{cur}) disagrees with manifest "
             f"(v{manifest['table_version']})"
         )
-    # a multi-table bundle (r17 verdict #6) pins each sibling table's
+    # a multi-table bundle pins each sibling table's
     # generation the same way; a sibling recorded as never-written
     # (v-1) carries no directory and needs no gate
     for kind, sv in manifest.get("siblings", {}).items():
@@ -2831,8 +2679,8 @@ def open_serving_bundle(
                 f"manifest (v{sv})"
             )
     # the timeline identity is the bundle's provenance: cross-check
-    # its CONTENT against the manifest unconditionally (r16 ADVICE,
-    # low — the size gate alone passes any 32-byte substitution)
+    # its CONTENT against the manifest unconditionally (the size gate
+    # alone passes any 32-byte substitution)
     try:
         with open(os.path.join(bundle_dir, "_TIMELINE")) as f:
             tl = f.read().strip()
@@ -2856,20 +2704,15 @@ def open_serving_bundle(
                 f"bundle file {rel}: {size} bytes, manifest says "
                 f"{info['bytes']}"
             )
-        if verify_checksums:
-            h = hashlib.sha256()
-            with open(full, "rb") as f:
-                for block in iter(lambda: f.read(1 << 20), b""):
-                    h.update(block)
-            if h.hexdigest() != info["sha256"]:
-                raise ValueError(f"bundle file {rel}: checksum mismatch")
+        if verify_checksums and _sha256(full) != info["sha256"]:
+            raise ValueError(f"bundle file {rel}: checksum mismatch")
     return VectorDB(spark, bundle_dir)
 
 
 def sync_bundle(src_bundle: str, dst_bundle: str) -> dict:
     """Refresh a DEPLOYED serving bundle in place to match a newer
     export — the consumer-side twin of ``export_serving_bundle``'s
-    incremental checksum pass (r16 verdict #5), rsync-shaped: cost is
+    incremental checksum pass, rsync-shaped: cost is
     proportional to CHURN, never to corpus size.
 
     The sync is CONTENT-addressed, not path-addressed, because the
@@ -2940,15 +2783,7 @@ def sync_bundle(src_bundle: str, dst_bundle: str) -> dict:
         with open(prev) as f:
             prev_files = _json.load(f).get("files", {})
         for rel, info in prev_files.items():
-            if "ino" not in info or "dev" not in info:
-                continue  # pre-dev manifest: can't vouch, re-ship
-            full = os.path.join(dst_bundle, rel)
-            if not os.path.exists(full):
-                continue
-            st = os.stat(full)
-            if (st.st_ino == info["ino"] and st.st_dev == info["dev"]
-                    and st.st_size == info["bytes"]
-                    and st.st_mtime_ns == info["mtime_ns"]):
+            if _still_recorded(os.path.join(dst_bundle, rel), info):
                 trusted[rel] = info
                 by_sha.setdefault(info["sha256"], set()).add(rel)
 
@@ -2985,7 +2820,7 @@ def sync_bundle(src_bundle: str, dst_bundle: str) -> dict:
         # the trust base must stop vouching for it NOW — a stale donor
         # would relink the new bytes under the old sha, and the
         # restamped manifest would vouch for a hash the bytes don't
-        # match (r17 ADVICE, medium)
+        # match
         old = trusted.pop(rel, None)
         if old is not None:
             s = by_sha.get(old["sha256"])

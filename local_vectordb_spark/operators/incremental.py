@@ -1,34 +1,27 @@
-"""Delta-chain composition and file-level artifact reuse — the
-machinery behind INCREMENTAL index maintenance (r13).
+"""Delta-chain composition and file-level artifact reuse: the
+machinery behind incremental maintenance of the versioned store.
 
-The versioned store commits a full copy-on-write snapshot per write
-generation, and every index artifact (`_ivf/_nsw/_sign_v{N}`) was
-rebuilt from a full corpus scan of its generation. But the write path
-KNOWS its delta exactly — `add` knows the accepted rows, `delete`
-knows the removed rows, `update` knows both sides — so since r13 each
-commit records that delta beside the snapshot (``v{N}/_delta``:
+Every commit records its delta beside the snapshot (``v{N}/_delta``:
 ``upserts`` = the new full rows, ``removes`` = the displaced old full
 rows), the row-level analogue of a Delta-Lake/Iceberg transaction
-log's add/remove file actions. An artifact build for generation N
-that finds an artifact for an earlier retained generation w plus a
-complete delta chain w+1..N can then do maintenance work proportional
-to the DELTA and the partitions it touches, instead of to the corpus:
+log's add/remove file actions. A write generation, or an index
+artifact built for generation N from an artifact of an earlier
+retained generation w plus a complete delta chain w+1..N, then costs
+work proportional to the DELTA and the partitions it touches, not to
+the corpus:
 
-- compose the chain into (final upserted rows, displaced old rows) —
-  pure delta-sized DataFrame algebra, :func:`compose_delta_chain`;
-- rewrite only the partition directories (sign buckets / IVF cells)
-  those rows live in;
-- HARD-LINK every untouched partition's files from the previous
-  artifact (:func:`link_tree`) — file-level reuse, the filesystem
-  form of Iceberg's unchanged-data-file manifest reuse; on an object
-  store this is a metadata copy either way.
+- :func:`compose_delta_chain` folds the chain into (final upserted
+  rows, displaced old rows), pure delta-sized DataFrame algebra;
+- :func:`rewrite_partitions` rewrites only the partition directories
+  (data buckets, sign buckets, IVF cells) those rows live in and
+  hard-links every untouched one from the previous directory
+  (:func:`link_tree`): the filesystem form of Iceberg's
+  unchanged-data-file manifest reuse; on an object store this is a
+  metadata copy either way.
 
-At 100 TB this is the difference between "a 1k-row write costs a
-KMeans retrain plus a full corpus shuffle before the next search" and
-"a 1k-row write costs a 1k-row assignment plus a handful of cell
-rewrites". The reference rebuilds every index from scratch on each
-mutation (src/models/collection.py:97-99,198 — the documented
-pessimization); this module is the opposite end of that axis.
+A 1k-row write therefore costs a 1k-row assignment plus a handful of
+partition rewrites, where the reference rebuilds every index from
+scratch on each mutation (src/models/collection.py:97-99,198).
 """
 
 from __future__ import annotations
@@ -123,6 +116,52 @@ def apply_changes(
     ).unionByName(
         feed.filter(F.col("change_type") == "upsert").select(*cols)
     )
+
+
+def rewrite_partitions(
+    prev_dir: str,
+    out_dir: str,
+    key: str,
+    touched,
+    changed_ids: DataFrame,
+    new_rows: DataFrame,
+    part_cols: tuple[str, ...] = (),
+) -> None:
+    """Write the next generation of a directory hive-partitioned on the
+    integer column ``key``: rows = previous rows whose ``id`` is not in
+    ``changed_ids`` + ``new_rows``. Only the ``touched`` partition values are read (one
+    partition-pruned scan of ``prev_dir``), anti-joined against the
+    broadcast id set, unioned with ``new_rows`` and written to
+    ``out_dir``; every other ``key=`` directory is hard-linked. The
+    caller guarantees that every changed id's old and new row lives in
+    a touched partition.
+
+    ``new_rows`` fixes the column set, so a previous directory missing
+    one of its columns (an older layout) raises AnalysisException.
+    ``part_cols`` (default: ``key`` alone) are the written partition
+    columns, ``key`` first; a shuffle on them puts each rewritten leaf
+    in one task, so it holds one file. An empty ``touched`` writes
+    nothing and links everything."""
+    if touched:
+        cols = part_cols or (key,)
+        prev = new_rows.sparkSession.read.parquet(prev_dir)
+        (
+            prev.filter(F.col(key).isin(sorted(touched)))
+            .join(F.broadcast(changed_ids), "id", "left_anti")
+            .select(*new_rows.columns)
+            .unionByName(new_rows)
+            .repartition(*cols)
+            .write.mode("overwrite")
+            .partitionBy(*cols)
+            .parquet(out_dir)
+        )
+    else:
+        os.makedirs(out_dir, exist_ok=True)
+    for name in os.listdir(prev_dir):
+        k, _, val = name.partition("=")
+        if k == key and int(val) not in touched:
+            link_tree(os.path.join(prev_dir, name),
+                      os.path.join(out_dir, name))
 
 
 def link_tree(src: str, dst: str) -> None:

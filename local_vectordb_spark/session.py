@@ -51,15 +51,9 @@ def get_spark(app_name: str = "local_vectordb_spark") -> SparkSession:
         # ns→us truncation on read)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
-        # SPARK_GRAFT_UI=true flips the UI (and its REST API) on for
-        # profiling runs (tools/profile_query.py) so the profiler runs
-        # the EXACT benched configuration instead of hand-copying it
-        # (r18 ADVICE: a hand-copied builder silently drifts)
-        .config(
-            "spark.ui.enabled",
-            "true" if os.environ.get("SPARK_GRAFT_UI") == "true" else "false",
-        )
-        .config("spark.ui.port", os.environ.get("SPARK_GRAFT_UI_PORT", "4099"))
+        # job and stage counters come from the status store
+        # (tools/profile_query.py, perfbench), which needs no UI
+        .config("spark.ui.enabled", "false")
     )
     if not SparkSession.getActiveSession():
         builder = builder.master(f"local[{cpus}]")

@@ -123,6 +123,28 @@ def test_search_batch_each_strategy(db, index_type):
         assert top.score == pytest.approx(1.0, abs=1e-5)
 
 
+def test_every_strategy_answers_a_never_written_store_with_no_rows(
+    spark, tmp_path
+):
+    """A store nothing was ever written to has no rows to train an IVF
+    index or fit LSH on: every strategy, on every path it supports,
+    answers with an empty result instead of failing inside KMeans."""
+    d = VectorDB(spark, str(tmp_path / "never_written"))
+    for index_type in INDEX_TYPES:
+        assert d.search(QUESTIONS[4], index_type=index_type, k=3).count() == 0, (
+            index_type
+        )
+    queries = [(0, QUESTIONS[0]), (1, QUESTIONS[4])]
+    for index_type in BATCH_TYPES:
+        got = d.search_batch(queries, index_type=index_type, k=3)
+        assert got.count() == 0, index_type
+    for index_type in TABLE_TYPES:
+        got = d.search_batch(
+            queries, index_type=index_type, k=3, max_driver_queries=1
+        )
+        assert got.count() == 0, index_type
+
+
 def test_unknown_index_raises(db):
     d, *_ = db
     with pytest.raises(ValueError):

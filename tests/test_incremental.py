@@ -21,7 +21,10 @@ from pyspark.sql import functions as F
 import local_vectordb_spark.api as api_mod
 from local_vectordb_spark.api import VectorDB
 from local_vectordb_spark.operators import ivf
-from local_vectordb_spark.operators.incremental import compose_delta_chain
+from local_vectordb_spark.operators.incremental import (
+    compose_delta_chain,
+    rewrite_partitions,
+)
 from local_vectordb_spark.sources.json_records import SCHEMAS
 
 QUESTIONS = [
@@ -103,6 +106,60 @@ def test_compose_delta_chain_nets_out_intermediate_states(spark):
     assert got_old == {("a", 0.1), ("b", 0.2)}
     got_final2 = {r.id for r in final2.collect()}
     assert got_final2 == {"a", "c"}
+
+
+# ---------- rewrite_partitions (one maintained directory) ----------
+
+def _parquet_files(root):
+    return {
+        os.path.relpath(os.path.join(r, f), root): os.stat(
+            os.path.join(r, f)).st_nlink
+        for r, _d, fs in os.walk(root) for f in fs if f.endswith(".parquet")
+    }
+
+
+def test_rewrite_partitions_rewrites_touched_and_links_the_rest(
+    spark, tmp_path
+):
+    schema = "id string, v int, k int"
+    rows = [(f"r{i}", i, i % 4) for i in range(12)]
+    prev = str(tmp_path / "prev")
+    # several files per partition, so a one-file rewrite is visible
+    spark.createDataFrame(rows, schema).repartition(3).write.partitionBy(
+        "k").parquet(prev)
+    assert max(
+        len([f for f in os.listdir(os.path.join(prev, n))
+             if f.endswith(".parquet")])
+        for n in os.listdir(prev) if n.startswith("k=")
+    ) > 1
+
+    # r1 (k=1) updated, r2 (k=2) deleted, n0 added to k=1
+    changed = spark.createDataFrame([("r1",), ("r2",), ("n0",)], "id string")
+    new = spark.createDataFrame([("r1", 100, 1), ("n0", 7, 1)], schema)
+    out = str(tmp_path / "out")
+    rewrite_partitions(prev, out, "k", {1, 2}, changed, new)
+
+    got = {tuple(r) for r in spark.read.parquet(out).select(
+        "id", "v", "k").collect()}
+    assert got == {r for r in rows if r[0] not in ("r1", "r2")} | {
+        ("r1", 100, 1), ("n0", 7, 1)}
+    files = _parquet_files(out)
+    for part in ("k=0", "k=3"):
+        linked = {f: n for f, n in files.items() if f.startswith(part + "/")}
+        assert linked and all(n > 1 for n in linked.values()), part
+    for part in ("k=1", "k=2"):
+        rewritten = [f for f in files if f.startswith(part + "/")]
+        assert len(rewritten) == 1, part
+        assert files[rewritten[0]] == 1, part
+
+    # an empty touched set writes nothing and links everything
+    out2 = str(tmp_path / "out2")
+    rewrite_partitions(prev, out2, "k", set(), changed.limit(0), new.limit(0))
+    files2 = _parquet_files(out2)
+    assert set(files2) == set(_parquet_files(prev))
+    assert all(n > 1 for n in files2.values())
+    assert sorted(os.listdir(out2)) == sorted(
+        n for n in os.listdir(prev) if n.startswith("k="))
 
 
 # ---------- delta recording on the write path ----------

@@ -1,80 +1,57 @@
-"""Per-job/stage profile of one registry query (guide §1/§7: empirical loop).
+"""Per-job profile of one or more registry queries.
 
 Usage: python tools/profile_query.py <name> [<name> ...]
 
-Runs each query once warm (after one throwaway run), with the UI's REST
-API enabled, then prints every Spark job that executed during the timed
-run with its duration, stage count, and per-stage shuffle/task metrics.
-Shows where wall-clock goes when a query's cost is split across
-construction actions (counts, localCheckpoints) and the final noop sink.
+Runs each query once warm (after one throwaway run) under its own Spark
+job group, then prints every Spark job of the timed run with its
+duration, and the run's totals: jobs, stages, tasks, executor time,
+input and shuffle bytes, and the driver gap (wall time no job covered:
+planning, py4j round trips, driver-side work). The counters come from
+Spark's status store through ``perfbench.trace.Tracer``, so the UI stays
+off and the session is the benched one (``session.get_spark``).
+Set ``SPARK_GRAFT_SF_DIR`` to pick the fixture (default sf0.1).
 """
 
 from __future__ import annotations
 
-import json
 import os
 import sys
 import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-os.environ.setdefault("SPARK_GRAFT_UI", "true")
-
-
-def get_spark_ui(app_name: str):
-    # the benched configuration itself, UI flipped on via SPARK_GRAFT_UI
-    # (set above) — a hand-copied builder here would silently drift from
-    # session.get_spark when bench config changes (r18 ADVICE)
-    from local_vectordb_spark.session import get_spark
-
-    return get_spark(app_name)
-
-
-def rest(path: str):
-    with urllib.request.urlopen(f"http://localhost:4099/api/v1/{path}") as r:
-        return json.load(r)
-
 
 def main() -> None:
+    from __spark_entry__ import queries
+    from local_vectordb_spark.session import get_spark
+    from perfbench.trace import Tracer
+
     names = sys.argv[1:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = get_spark_ui("profile")
+    spark = get_spark("profile")
     spark.sparkContext.setLogLevel("ERROR")
-
-    from __spark_entry__ import queries
-
+    tracer = Tracer(spark.sparkContext)
     qs = queries()
-    app_id = spark.sparkContext.applicationId
     for name in names:
         fn = qs[name]
         # warm-up run (parquet footers, codegen, artifact caches)
         fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
-        before_jobs = {j["jobId"] for j in rest(f"applications/{app_id}/jobs")}
-        t0 = time.perf_counter()
-        fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
-        wall = time.perf_counter() - t0
-        jobs = [
-            j
-            for j in rest(f"applications/{app_id}/jobs")
-            if j["jobId"] not in before_jobs
-        ]
-        jobs.sort(key=lambda j: j["jobId"])
-        print(f"\n=== {name}: wall {wall:.3f}s, {len(jobs)} jobs ===")
-        tot = 0.0
-        for j in jobs:
-            t_sub = time.strptime(j["submissionTime"][:19], "%Y-%m-%dT%H:%M:%S")
-            t_fin = time.strptime(j["completionTime"][:19], "%Y-%m-%dT%H:%M:%S")
-            frac_sub = float(j["submissionTime"][20:23]) / 1000.0
-            frac_fin = float(j["completionTime"][20:23]) / 1000.0
-            dur = (time.mktime(t_fin) + frac_fin) - (time.mktime(t_sub) + frac_sub)
-            tot += dur
-            desc = (j.get("description") or j.get("name", ""))[:90]
-            print(
-                f"  job {j['jobId']:>4} {dur:7.3f}s stages={len(j['stageIds'])}"
-                f" tasks={j['numTasks']:>4}  {desc}"
-            )
-        print(f"  sum of job durations: {tot:.3f}s (gaps = driver/planning time)")
+        rid = tracer.new_request_id(name)
+        tracer.begin(rid, name)
+        t0 = time.time()
+        try:
+            fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
+        finally:
+            t1 = time.time()
+            tracer.end()
+        stats = tracer.group_stats(rid, rid, t0, t1)
+        print(f"\n=== {name}: wall {t1 - t0:.3f}s, {stats['jobs']} jobs ===")
+        for sp in tracer.spans:
+            if sp["request"] == rid:
+                print(f"  {sp['name']:>16} {sp['end'] - sp['start']:7.3f}s")
+        print("  " + " ".join(
+            f"{k}={v:.0f}" for k, v in stats.items() if k != "jobs"
+        ))
 
 
 if __name__ == "__main__":
