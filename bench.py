@@ -20,11 +20,11 @@ from __spark_entry__ import queries  # noqa: E402
 from local_vectordb_spark.session import get_spark  # noqa: E402
 
 # Queries representative of each operator family; extended as coverage
-# grows. r3 (verdict #4): the 100 TB-shaped plans are timed first-class —
-# both kNN-graph tiers (broadcast vs block-matrix) and both embedding
-# near-dup tiers (BLAS vs LSH-bucketed), plus as-of join, hash sampling,
-# sequence packing, streaming, and a wider TPC-H slice, so every operator
-# family has a timed representative.
+# grows. The 100 TB-shaped plans are timed first-class — the exact and
+# LSH-bucketed kNN-graph builds and both embedding near-dup tiers (BLAS
+# vs LSH-bucketed), plus as-of join, hash sampling, sequence packing,
+# streaming, and a wider TPC-H slice, so every operator family has a
+# timed representative.
 HEADLINE = [
     # vector search
     "knn_brute_force",
@@ -34,15 +34,8 @@ HEADLINE = [
     "knn_metadata_filter",
     "ivf_search",
     "ivf_sign_pruned",  # r5: oracle-exact partition-pruned search
-    "knn_graph",  # r6: default = block-matrix scale path (see queries.py)
-    # knn_graph_broadcast RETIRED from HEADLINE r16 (r15 verdict #2,
-    # the structural branch, per the graph_beam_search r12 precedent):
-    # the driver-collect broadcast utility is jitter-dominated under
-    # every timing protocol tried (warm spread 1.27-3.10 s on a quiet
-    # box; three conflicting reads across r14-r15) while its 100 TB
-    # family path is knn_graph/knn_graph_auto below, both stably
-    # in-band. Registry entry + full oracle unchanged.
-    "knn_graph_auto",  # r8: size-dispatched strategy (broadcast regime here)
+    "knn_graph",  # the exact top-k kernel's graph form
+    "knn_graph_auto",  # size-dispatched build (exact regime here)
     "knn_sq8",
     "knn_pq_adc",  # r6: product-quantization ADC tier, oracle-exact
     "ivf_pq_search",  # r6: partition-pruned + PQ-compressed composition
@@ -55,7 +48,7 @@ HEADLINE = [
     "knn_pq_trained",
     "knn_pq_batch",  # r7: one codes scan serving 8 queries
     "knn_pq_residual_batch_stored",  # r10: residual-coded batch over stored codes
-    "knn_graph_lsh",  # r7: bucket-local graph build (beats blocked at 10x)
+    "knn_graph_lsh",  # bucket-local graph build (beats the exact one at 10x)
     "ivf_pq_trained",  # r7: fully-trained FAISS-shaped composition
     "ivf_pq_residual",  # r8: residual-encoded IndexIVFPQ fidelity tier
     "graph_beam_search_lsh",  # r7: NSW with no quadratic stage anywhere

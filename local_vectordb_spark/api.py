@@ -100,15 +100,11 @@ AUTO_SQ8_MIN = 4_000_000
 # id list and the point read stay bounded driver/scan surfaces.
 SQ8_RERANK_DEPTH = 64
 
-# stored-graph build knee: up to this many rows the exact
-# corpus-as-its-own-query-table build (knn.knn_batch_table — one scan
-# against a broadcast query matrix, O(n²) scoring) is cheapest; past it
-# the build dispatches to the LSH-bucketed graph tier
-# (ann.knn_graph_lsh), which the repo's own scale measurements justify:
-# 22.6 s vs 1564 s for the exact build at 200k vectors
-# (BENCH_scale.json). 20k rows × 64-dim doubles ≈ 10 MB broadcast —
-# comfortably inside the regime; the "4× gap at 20k" measurement in
-# ann.graph_lsh_bits marks this as where the LSH form starts winning.
+# stored-graph build knee: up to this many rows the nsw graph is the
+# exact one, the corpus queried with itself through the exact top-k
+# kernel (knn.knn_batch_table, O(n²) flops); past it the build
+# dispatches to the LSH-bucketed graph tier (ann.knn_graph_lsh), whose
+# candidate generation is sub-all-pairs.
 NSW_EXACT_BUILD_MAX = 20_000
 
 # Stored-IVF two-level dispatch (r11 verdict #6): at this many KMeans
@@ -235,9 +231,9 @@ def _via_query_table(table_form):
 def _ivf_probe(s: _Scope, search_fn, queries) -> DataFrame:
     """Every ivf form: the centroids and assignments of the generation
     being scanned (``_ivf_for(disk_v)``), never of a head that moved
-    past it. A never-written store has nothing to train cells on: it
+    past it. A store with no rows has nothing to train cells on: it
     probes no cell and answers with no rows."""
-    if s.disk_v < 0:
+    if not s.db._has_rows(s.disk_v):
         centroids = []
         assignments = s.chunks.select(
             "id", "embedding", F.lit(0).alias("cluster_id")
@@ -370,19 +366,19 @@ def _nsw(s: _Scope) -> DataFrame:
     stay recall-safe at any corpus size. The default beam is 8 below
     NSW_BEAM_KNEE rows of the searched generation and 16 at/above; an
     explicit ``beam`` wins."""
-    if s.metadata is not None or s.disk_v < 0:
+    if s.metadata is not None or not s.db._has_rows(s.disk_v):
         # the stored graph indexes the UNFILTERED corpus: a traversal
         # over a filtered node set loses connectivity through excluded
-        # nodes, so a filtered (or never-written) search is an exact
+        # nodes, so a filtered (or empty) search is an exact
         # scan over the filtered candidates — the cosine shape. beam
         # and hops tune a traversal this path does not run, so
         # supplying them is an error, not a setting to drop.
         if s.beam is not None or s.hops is not None:
             raise ValueError(
                 "beam/hops tune the stored-graph nsw traversal, which "
-                "a metadata-filtered (or never-written) nsw search "
-                "does not use — it answers with an exact scan over "
-                "the filtered candidates; drop beam/hops here"
+                "a metadata-filtered (or never-written or emptied) "
+                "nsw search does not use — it answers with an exact "
+                "scan over the filtered candidates; drop beam/hops here"
             )
         return knn.knn_brute_force(s.chunks, s.qvec, k=s.k, id_col="id")
     from local_vectordb_spark.operators import ann
@@ -413,13 +409,13 @@ def _nsw_batch(s: _Scope, vecs) -> DataFrame:
     """LSH candidates pooled across the queries, then exact cosine per
     query over the pool (extra pool members can only improve a query's
     recall vs its own buckets). The pooling is per-query driver work,
-    so nsw has no table-batch form. A never-written store has nothing
+    so nsw has no table-batch form. A store with no rows has nothing
     to fit LSH on: the exact scan answers, with no rows."""
     from functools import reduce
 
     from local_vectordb_spark.operators.ann import lsh_search
 
-    if s.disk_v < 0:
+    if not s.db._has_rows(s.disk_v):
         return knn.knn_batch(s.chunks, vecs, k=s.k, id_col="id")
     pools = [
         lsh_search(s.chunks, qv, k=s.k, id_col="id").select("id")
@@ -1391,6 +1387,13 @@ class VectorDB:
             ).count()
         return self._count_cache[v]
 
+    def _has_rows(self, disk_v: int) -> bool:
+        """Whether generation ``disk_v`` has rows to build an index
+        artifact from. A never-written store (-1) and a generation
+        whose every row was deleted have none; their searches answer
+        from an exact scan of the empty ``chunks``, like cosine."""
+        return disk_v >= 0 and self._chunk_count(version=disk_v) > 0
+
     def _resolve(self, index_type: str, version: int | None):
         """(strategy name, disk_v) for one search or batch: the type and
         ``version`` checks, the ONE `_CURRENT` pointer read that pins
@@ -1460,7 +1463,7 @@ class VectorDB:
         ``beam``/``hops`` tune the nsw traversal (defaults: beam 8
         below NSW_BEAM_KNEE rows and 16 at/above, hops 3). They apply
         ONLY to the stored-graph path: an nsw search that carries a
-        metadata filter (or hits a never-written store) answers with
+        metadata filter (or hits a store with no rows) answers with
         an exact scan instead of a traversal, and supplying beam/hops
         there raises rather than silently doing nothing."""
         name, disk_v = self._resolve(index_type, version)
@@ -1524,13 +1527,13 @@ class VectorDB:
         call (``_embed_texts``, no Spark job for a pandas-UDF
         embedder) and the vectors close over the BLAS/probe kernels —
         the fastest shape for small batches. Larger sets take its
-        table-batch form: embedding runs distributed and scoring joins
-        a broadcast query table (knn.knn_batch_table /
-        ivf.ivf_search_batch_table, including a distributed centroid
-        probe) — no vectors route through the driver, but the query
-        TABLE still broadcasts to every executor, which bounds this
-        path at roughly the hundreds-of-thousands of queries that fit
-        a broadcast; past that, pre-shard the query set and loop.
+        table-batch form: embedding runs distributed and no vector
+        routes through the driver. Cosine scores blocks of the query
+        table against blocks of the corpus (knn.knn_batch_table); the
+        probed forms (ivf.ivf_search_batch_table, sign, sq8) join a
+        broadcast query table, which bounds them at roughly the
+        hundreds-of-thousands of queries that fit a broadcast; past
+        that, pre-shard the query set and loop.
         A strategy with no batch form (hybrid, pq) or no table form
         (nsw, whose pooled LSH candidates are per-query driver work)
         is refused before any embedding runs.
@@ -1601,14 +1604,14 @@ class VectorDB:
         instead of filtering rows; a metadata filter intersects it with
         a semi join against the filtered ``chunks`` ids, whose
         base-table side is an id+metadata column-pruned scan, so
-        embedding bytes are read only for probed partitions. A
-        never-written store — or, for ``sq8``, a layout generation
+        embedding bytes are read only for probed partitions. A store
+        with no rows at ``disk_v`` — or, for ``sq8``, a layout generation
         without the SQ8 code columns — derives the bucket from the real
         vector of the already-filtered ``chunks`` (and attaches the
         codes): same rows, no byte win."""
         from local_vectordb_spark.functions import vector as V
 
-        src = self._sign_stored(disk_v) if disk_v >= 0 else None
+        src = self._sign_stored(disk_v) if self._has_rows(disk_v) else None
         if src is None or sq8 and "codes" not in src.columns:
             src = (V.sq8_attach(chunks) if sq8 else chunks).withColumn(
                 "bucket", ivf.sign_bucket("embedding", n_bits=4)
@@ -2103,15 +2106,12 @@ class VectorDB:
         beam traversal. The graph the reference persists on its
         collection (src/models/collection.py:251), as a shared stored
         artifact instead of per-process state. SIZE-DISPATCHED full
-        build: up to NSW_EXACT_BUILD_MAX rows the exact
-        id-type-agnostic batch form (the corpus as its own query table
-        through knn.knn_batch_table: one scan against the broadcast
-        query matrix, O(n²) scoring, uuid string ids); PAST the knee
-        the LSH-bucketed graph tier (ann.knn_graph_lsh via
-        _lsh_graph_edges: sub-all-pairs candidate generation, measured
-        at 22.6 s vs 1564 s for exact at 200k vectors,
-        BENCH_scale.json). Rides the same retention GC as the table
-        versions."""
+        build: up to NSW_EXACT_BUILD_MAX rows each node's exact top
+        min(8, n-1)+1 neighbours INCLUDING itself through the exact
+        top-k kernel (knn.knn_batch_table, any id type), self then
+        dropped; past the knee the LSH-bucketed graph tier
+        (ann.knn_graph_lsh via _lsh_graph_edges). Rides the same
+        retention GC as the table versions."""
         import json as _json
 
         def _full(p: str) -> None:
@@ -2120,12 +2120,8 @@ class VectorDB:
             if n > NSW_EXACT_BUILD_MAX:
                 edges = self._lsh_graph_edges(chunks, n)
             elif n > 1:
-                qdf = chunks.select(
-                    F.col("id").alias("query_id"),
-                    F.col("embedding").cast("array<double>").alias("qv"),
-                )
                 topk = knn.knn_batch_table(
-                    chunks, qdf, k=min(8, n - 1) + 1, id_col="id"
+                    chunks, k=min(8, n - 1) + 1, id_col="id", n_rows=n
                 )
                 edges = topk.filter(F.col("query_id") != F.col("id")).select(
                     F.col("query_id").alias("src"),
@@ -2188,8 +2184,9 @@ class VectorDB:
         """Extend `_nsw_v{w}` through the delta chain into
         `_nsw_v{version}`: classic NSW insertion, batched. Every edge
         touching a net-touched id is dead, each net-upserted row's kNN
-        is computed against the pinned snapshot (ONE corpus scan
-        against the broadcast delta matrix: no LSH rebuild, no O(n²)),
+        is computed against the pinned snapshot (the exact top-k
+        kernel with the delta as its query table: O(delta × n), no
+        LSH rebuild),
         and those edges insert BIDIRECTIONALLY (forward so the new
         node can leave, reverse so walks from elsewhere can reach it:
         the reference's nsw insert shape, src/models/nsw_index.py,
@@ -2208,9 +2205,8 @@ class VectorDB:
         a true rebuild, which also bounds the tombstone/add layers
         (insertion keeps recall but slowly densifies reached nodes;
         the rebuild re-balances degree and re-compacts the layers).
-        Deltas past NSW_EXACT_BUILD_MAX rows return False (their
-        broadcast matrix stops being "small"; at that size the LSH
-        builder is the right tool anyway)."""
+        Deltas past NSW_EXACT_BUILD_MAX rows return False (at that
+        size a full build is the cheaper tool)."""
         import json as _json
 
         from local_vectordb_spark.operators.incremental import (
@@ -2256,7 +2252,7 @@ class VectorDB:
                 ).filter(F.col("query_id") != F.col("id"))
             else:
                 topk = knn.knn_batch_table(
-                    chunks, qdf, k=min(8, n - 1) + 1, id_col="id"
+                    chunks, qdf, k=min(8, n - 1) + 1, id_col="id", n_rows=n
                 ).filter(F.col("query_id") != F.col("id"))
             fwd = topk.select(
                 F.col("query_id").alias("src"),

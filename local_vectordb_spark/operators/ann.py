@@ -7,10 +7,11 @@ and §7 step 5): LSH for sublinear candidate generation, and the kNN
 *graph* itself as an edges DataFrame built by batch top-k — the same
 artifact NSW maintains incrementally, produced as one distributed job.
 
-- knn_graph (X6): every node's top-k neighbors via broadcast unit
-  matrix + per-batch BLAS top-k (argpartition, not full sort). The
-  reference builds this with O(n²) per-pair Python loops; here it is
-  O(n²/p) flops at memory bandwidth with no shuffle at all.
+- knn_graph (X6): every node's top-k other nodes through the one
+  exact top-k kernel (knn.knn_batch_table: blocked BLAS partial top-k,
+  one window merge), where the reference runs O(n²) per-pair Python
+  loops; knn_graph_auto switches to the LSH-bucketed build past
+  GRAPH_AUTO_BLOCKED_MAX rows.
 - graph_add / graph_remove (X7/X8): edge-set maintenance as
   union / filter — batch analogues of the reference's bidirectional
   insert (nsw_index.py:54-72) and discard (nsw_index.py:75-85).
@@ -21,7 +22,7 @@ artifact NSW maintains incrementally, produced as one distributed job.
 
 from __future__ import annotations
 
-from collections.abc import Iterator, Sequence
+from collections.abc import Sequence
 
 import numpy as np
 import pandas as pd
@@ -29,6 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
+from local_vectordb_spark.operators import knn
 from local_vectordb_spark.operators.knn import SCORE_DECIMALS
 
 SEED = 42
@@ -39,165 +41,26 @@ def knn_graph(
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
+    n_rows: int | None = None,
 ) -> DataFrame:
-    """X6 — cosine kNN graph as an edges DataFrame (src, dst, score).
-
-    Broadcast the unit-normalized corpus matrix; each Arrow batch does
-    one BLAS matmul and an O(n) argpartition top-k per row. Applicable
-    whenever the corpus fits executor memory (the map-side-join
-    regime); beyond that, `knn_graph_blocked` distributes the same
-    exact O(n²) flops, and `knn_graph_lsh` drops the quadratic term
-    entirely via bucket-local candidate generation.
-    """
-    spark = vectors.sparkSession
-    pdf = vectors.select(id_col, vec_col).toPandas()
-    ids = pdf[id_col].to_numpy(dtype=np.int64)
-    mat = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-    norms = np.linalg.norm(mat, axis=1, keepdims=True)
-    unit = mat / np.where(norms == 0.0, 1.0, norms)
-    # Pre-sort the broadcast corpus by id: a STABLE argsort on -score then
-    # breaks rounded-score ties by column position == id ascending, which
-    # vectorizes the whole (score desc, id asc) top-k — no per-row lexsort.
-    perm = np.argsort(ids)
-    bc = spark.sparkContext.broadcast((ids[perm], unit[perm]))
-
-    out_schema = StructType(
-        [
-            StructField("src", LongType()),
-            StructField("dst", LongType()),
-            StructField("score", DoubleType()),
-        ]
-    )
-
-    def topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        all_ids, all_unit = bc.value
-        for b in batches:
-            bids = b[id_col].to_numpy(dtype=np.int64)
-            bm = np.array(b[vec_col].tolist(), dtype=np.float64)
-            bn = np.linalg.norm(bm, axis=1, keepdims=True)
-            bu = bm / np.where(bn == 0.0, 1.0, bn)
-            scores = np.round(bu @ all_unit.T, SCORE_DECIMALS)
-            # mask self-edges
-            self_mask = bids[:, None] == all_ids[None, :]
-            scores[self_mask] = -np.inf
-            kk = min(k, scores.shape[1] - 1)
-            # (score desc, id asc) top-k in one vectorized stable argsort:
-            # rounded scores tie at the k boundary, and the pre-sorted-by-id
-            # columns make stable order == id ascending among ties.
-            order = np.argsort(-scores, axis=1, kind="stable")[:, :kk]
-            yield pd.DataFrame(
-                {
-                    "src": np.repeat(bids, kk),
-                    "dst": all_ids[order].ravel(),
-                    "score": np.take_along_axis(scores, order, axis=1).ravel(),
-                }
-            )
-
-    return vectors.select(id_col, vec_col).mapInPandas(topk, out_schema)
-
-
-def knn_graph_blocked(
-    vectors: DataFrame,
-    k: int = 5,
-    n_blocks: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """X6 at 100 TB — the same exact cosine kNN graph as `knn_graph`,
-    built WITHOUT collecting the corpus to the driver.
-
-    Block-matrix formulation: rows are hashed into `n_blocks` blocks;
-    every (block_i, block_j) pair becomes one applyInPandas group that
-    BLAS-scores its src rows against its dst rows and keeps a per-src
-    partial top-k; a global per-src window merge yields the exact
-    final top-k. Shuffle volume is 2·n_blocks·n rows (each row is
-    replicated once per opposing block) — bounded and tunable, while
-    the O(n²) flops run distributed at memory bandwidth. Pick
-    n_blocks so one block's matrix (n/n_blocks × dim doubles, twice)
-    fits comfortably in an executor task; at larger corpora raise
-    n_blocks quadratically with n.
-
-    Output is identical to `knn_graph` (same rounding, same
-    deterministic (score desc, id asc) tie order), so the two share an
-    oracle; this is the scale path, the broadcast variant the
-    small-corpus fast path.
-    """
-    from pyspark.sql import Window
-
-    out_schema = StructType(
-        [
-            StructField("src", LongType()),
-            StructField("dst", LongType()),
-            StructField("score", DoubleType()),
-        ]
-    )
-
-    base = vectors.select(
-        F.col(id_col).alias("_id"), F.col(vec_col).alias("_vec")
-    ).withColumn("_blk", F.pmod(F.xxhash64(F.col("_id")), F.lit(n_blocks)))
-    rng = F.explode(F.sequence(F.lit(0), F.lit(n_blocks - 1)))
-    srcs = base.select(
-        "_id", "_vec", F.col("_blk").alias("_bi"), rng.alias("_bj"),
-        F.lit(1).alias("_is_src"),
-    )
-    dsts = base.select(
-        "_id", "_vec", rng.alias("_bi"), F.col("_blk").alias("_bj"),
-        F.lit(0).alias("_is_src"),
-    )
-
-    def block_topk(pdf: pd.DataFrame) -> pd.DataFrame:
-        s = pdf[pdf["_is_src"] == 1]
-        d = pdf[pdf["_is_src"] == 0]
-        if s.empty or d.empty:
-            return pd.DataFrame({"src": [], "dst": [], "score": []}).astype(
-                {"src": np.int64, "dst": np.int64, "score": np.float64}
-            )
-        sid = s["_id"].to_numpy(dtype=np.int64)
-        did = d["_id"].to_numpy(dtype=np.int64)
-
-        def unit(rows):
-            m = np.array(rows["_vec"].tolist(), dtype=np.float64)
-            nrm = np.linalg.norm(m, axis=1, keepdims=True)
-            return m / np.where(nrm == 0.0, 1.0, nrm)
-
-        # sort dst columns by id so a stable argsort breaks ties id-asc
-        dperm = np.argsort(did)
-        did = did[dperm]
-        scores = np.round(unit(s) @ unit(d).T, SCORE_DECIMALS)[:, dperm]
-        scores[sid[:, None] == did[None, :]] = -np.inf  # self-edges
-        kk = min(k, scores.shape[1])
-        order = np.argsort(-scores, axis=1, kind="stable")[:, :kk]
-        vals = np.take_along_axis(scores, order, axis=1).ravel()
-        out = pd.DataFrame(
-            {
-                "src": np.repeat(sid, kk),
-                "dst": did[order].ravel(),
-                "score": vals,
-            }
-        )
-        return out[vals > -np.inf]
-
-    partial = (
-        srcs.unionByName(dsts)
-        .groupBy("_bi", "_bj")
-        .applyInPandas(block_topk, out_schema)
-    )
-    w = Window.partitionBy("src").orderBy(F.desc("score"), F.asc("dst"))
-    return (
-        partial.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .drop("_rn")
+    """X6 — exact cosine kNN graph as an edges DataFrame (src, dst,
+    score): each node's top-``k`` OTHER nodes in (score desc, dst asc)
+    order, the corpus queried with itself through the one exact top-k
+    kernel (knn.knn_batch_table, self pairs masked before ranking).
+    ``n_rows`` is the corpus row count when the caller holds it."""
+    return knn.knn_batch_table(
+        vectors, k=k, id_col=id_col, vec_col=vec_col, exclude_self=True,
+        n_rows=n_rows,
+    ).select(
+        F.col("query_id").alias("src"), F.col(id_col).alias("dst"), "score"
     )
 
 
-# regime bounds for knn_graph_auto, mirroring the builders' own
-# docstrings: below ~1e4 rows the corpus is driver-trivial and the
-# broadcast BLAS build's collect+matmul beats any shuffle; the blocked
-# build's exact O(n²) flops stay payable to ~1e5 (at 1e5×64d that is
-# 6.4e11 multiply-adds spread over blocks — seconds at memory
-# bandwidth); past that only the LSH-bucketed sub-all-pairs build
-# scales (its flops shrink quadratically in n_bits via graph_lsh_bits).
-GRAPH_AUTO_BROADCAST_MAX = 10_000
+# exact/approximate knee of knn_graph_auto: the exact graph's O(n²)
+# flops stay payable to ~1e5 rows (1e5×64d is 6.4e11 multiply-adds
+# spread over the kernel's blocks — seconds at memory bandwidth); past
+# it only the LSH-bucketed sub-all-pairs build scales (its flops shrink
+# quadratically in n_bits via graph_lsh_bits).
 GRAPH_AUTO_BLOCKED_MAX = 100_000
 
 
@@ -208,28 +71,20 @@ def knn_graph_auto(
     vec_col: str = "embedding",
     n_rows: int | None = None,
     dim: int | None = None,
-    broadcast_max: int = GRAPH_AUTO_BROADCAST_MAX,
     blocked_max: int = GRAPH_AUTO_BLOCKED_MAX,
 ) -> DataFrame:
-    """X6 with the physical strategy chosen by corpus size — the graph
-    analogue of the API layer's `max_driver_queries` batch-search
-    dispatch (r7 verdict #7): broadcast BLAS below ``broadcast_max``
-    rows, block-matrix exact build to ``blocked_max``, LSH-bucketed
-    sub-all-pairs beyond. The first two regimes emit the identical
-    exact graph (shared oracle); the third trades uniform-random edge
-    recall for the loss of the quadratic term — the only viable trade
-    once n² flops stop being payable. ``n_rows`` callers that already
-    know the count skip the sizing scan; n_blocks in the middle regime
-    scales with n so one block's matrix stays task-sized (the blocked
-    builder's own guidance)."""
+    """X6 with the build chosen by corpus size — the graph analogue of
+    the API layer's `max_driver_queries` batch-search dispatch: the
+    exact graph (`knn_graph`) up to ``blocked_max`` rows, the
+    LSH-bucketed sub-all-pairs build beyond, which trades
+    uniform-random edge recall for the loss of the quadratic term.
+    ``n_rows`` callers that already know the count skip the sizing
+    scan."""
     if n_rows is None:
         n_rows = vectors.count()
-    if n_rows <= broadcast_max:
-        return knn_graph(vectors, k=k, id_col=id_col, vec_col=vec_col)
     if n_rows <= blocked_max:
-        n_blocks = max(8, -(-n_rows // 12_500))
-        return knn_graph_blocked(
-            vectors, k=k, n_blocks=n_blocks, id_col=id_col, vec_col=vec_col
+        return knn_graph(
+            vectors, k=k, id_col=id_col, vec_col=vec_col, n_rows=n_rows
         )
     return knn_graph_lsh(
         vectors, k=k, id_col=id_col, vec_col=vec_col, n_rows=n_rows, dim=dim
@@ -255,7 +110,7 @@ def bfs_hops(
     spark = edges.sparkSession
     # materialize the edge list once: every round joins against it, and
     # without the barrier each round re-derives the FULL graph-build
-    # lineage (an O(n²/blocks) matmul when fed from knn_graph_blocked).
+    # lineage (an O(n²) matmul when fed from knn_graph).
     # Callers that already hold a materialized edge list pass
     # checkpoint_edges=False to skip the duplicate barrier job.
     if checkpoint_edges:
@@ -718,8 +573,6 @@ def lsh_search_md5_multi(
     """
     from pyspark.sql.types import BooleanType
 
-    from local_vectordb_spark.operators import knn
-
     dim = len(query_vec)
     tables = [
         md5_hyperplanes(dim, n_bits, table_seed(seed, t))
@@ -940,8 +793,6 @@ def lsh_search_md5(
     writes .../bucket=N/ and prunes directories); this logical form is
     the same plan minus the physical layout. Output: (id, score).
     """
-    from local_vectordb_spark.operators import knn
-
     dim = len(query_vec)
     planes = md5_hyperplanes(dim, n_bits, seed)
     probed = hyperplane_probe(query_vec, planes)

@@ -1,19 +1,23 @@
-"""Brute-force kNN search (SURVEY §2 ops Q1-Q3, Q6, Q8).
+"""Exact cosine kNN search (SURVEY §2 ops Q1-Q3, Q6, Q8).
 
 The reference's flat index scores a query against every stored vector
 in a Python loop, sorts, truncates
-(/root/reference/src/models/collection.py:294-335).  The Spark-first
-form is a declarative scan → score → ``ORDER BY .. LIMIT k``; Catalyst
-compiles that to ``TakeOrderedAndProject`` — a per-partition top-k heap
-merged on the driver — so a single query costs one pass over the data
-with no full sort and no shuffle of the scored rows.  At 100 TB that is
-the optimal physical plan for exact kNN: embarrassingly parallel map +
-O(k) merge.
+(/root/reference/src/models/collection.py:294-335).
 
-Batch search (many queries at once) is expressed as a broadcast
-cross-join + per-query window top-k: the query set is tiny relative to
-the corpus, so it broadcasts, and the corpus is scanned exactly once
-for all queries together.
+- One literal query (knn_brute_force, range_search, score_all) is a
+  declarative scan → score → ``ORDER BY .. LIMIT k``, which Catalyst
+  compiles to ``TakeOrderedAndProject``: a per-partition top-k heap
+  merged on the driver, one pass, no shuffle of scored rows.
+- A driver-side query list (knn_batch) closes its unit query matrix
+  over an Arrow pandas UDF: one BLAS matmul per corpus batch, one
+  per-query top-k window.
+- A query TABLE (knn_batch_table) is the one exact top-k kernel for
+  every table-shaped caller — the table-batch search, the kNN graph
+  and the nsw graph builds: blocked BLAS partial top-k per (query
+  block, corpus block) group, then one window merge.
+
+Every score is rounded to SCORE_DECIMALS, every order is (score desc,
+id asc), and a zero-norm vector scores 0.0.
 """
 
 from __future__ import annotations
@@ -23,9 +27,9 @@ from collections.abc import Sequence
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, DoubleType
+from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
 
 
 SCORE_DECIMALS = 6  # stable cross-engine comparison of double-precision scores
@@ -73,18 +77,13 @@ def score_all(
     scoring scan under brute-force kNN and graph traversal (lazy: only
     the rows a consumer touches are ever scored).
 
-    The whole score is ONE generated-SQL expr(): the Column form
-    (l2_norm + dot_product + when/otherwise) costs ~30 py4j
-    round-trips per construction, which at ~1 ms a round-trip was
-    most of a brute-force search's driver-side build time — and this
-    function runs once per search across the brute/range/rerank/beam
-    families. The string parses to the IDENTICAL tree (the norm
-    subtree is duplicated in the condition and the divisor exactly
-    like the Column form duplicated it), so every score is
-    bit-unchanged."""
+    The whole score is ONE generated-SQL expr(), so its construction is
+    one py4j call instead of ~30 for the Column form (l2_norm +
+    dot_product + when/otherwise); the string parses to the identical
+    tree, so every score is the Column form's. Non-finite query
+    components and backticks in the column name are spelled so the
+    string always parses as the intended expression."""
     def _d(x: float) -> str:
-        # repr has no SQL form for non-finite doubles (r18 ADVICE): a
-        # NaN/Inf query component must parse too, not raise
         if x != x:
             return "CAST('NaN' AS DOUBLE)"
         if x == float("inf"):
@@ -94,8 +93,6 @@ def score_all(
         return f"{x!r}D"
 
     qn = "array(" + ", ".join(_d(float(x)) for x in _unit(query_vec)) + ")"
-    # escape backticks so a hostile column name cannot break out of the
-    # quoted identifier (r18 ADVICE; all current callers pass plain names)
     v = f"CAST(`{vec_col.replace('`', '``')}` AS ARRAY<DOUBLE>)"
     fold = "0.0D, (acc, x) -> acc + x"
     norm = f"sqrt(aggregate(zip_with({v}, {v}, (x, y) -> x * y), {fold}))"
@@ -152,17 +149,7 @@ def knn_batch(
     over |queries|·|corpus| (id, score) pairs.  SURVEY §4: Arrow
     matmul replaces the reference's per-pair numpy loop.
 
-    Physical-strategy note (r6, measured at sf0.1 / 8 queries / 2000
-    vectors on PySpark 4.1.2): this Arrow path runs 0.43 s; re-
-    expressing the same scoring as pure JVM expressions (unit-query
-    literals exploded per row, aggregate dot product) runs 0.92 s —
-    higher-order-function evaluation is interpreted per element and
-    its plan ANALYSIS alone costs ~0.5 s with per-element literals —
-    and a broadcast-join form (`knn_batch_table`) runs 1.32 s at this
-    batch size.  BLAS-over-Arrow wins at every batch size, so there is
-    deliberately no JVM dispatch tier here; `knn_batch_table` exists
-    for the *unbounded* query-set regime where collecting queries to
-    the driver is the constraint, not per-batch latency.
+    Queries too many to collect take :func:`knn_batch_table`.
     """
     qids = [int(i) for i, _ in query_rows]
     qmat = np.array([_unit(v) for _, v in query_rows], dtype=np.float64).T
@@ -196,47 +183,149 @@ def knn_batch(
     )
 
 
+# rows of one side per (query block, corpus block) group of the exact
+# top-k kernel: a group's score matrix is at most this squared doubles
+# (8 MiB), each row is replicated once per block of the other side, and
+# a 2,000-row self-join already splits into 4 groups, one per core at
+# local[4] (2048 rows per block measured 1.5x slower there)
+ROWS_PER_BLOCK = 1024
+
+
+def _blocks(df: DataFrame, n_rows: int | None = None) -> int:
+    n = df.count() if n_rows is None else n_rows
+    return max(1, -(-n // ROWS_PER_BLOCK))
+
+
+def _unit_rows(vecs: pd.Series) -> tuple[np.ndarray, np.ndarray]:
+    """(unit-normalized float64 rows, NULL mask). A NULL row is a zero
+    row under the mask; a zero-norm row stays zero, so its every score
+    is 0.0 (the reference's zero-norm rule)."""
+    null = vecs.isna().to_numpy()
+    valid = vecs[~null].tolist()
+    m = np.zeros((len(vecs), len(valid[0]) if valid else 0))
+    if valid:
+        m[~null] = valid
+    norms = np.linalg.norm(m, axis=1, keepdims=True)
+    return m / np.where(norms == 0.0, 1.0, norms), null
+
+
 def knn_batch_table(
     vectors: DataFrame,
-    queries: DataFrame,
+    queries: DataFrame | None = None,
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
     query_vec_col: str = "qv",
+    exclude_self: bool = False,
+    n_rows: int | None = None,
 ) -> DataFrame:
-    """Top-k per query with the query set as a DATAFRAME — the
-    unbounded-cardinality twin of :func:`knn_batch`.
+    """Exact cosine top-k of every query row against ``vectors``, with
+    the query set as a DATAFRAME — the one exact top-k kernel under the
+    table-batch search, the kNN graph and the nsw graph builds. Output:
+    (query_id_col, id_col, score), ``score`` rounded to SCORE_DECIMALS,
+    at most ``k`` rows per query in (score desc, id asc) order. Ids of
+    either side may be of any orderable type (long, uuid string).
 
-    ``knn_batch`` closes its (collected) query matrix over a pandas
-    UDF, which is optimal for interactive batches but collects every
-    query embedding to the driver first — unbounded for pipeline-scale
-    query sets (millions of queries joining a corpus). Here queries
-    stay distributed end to end: a broadcast nested-loop join pairs
-    every (vector, query), the JVM cosine expression scores inside
-    whole-stage codegen, and the per-query top-k is one window. The
-    broadcast bound is executor memory (~tens of MB of query vectors ≈
-    hundreds of thousands of queries); beyond that, swap the broadcast
-    for a shuffled cross join or an IVF/LSH-pruned candidate join.
-    Output: (query_id, id, score) — identical to knn_batch.
-    """
-    from local_vectordb_spark.functions.vector import cosine_similarity
+    ``queries=None`` queries the corpus with itself (its ``id_col`` and
+    ``vec_col``). ``exclude_self`` drops the pairs whose two ids are
+    equal BEFORE ranking, so a query keeps ``k`` other neighbours.
+    ``n_rows`` is the row count of ``vectors`` when the caller holds
+    it; the kernel counts otherwise (and always counts a query table).
 
-    scored = vectors.crossJoin(
-        F.broadcast(queries.select(query_id_col, query_vec_col))
-    ).select(
-        F.col(query_id_col),
-        F.col(id_col),
-        F.round(
-            cosine_similarity(F.col(vec_col), F.col(query_vec_col)),
-            SCORE_DECIMALS,
-        ).alias("score"),
+    Each side is hashed into ``ceil(rows / ROWS_PER_BLOCK)`` blocks;
+    every (query block, corpus block) pair is one cogrouped
+    ``applyInPandas`` group that unit-normalizes both sides, runs one
+    matmul and keeps a partial top-k per query row (REPOSE's
+    partition-local top-k), and one (score desc, id asc) window merges
+    at most (corpus blocks × k) rows per query. Scores follow Spark's
+    cosine expression on the edge rows: a zero-norm side scores 0.0,
+    a NaN component scores NaN (ranked first, as Spark orders NaN
+    above every number), a NULL vector scores NULL (ranked last)."""
+    n_c = _blocks(vectors, n_rows)
+    if queries is None:
+        queries, q_id, q_vec, n_q = vectors, id_col, vec_col, n_c
+    else:
+        q_id, q_vec, n_q = query_id_col, query_vec_col, _blocks(queries)
+
+    def block(col: str, n: int) -> Column:
+        return F.pmod(F.xxhash64(col), F.lit(n)).cast("int")
+
+    def every(n: int) -> Column:
+        return F.explode(F.sequence(F.lit(0), F.lit(n - 1)))
+
+    qside = queries.select(
+        F.col(q_id).alias("_q"), F.col(q_vec).alias("_v"),
+        block(q_id, n_q).alias("_qb"), every(n_c).alias("_cb"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("score"), F.asc(id_col))
+    cside = vectors.select(
+        F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"),
+        every(n_q).alias("_qb"), block(id_col, n_c).alias("_cb"),
+    )
+    schema = StructType([
+        StructField("_q", queries.schema[q_id].dataType),
+        StructField("_id", vectors.schema[id_col].dataType),
+        StructField("score", DoubleType()),
+    ])
+
+    def block_topk(q: pd.DataFrame, c: pd.DataFrame) -> pd.DataFrame:
+        if q.empty or c.empty or k < 1:
+            return pd.DataFrame({"_q": [], "_id": [], "score": []})
+        c = c.sort_values("_id", kind="stable")
+        qid, cid = q["_q"].to_numpy(), c["_id"].to_numpy()
+        (qu, qnull), (cu, cnull) = _unit_rows(q["_v"]), _unit_rows(c["_v"])
+        s = np.zeros((len(q), len(c)))
+        if qu.shape[1] and cu.shape[1]:  # else one side is all NULL
+            s = np.round(qu @ cu.T, SCORE_DECIMALS)
+        # rank of a pair in Spark's (score desc) order as an exact
+        # integer — NaN first, NULL last, an excluded self after all —
+        # then one int64 key per pair, unique in its row, whose low
+        # part is the column: c is id-sorted, so ties go id ascending
+        top = 10**SCORE_DECIMALS
+        rank = np.rint(-s * top)
+        rank[np.isnan(s)] = -top - 1
+        rank[qnull] = top + 1
+        rank[:, cnull] = top + 1
+        if exclude_self:
+            pos = np.searchsorted(cid, qid).clip(0, len(cid) - 1)
+            hit = np.flatnonzero(cid[pos] == qid)
+            rank[hit, pos[hit]] = top + 2
+        key = rank.astype(np.int64) * len(cid) + np.arange(len(cid))
+        kk = min(k, len(cid))
+        best = np.argpartition(key, kk - 1, axis=1)[:, :kk]
+        best = np.take_along_axis(
+            best, np.argsort(np.take_along_axis(key, best, axis=1)), axis=1
+        )
+        picked = np.take_along_axis(rank, best, axis=1).ravel()
+        score = np.take_along_axis(s, best, axis=1).ravel()
+        # Arrow turns a pandas NaN into NULL: a NaN score travels as
+        # +inf (no cosine is infinite) and a NULL one as NaN
+        score = np.where(np.isnan(score), np.inf, score)
+        score[picked == top + 1] = np.nan
+        keep = picked != top + 2
+        return pd.DataFrame({
+            "_q": np.repeat(qid, kk)[keep],
+            "_id": cid[best].ravel()[keep],
+            "score": score[keep],
+        })
+
+    partial = (
+        qside.groupBy("_qb", "_cb")
+        .cogroup(cside.groupBy("_qb", "_cb"))
+        .applyInPandas(block_topk, schema)
+    )
+    w = Window.partitionBy("_q").orderBy(F.desc("score"), F.asc("_id"))
+    score = F.col("score")
     return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .drop("rank")
+        partial.withColumn("_rank", F.row_number().over(w))
+        .filter(F.col("_rank") <= k)
+        .select(
+            F.col("_q").alias(query_id_col),
+            F.col("_id").alias(id_col),
+            F.when(score == float("inf"), float("nan"))
+            .otherwise(score)
+            .alias("score"),
+        )
     )
 
 

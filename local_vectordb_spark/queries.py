@@ -3113,55 +3113,23 @@ def knn_sign_batch_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X6: the NSW adjacency artifact as an edges DataFrame.
-
-    The DEFAULT physical strategy is the block-matrix self-join
-    (`ann.knn_graph_blocked`) — no driver collect, shuffle bounded by
-    2·n_blocks·n rows, the only form that survives a corpus that
-    doesn't fit one machine. r6 headline decision: the driver-broadcast
-    variant is latency-floor-bound on collect+broadcast and drifted to
-    2.08× baseline under driver load in BENCH_r05, while the blocked
-    form measured identically under driver and builder runs (0.95 s);
-    the broadcast form stays registered below as the small-corpus
-    utility (`knn_graph_broadcast`)."""
-    return ann.knn_graph_blocked(
-        load_table(spark, sf_dir, "embeddings"), k=5, n_blocks=8
+    """X6: the NSW adjacency artifact as an edges DataFrame, built by
+    the exact top-k kernel (no driver collect; the merge shuffle
+    carries at most corpus-blocks × k rows per node)."""
+    return ann.knn_graph(
+        load_table(spark, sf_dir, "embeddings"), k=5,
+        n_rows=_parquet_rows(sf_dir, "embeddings"),
     )
-
-
-@register(
-    "knn_graph_broadcast",
-    """
-    WITH scored AS (
-      SELECT a.vec_id AS src, b.vec_id AS dst,
-             ROUND(list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 6) AS score
-      FROM embeddings a JOIN embeddings b ON a.vec_id != b.vec_id
-    )
-    SELECT src, dst, score FROM (
-      SELECT *, row_number() OVER (PARTITION BY src ORDER BY score DESC, dst ASC) AS rn
-      FROM scored
-    ) WHERE rn <= 5
-    """,
-)
-def knn_graph_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X6 small-corpus utility: the SAME exact kNN graph via driver
-    toPandas + broadcast BLAS top-k — fastest when the corpus fits
-    driver memory and the cluster is idle, but its wall-clock is
-    dominated by collect/broadcast latency (load-sensitive) and it
-    cannot scale past one machine's memory. Shares knn_graph's
-    oracle; the blocked form above is the default."""
-    return ann.knn_graph(load_table(spark, sf_dir, "embeddings"), k=5)
 
 
 @register("knn_graph_auto", ORACLE_SQL["knn_graph"])
 def knn_graph_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X6 with size-dispatched physical strategy (r7 verdict #7):
-    `ann.knn_graph_auto` picks broadcast below 10⁴ rows, blocked to
-    10⁵, LSH-bucketed beyond — the graph twin of VectorDB.search_batch's
-    `max_driver_queries` dispatch. Every shipped fixture lands in the
-    broadcast regime, where the output is the exact graph, so this
+    """X6 with a size-dispatched build: `ann.knn_graph_auto` builds
+    the exact graph up to 10⁵ rows and the LSH-bucketed one beyond —
+    the graph twin of VectorDB.search_batch's `max_driver_queries`
+    dispatch. Every shipped fixture lands in the exact regime, so this
     entry shares knn_graph's oracle verbatim; the per-regime dispatch
-    itself is plan-gated in tests/test_ann.py."""
+    itself is pinned in tests/test_ann.py."""
     emb = load_table(spark, sf_dir, "embeddings")
     return ann.knn_graph_auto(emb, k=5, n_rows=_parquet_rows(sf_dir, "embeddings"))
 
@@ -3405,10 +3373,10 @@ def graph_bfs_2hop(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NSW-capability parity: 2-hop frontier expansion from node 0 over
     the deterministic k=5 cosine kNN graph, distributed as Pregel-style
     join rounds; the oracle walks the same graph with a recursive CTE.
-    Edges come from the block-matrix builder, so the whole query is
-    collect-free end to end."""
-    edges = ann.knn_graph_blocked(
-        load_table(spark, sf_dir, "embeddings"), k=5, n_blocks=8
+    The whole query is collect-free end to end."""
+    edges = ann.knn_graph(
+        load_table(spark, sf_dir, "embeddings"), k=5,
+        n_rows=_parquet_rows(sf_dir, "embeddings"),
     )
     return ann.bfs_hops(edges, seeds=[0], max_hops=2)
 
@@ -3522,15 +3490,16 @@ def graph_lsh_edge_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph-build analogue of ann_recall_report."""
     emb = load_table(spark, sf_dir, "embeddings")
     # materialize the exact graph once — the count() action and the
-    # join would otherwise each re-run the blocked O(n²) build
+    # join would otherwise each re-run the O(n²) build
+    n_rows = _parquet_rows(sf_dir, "embeddings")
     exact = (
-        ann.knn_graph_blocked(emb, k=5)
+        ann.knn_graph(emb, k=5, n_rows=n_rows)
         .select("src", "dst")
         .localCheckpoint(eager=True)
     )
-    lsh = ann.knn_graph_lsh(
-        emb, k=5, n_tables=2, n_rows=_parquet_rows(sf_dir, "embeddings")
-    ).select("src", "dst")
+    lsh = ann.knn_graph_lsh(emb, k=5, n_tables=2, n_rows=n_rows).select(
+        "src", "dst"
+    )
     n_exact = exact.count()
     return lsh.join(exact, ["src", "dst"]).agg(
         F.round(F.count("*") / float(n_exact), 6).alias("edge_recall")
@@ -3660,14 +3629,15 @@ def graph_add_remove(spark: SparkSession, sf_dir: str) -> DataFrame:
     the planted set. Removal must discard BOTH directions (the
     reference's back-edge discard,
     /root/reference/src/models/nsw_index.py:75-85), leaving exactly
-    the survivor graph the oracle computes directly. Both graph tiers
-    here are the distributed block-matrix builder — no driver
-    collect."""
+    the survivor graph the oracle computes directly. Both graphs come
+    from the exact top-k kernel — no driver collect."""
     emb = load_table(spark, sf_dir, "embeddings")
     survivors = emb.filter(F.col("vec_id") % 5 != 0)
     planted_ids = emb.select("vec_id").filter(F.col("vec_id") % 5 == 0)
-    g0 = ann.knn_graph_blocked(survivors, k=5, n_blocks=4)
-    new_edges = ann.knn_graph_blocked(emb, k=5, n_blocks=4).join(
+    g0 = ann.knn_graph(survivors, k=5)
+    new_edges = ann.knn_graph(
+        emb, k=5, n_rows=_parquet_rows(sf_dir, "embeddings")
+    ).join(
         planted_ids.withColumnRenamed("vec_id", "src"), "src", "left_semi"
     )
     g1 = ann.graph_add(g0, new_edges)
@@ -5035,9 +5005,9 @@ def ann_recall_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     qdf = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
     )
-    exact = knn_ops.knn_batch_table(emb, qdf, k=K).select(
-        "query_id", "vec_id"
-    )
+    exact = knn_ops.knn_batch_table(
+        emb, qdf, k=K, n_rows=_parquet_rows(sf_dir, "embeddings")
+    ).select("query_id", "vec_id")
 
     def lsh_md5_batch(n_tables: int = 1) -> DataFrame:
         from local_vectordb_spark.operators.ann import table_seed
@@ -5143,9 +5113,9 @@ def ann_recall_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     qdf = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
     )
-    exact = knn_ops.knn_batch_table(emb, qdf, k=K).select(
-        "query_id", "vec_id"
-    )
+    exact = knn_ops.knn_batch_table(
+        emb, qdf, k=K, n_rows=_parquet_rows(sf_dir, "embeddings")
+    ).select("query_id", "vec_id")
 
     centroids, assignments = _ivf_index_for(spark, sf_dir)
     probe_pairs = [
@@ -5227,9 +5197,9 @@ def ann_recall_pq_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     qdf = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
     )
-    exact = knn_ops.knn_batch_table(emb, qdf, k=K).select(
-        "query_id", "vec_id"
-    )
+    exact = knn_ops.knn_batch_table(
+        emb, qdf, k=K, n_rows=_parquet_rows(sf_dir, "embeddings")
+    ).select("query_id", "vec_id")
 
     def sign_pairs(max_hamming: int) -> DataFrame:
         qb = ivf.sign_bucket(F.col("qv"), n_bits=4)

@@ -73,10 +73,7 @@ _SLOW_TESTS = {
     "test_incremental_export_requires_device_match",
     "test_export_serving_bundle_lifecycle",
     "test_live_pinned_ivf_search_serves_from_memo",
-    "test_nsw_graph_persisted_and_metadata_filter_falls_back",
-    "test_nsw_default_beam_dispatches_on_corpus_size",
     "test_auto_count_cache_invalidated_by_other_instance",
-    "test_nsw_stored_build_dispatches_to_lsh_past_knee",
     "test_facade_ivf_scales_clusters_and_holds_recall",
     "test_facade_ivf_two_level_quantizer_dispatch_and_recall",
     # test_plans.py — stored-layout plan gates over staged stores

@@ -225,31 +225,6 @@ def test_derived_bucket_length_tracks_norm_and_dim(spark, sf_dir):
     assert ann.derive_bucket_length(scaled) == pytest.approx(10 * base, rel=0.05)
 
 
-def test_knn_graph_blocked_equals_broadcast(spark, sf_dir):
-    """The block-matrix build is EXACT: identical edge set to the
-    broadcast variant, with no driver collect of the corpus."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    want = {
-        (r.src, r.dst, r.score) for r in ann.knn_graph(emb, k=5).collect()
-    }
-    got = {
-        (r.src, r.dst, r.score)
-        for r in ann.knn_graph_blocked(emb, k=5, n_blocks=4).collect()
-    }
-    assert got == want
-
-
-def test_knn_graph_blocked_odd_block_count(spark, sf_dir):
-    """Exactness can't depend on the blocking factor."""
-    emb = load_table(spark, sf_dir, "embeddings").limit(120)
-    want = {(r.src, r.dst) for r in ann.knn_graph(emb, k=3).collect()}
-    got = {
-        (r.src, r.dst)
-        for r in ann.knn_graph_blocked(emb, k=3, n_blocks=7).collect()
-    }
-    assert got == want
-
-
 def test_graph_beam_search_deterministic_and_recalls(spark, sf_dir):
     """Fixed-hop beam search over the kNN graph (the NSW greedy-search
     swap): deterministic across runs, scores sorted desc with id
@@ -392,7 +367,7 @@ def test_knn_graph_lsh_recall_and_exactness(spark, sf_dir):
 
     emb = load_table(spark, sf_dir, "embeddings")
     exact_edges = {
-        (r.src, r.dst) for r in ann.knn_graph_blocked(emb, k=5).collect()
+        (r.src, r.dst) for r in ann.knn_graph(emb, k=5).collect()
     }
     lsh_edges = ann.knn_graph_lsh(emb, k=5).collect()
     got = {(r.src, r.dst) for r in lsh_edges}
@@ -492,8 +467,9 @@ def test_graph_lsh_bits_scales_with_corpus():
 
 def test_knn_graph_auto_dispatch_per_regime(monkeypatch, spark, sf_dir):
     """The size dispatcher routes each regime to the right builder
-    (r7 verdict #7) WITHOUT a sizing scan when n_rows is hinted —
-    builders are stubbed so only the dispatch decision is under test."""
+    WITHOUT a sizing scan when n_rows is hinted, and forwards the hint
+    so the builder skips its own count — builders are stubbed so only
+    the dispatch decision is under test."""
     calls = []
 
     def fake(name):
@@ -503,24 +479,20 @@ def test_knn_graph_auto_dispatch_per_regime(monkeypatch, spark, sf_dir):
 
         return _f
 
-    monkeypatch.setattr(ann, "knn_graph", fake("broadcast"))
-    monkeypatch.setattr(ann, "knn_graph_blocked", fake("blocked"))
+    monkeypatch.setattr(ann, "knn_graph", fake("exact"))
     monkeypatch.setattr(ann, "knn_graph_lsh", fake("lsh"))
 
     ann.knn_graph_auto(None, k=5, n_rows=5_000)
-    ann.knn_graph_auto(None, k=5, n_rows=50_000)
-    ann.knn_graph_auto(None, k=5, n_rows=500_000)
-    names = [n for n, _ in calls]
-    assert names == ["broadcast", "blocked", "lsh"]
-    # blocked regime scales n_blocks with n (floored at the default 8;
-    # 50k/12.5k rounds to 4 → 8, and a 100k corpus gets exactly 8)
-    assert calls[1][1]["n_blocks"] == 8
-    # lsh regime forwards the hint so the builder skips its count()
-    assert calls[2][1]["n_rows"] == 500_000
+    ann.knn_graph_auto(None, k=5, n_rows=ann.GRAPH_AUTO_BLOCKED_MAX)
+    ann.knn_graph_auto(None, k=5, n_rows=ann.GRAPH_AUTO_BLOCKED_MAX + 1)
+    assert [n for n, _ in calls] == ["exact", "exact", "lsh"]
+    assert [kw["n_rows"] for _, kw in calls] == [
+        5_000, ann.GRAPH_AUTO_BLOCKED_MAX, ann.GRAPH_AUTO_BLOCKED_MAX + 1
+    ]
 
 
-def test_knn_graph_auto_exact_in_broadcast_regime(spark, sf_dir):
-    """Every shipped fixture lands in the broadcast regime, where auto
+def test_knn_graph_auto_exact_below_knee(spark, sf_dir):
+    """Every shipped fixture lands in the exact regime, where auto
     must emit the exact graph — identical edges to knn_graph."""
     emb = load_table(spark, sf_dir, "embeddings")
     want = {(r.src, r.dst, r.score) for r in ann.knn_graph(emb, k=5).collect()}

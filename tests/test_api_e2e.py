@@ -126,23 +126,37 @@ def test_search_batch_each_strategy(db, index_type):
 def test_every_strategy_answers_a_never_written_store_with_no_rows(
     spark, tmp_path
 ):
-    """A store nothing was ever written to has no rows to train an IVF
-    index or fit LSH on: every strategy, on every path it supports,
-    answers with an empty result instead of failing inside KMeans."""
-    d = VectorDB(spark, str(tmp_path / "never_written"))
-    for index_type in INDEX_TYPES:
-        assert d.search(QUESTIONS[4], index_type=index_type, k=3).count() == 0, (
-            index_type
-        )
+    """A store nothing was ever written to — or one whose every chunk
+    was deleted — has no rows to train an IVF index, lay out sign
+    buckets or build a graph on: every strategy, on every path it
+    supports, answers with an empty result instead of failing inside
+    KMeans or on an artifact with no parquet file."""
+    emptied = VectorDB(spark, str(tmp_path / "emptied"))
+    lib, doc = str(uuid.uuid4()), str(uuid.uuid4())
+    emptied.add("libraries", spark.createDataFrame(
+        [(lib, {}, None, None, "l")], SCHEMAS["libraries"]))
+    emptied.add("documents", spark.createDataFrame(
+        [(doc, {}, None, None, "d", lib)], SCHEMAS["documents"]))
+    emptied.add("chunks", spark.createDataFrame(
+        [(f"c{i}", {}, None, None, q, None, doc)
+         for i, q in enumerate(QUESTIONS[:3])],
+        SCHEMAS["chunks"]))
+    emptied.delete("chunks", spark.createDataFrame(
+        [("c0",), ("c1",), ("c2",)], "id string"))
+    assert emptied._current_version("chunks") >= 0
     queries = [(0, QUESTIONS[0]), (1, QUESTIONS[4])]
-    for index_type in BATCH_TYPES:
-        got = d.search_batch(queries, index_type=index_type, k=3)
-        assert got.count() == 0, index_type
-    for index_type in TABLE_TYPES:
-        got = d.search_batch(
-            queries, index_type=index_type, k=3, max_driver_queries=1
-        )
-        assert got.count() == 0, index_type
+    for d in (VectorDB(spark, str(tmp_path / "never_written")), emptied):
+        for index_type in INDEX_TYPES:
+            got = d.search(QUESTIONS[4], index_type=index_type, k=3)
+            assert got.count() == 0, (d.root, index_type)
+        for index_type in BATCH_TYPES:
+            got = d.search_batch(queries, index_type=index_type, k=3)
+            assert got.count() == 0, (d.root, index_type)
+        for index_type in TABLE_TYPES:
+            got = d.search_batch(
+                queries, index_type=index_type, k=3, max_driver_queries=1
+            )
+            assert got.count() == 0, (d.root, index_type)
 
 
 def test_unknown_index_raises(db):

@@ -224,23 +224,68 @@ def test_beam_search_final_plan_and_hop_shape(spark, sf_dir):
     assert "CartesianProduct" not in hop_plan
 
 
-def test_batch_table_path_broadcasts_queries(spark, sf_dir):
-    """The unbounded batch-search path must broadcast the QUERY table
-    against the corpus scan (BroadcastNestedLoopJoin is the intended
-    all-pairs physical op) — the corpus itself is never shuffled for
-    scoring; the only exchange is the per-query top-k window."""
-    from local_vectordb_spark.operators.knn import knn_batch_table
+def _executed_nodes(df):
+    """(node name, {metric: value}, names below it) for every operator
+    of the EXECUTED plan (call after an action), descending through
+    AQE query stages."""
+    out = []
+
+    def walk(n):
+        while "QueryStage" in n.getClass().getName():
+            n = n.plan()
+        ms, it = n.metrics(), n.metrics().keys().iterator()
+        vals = {}
+        while it.hasNext():
+            key = it.next()
+            vals[key] = ms.get(key).get().value()
+        kids = n.children()
+        below = set()
+        for i in range(kids.size()):
+            below |= walk(kids.apply(i))
+        out.append((n.nodeName(), vals, below))
+        return below | {n.nodeName()}
+
+    walk(df._jdf.queryExecution().executedPlan().executedPlan())
+    return out
+
+
+def test_batch_table_path_scores_blocks_without_a_cross_join(
+    monkeypatch, spark, sf_dir
+):
+    """The exact top-k kernel pairs (query block, corpus block) groups,
+    never rows: no CartesianProduct or BroadcastNestedLoopJoin, all
+    scoring in ONE grouped-map Python stage, and the partial top-k that
+    stage emits — which is all the merge exchange carries — is at most
+    corpus blocks × k rows per query, never |Q|·|C| scored pairs."""
+    from local_vectordb_spark.operators import knn
     from local_vectordb_spark.session import load_table
 
+    monkeypatch.setattr(knn, "ROWS_PER_BLOCK", 200)  # 500 rows: 3 blocks
     emb = load_table(spark, sf_dir, "embeddings")
     qdf = emb.limit(4).select(
         emb.vec_id.alias("query_id"),
         emb.embedding.cast("array<double>").alias("qv"),
     )
-    df = knn_batch_table(emb, qdf, k=3)
+    df = knn.knn_batch_table(emb, qdf, k=3)
     plan = plans.plan_string(df)
-    assert "BroadcastNestedLoopJoin" in plan
+    assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
+    assert plan.count("FlatMapCoGroupsInPandas") == 2  # tree + details
+    assert "EvalPython" not in plan and "MapInPandas" not in plan
+    assert len(df.collect()) == 4 * 3
+
+    nodes = _executed_nodes(df)
+    cap = 4 * 3 * 3  # queries × corpus blocks × k
+    (scored,) = [
+        m["pythonNumRowsReceived"]
+        for name, m, _ in nodes if name == "FlatMapCoGroupsInPandas"
+    ]
+    assert 4 * 3 <= scored <= cap < 4 * 500
+    (merge,) = [
+        m["shuffleRecordsWritten"] for name, m, below in nodes
+        if name == "Exchange" and "FlatMapCoGroupsInPandas" in below
+    ]
+    assert merge <= cap
 
 
 def test_no_hint_forced_fact_broadcasts(spark, sf_dir):

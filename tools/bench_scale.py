@@ -15,8 +15,9 @@ tools/make_scale_corpus.py:
   setting, so the LSH graph build's sub-quadratic claim is measured
   here, not asserted. Same 120 s budget.
 
-Set SPARK_GRAFT_BLOCKED_REF=1 to ALSO time the exact block-matrix
-graph build (knn_graph) on the sf10 corpus, unbudgeted, recorded as
+Set SPARK_GRAFT_BLOCKED_REF=1 to ALSO time the exact graph build
+(knn_graph, the blocked exact top-k kernel) on the sf10 corpus,
+unbudgeted, recorded as
 `blocked_reference` — the measured cost of the quadratic tier that
 knn_graph_auto exists to dispatch away from past 100k rows.
 
@@ -39,8 +40,8 @@ STRESS = [
     "dedup_minhash_lsh_md5_capped",
     "dedup_ngram_jaccard_capped",
     "dedup_lsh_bucket_audit",
-    "knn_graph",  # r6: registry default is now the block-matrix path
-    "knn_graph_lsh",  # r7: bucket-local build must beat the blocked one here
+    "knn_graph",  # the exact top-k kernel's graph form
+    "knn_graph_lsh",  # bucket-local build must beat the exact one here
     "ivf_sign_pruned",
     "lsh_search_md5",
     "knn_pq_adc",  # r6: ADC scan under massive duplicate-code skew
@@ -1588,16 +1589,12 @@ def main() -> int:
         try:
             emb = load_table(spark, dir100, "embeddings")
             t0 = time.time()
-            # n_blocks per knn_graph_auto's middle-regime sizing rule
-            # (one block's matrix stays task-sized), not the registry
-            # entry's fixture-tuned 8 — the fairest form of the exact
-            # build at 200k rows
-            n = ann.knn_graph_blocked(emb, k=5, n_blocks=16).count()
+            n = ann.knn_graph(emb, k=5).count()
             dt = round(time.time() - t0, 4)
-            print(f"sf10 knn_graph_blocked (unbudgeted reference): "
+            print(f"sf10 knn_graph (unbudgeted reference): "
                   f"{dt:.2f}s, {n} rows", flush=True)
             result["blocked_reference"] = {
-                "query": "knn_graph_blocked(n_blocks=16)",
+                "query": "knn_graph",
                 "sf": "sf10",
                 "sec": dt,
                 "rows": n,
@@ -1607,7 +1604,7 @@ def main() -> int:
             }
         except Exception as e:  # noqa: BLE001 - diagnostic capture
             result["blocked_reference"] = {
-                "query": "knn_graph_blocked(n_blocks=16)",
+                "query": "knn_graph",
                 "sf": "sf10",
                 "sec": None,
                 "error": repr(e)[:300],
