@@ -14,8 +14,9 @@ DataFrame operations over parquet-backed tables:
   `auto`) to its single-query, driver-batch and table-batch forms
   (/root/reference/src/models/collection.py:179-215; unknown type is a
   ValueError where the reference returns HTTP 400), with the Q8
-  metadata filter applied ahead of scoring and Q6 hydration joining
-  content back onto (id, score);
+  metadata filter applied ahead of scoring; Q6 hydration rides the
+  ranking scan where a form ranks base rows, and is one join of the
+  k winners otherwise (see `_Scope`);
 - storage is read-merge-write on plain parquet with VERSIONED
   DIRECTORY commits: every write stages into a private `_stage_*`
   directory, claims its version slot with an atomic os.rename to
@@ -50,6 +51,7 @@ import shutil
 from typing import Callable, NamedTuple
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -184,11 +186,19 @@ class _Scope:
     never-written store), ``chunks`` = that generation with the Q8
     metadata filter applied, and ``k`` rows per query. Every form scans
     ``chunks`` and reads stored artifacts for ``disk_v`` only, and
-    hydration joins the same generation, so a commit landing mid-search
+    hydration reads the same generation, so a commit landing mid-search
     never pairs a v(N) scan with v(N+1) artifacts or content;
     keep_versions>=2 keeps the pinned generation readable across one
     such commit. Single-query forms also read ``query`` (text or None),
-    ``qvec`` and the nsw ``beam``/``hops``."""
+    ``qvec`` and the nsw ``beam``/``hops``.
+
+    A single-query form that ranks rows of the generation itself —
+    cosine, pq, the exact scan of a filtered or empty nsw search, and
+    sq8's rerank over its point read — carries their ``content``
+    through its top-k (``extra_cols``), so the one job that ranks also
+    hydrates. A form ranked from an artifact (sign, ivf, the nsw
+    traversal, hybrid), mmr and every batch return (id, score) and
+    are hydrated by :meth:`hydrate`."""
 
     def __init__(self, db, disk_v, metadata, k, query=None, qvec=None,
                  beam=None, hops=None):
@@ -196,18 +206,20 @@ class _Scope:
         self.pin = disk_v if disk_v >= 0 else None
         self.chunks = db._chunks_for_search(metadata, version=self.pin)
         self.query, self.qvec, self.beam, self.hops = query, qvec, beam, hops
-        # a form that already read its candidates' full rows (sq8's
-        # bucket-pruned point read) sets this, so the closing content
-        # join reuses that read instead of the whole table's columns
-        self.hydrate_src = None
+
+    def exact(self, rows: DataFrame) -> DataFrame:
+        """(id, score, content): the exact top-k of ``rows`` for
+        ``qvec``."""
+        return knn.knn_brute_force(
+            rows, self.qvec, k=self.k, id_col="id", extra_cols=("content",)
+        )
 
     def hydrate(self, scored: DataFrame, keep_cols=()) -> DataFrame:
-        src = self.hydrate_src
-        if src is None:
-            src = self.db.table("chunks", version=self.pin)
+        """(*keep_cols, id, score, content): ``scored`` joined to the
+        content of the scanned generation (knn.hydrate)."""
         return knn.hydrate(
-            scored, src, id_col="id", record_id_col="id",
-            content_col="content", keep_cols=keep_cols,
+            scored, self.db.table("chunks", version=self.pin), id_col="id",
+            record_id_col="id", content_col="content", keep_cols=keep_cols,
         )
 
 
@@ -271,27 +283,21 @@ def _sq8(s: _Scope) -> DataFrame:
     in tests/test_plans.py) and approx-scores the reconstructed
     vectors; the top max(8*k, SQ8_RERANK_DEPTH) candidates are
     rescored with their real fp embeddings from a bucket-pruned point
-    read of the base table. Every stage is deterministic arithmetic,
-    so the result is value-checked against DuckDB (api_search_sq8):
-    exact top-k BY TRUE SCORE among the approx top-c, ties by id at
-    both stages. No stage reads a corpus-wide column."""
+    read of the base table, which also carries the winners' content.
+    Every stage is deterministic arithmetic, so the result is
+    value-checked against DuckDB (api_search_sq8): exact top-k BY TRUE
+    SCORE among the approx top-c, ties by id at both stages. No stage
+    reads a corpus-wide column."""
     c_depth = max(8 * s.k, SQ8_RERANK_DEPTH)
     approx = s.db._sq8_approx(s.qvec, s.chunks, s.metadata, s.disk_v, c_depth)
-    # bounded driver surface: <= c_depth ids
+    # bounded driver surface: <= c_depth ids, every one of the filtered
+    # generation (_sign_source applied the metadata filter)
     cand_ids = [r.id for r in approx.select("id").collect()]
     if s.disk_v >= 0:
         exact = s.db._point_read("chunks", s.disk_v, cand_ids)
     else:
         exact = s.chunks.filter(F.col("id").isin(cand_ids))
-    if s.metadata is not None:
-        # the point read bypasses the metadata filter: re-intersect, so
-        # only ids of the filtered generation survive
-        exact = exact.join(s.chunks.select("id"), "id", "leftsemi")
-    # the scored ids are a subset of cand_ids: hydrate from this read
-    s.hydrate_src = exact
-    return knn.knn_brute_force(
-        exact.select("id", "embedding"), s.qvec, k=s.k, id_col="id"
-    )
+    return s.exact(exact)
 
 
 def _sq8_table(s: _Scope, qdf: DataFrame) -> DataFrame:
@@ -380,7 +386,7 @@ def _nsw(s: _Scope) -> DataFrame:
                 "nsw search does not use — it answers with an exact "
                 "scan over the filtered candidates; drop beam/hops here"
             )
-        return knn.knn_brute_force(s.chunks, s.qvec, k=s.k, id_col="id")
+        return s.exact(s.chunks)
     from local_vectordb_spark.operators import ann
 
     db = s.db
@@ -461,12 +467,14 @@ def _pq(s: _Scope) -> DataFrame:
     from local_vectordb_spark.operators import pq as pq_ops
 
     return pq_ops.pq_adc_search(
-        s.chunks, s.qvec, k=s.k, n_candidates=max(50, 5 * s.k), id_col="id"
+        s.chunks, s.qvec, k=s.k, n_candidates=max(50, 5 * s.k), id_col="id",
+        extra_cols=("content",),
     )
 
 
 class _Strategy(NamedTuple):
-    # (scope) -> (id, score): the top scope.k for scope.qvec
+    # (scope) -> (id, score[, content]): the top scope.k for scope.qvec,
+    # in (score desc, id asc) order
     single: Callable
     # (scope, [(query_id, vec)]) -> (query_id, id, score); None: the
     # strategy is single-query only
@@ -478,7 +486,7 @@ class _Strategy(NamedTuple):
 
 _STRATEGIES = {
     "cosine": _Strategy(
-        lambda s: knn.knn_brute_force(s.chunks, s.qvec, k=s.k, id_col="id"),
+        lambda s: s.exact(s.chunks),
         lambda s, vecs: knn.knn_batch(s.chunks, vecs, k=s.k, id_col="id"),
         lambda s, qdf: knn.knn_batch_table(s.chunks, qdf, k=s.k, id_col="id"),
     ),
@@ -713,12 +721,13 @@ class VectorDB:
         df = self._cached_parquet(d)
         B = self._version_buckets(d)
         if B is not None and "bucket" in df.columns:
-            # the ids' buckets via one tiny local job (xxhash64 is a
-            # Spark-side hash; B values, bounded by len(ids))
+            # the ids' buckets (xxhash64 is a Spark-side hash): over an
+            # Arrow table the projection folds into a local relation,
+            # so the collect runs no job and no Python worker
             bkts = sorted({
                 r.b
                 for r in self.spark.createDataFrame(
-                    [(i,) for i in ids], "id string"
+                    pa.table({"id": pa.array(ids, pa.string())})
                 )
                 .select(F.pmod(F.xxhash64("id"), F.lit(B)).alias("b"))
                 .collect()
@@ -1439,7 +1448,16 @@ class VectorDB:
         directly, skipping the embedder), route to the strategy's
         single-query form in `_STRATEGIES`, hydrate content. Returns
         (id, score, content) — the FullSearchResult shape
-        (src/models/search.py:17-31).
+        (src/models/search.py:17-31) — at most ``k`` rows in (score
+        desc, id asc) order; a negative ``k`` is a ValueError.
+
+        Plan shape: a form that ranks rows of the generation (cosine,
+        pq, a filtered or empty nsw, sq8's rerank) carries ``content``
+        through its own TakeOrderedAndProject, so the whole search is
+        one ranking job with no join and no shuffle. Any other form
+        (sign, ivf, the nsw traversal, hybrid) and mmr hydrate with one
+        broadcast join of their <= k winners, ordered by a top-k, never
+        by a range exchange.
 
         The query text is embedded on the driver (``_embed_texts``: a
         pandas-UDF embedder is called in-process, so no Spark job and
@@ -1466,6 +1484,8 @@ class VectorDB:
         metadata filter (or hits a store with no rows) answers with
         an exact scan instead of a traversal, and supplying beam/hops
         there raises rather than silently doing nothing."""
+        if k < 0:
+            raise ValueError(f"k must be >= 0, got {k}")
         name, disk_v = self._resolve(index_type, version)
         if diversify not in (None, "mmr"):
             raise ValueError(f"unknown diversify {diversify!r}; only 'mmr'")
@@ -1491,7 +1511,7 @@ class VectorDB:
         if diversify == "mmr":
             from local_vectordb_spark.operators import rerank
 
-            cand = F.broadcast(scored).join(
+            cand = F.broadcast(scored.select("id", "score")).join(
                 self._chunks_for_search(None, version=s.pin).select(
                     "id", "embedding"
                 ),
@@ -1504,7 +1524,11 @@ class VectorDB:
                 .withColumnRenamed("mmr_score", "score")
                 .drop("mmr_rank")
             )
-        return s.hydrate(scored)
+        if "content" in scored.columns:
+            return scored
+        # <= s.k winners: the limit drops none, and makes the closing
+        # sort a TakeOrderedAndProject
+        return s.hydrate(scored).limit(s.k)
 
     def search_batch(
         self,
@@ -1541,6 +1565,8 @@ class VectorDB:
         ``version`` pins the batch to a retained generation, same
         contract as search(): scan, stored artifacts, hydration, and
         the auto dispatch's count all serve that snapshot."""
+        if k < 0:
+            raise ValueError(f"k must be >= 0, got {k}")
         name, disk_v = self._resolve(index_type, version)
         st = _STRATEGIES[name]
         if st.driver_batch is None:

@@ -7,7 +7,10 @@ in a Python loop, sorts, truncates
 - One literal query (knn_brute_force, range_search, score_all) is a
   declarative scan → score → ``ORDER BY .. LIMIT k``, which Catalyst
   compiles to ``TakeOrderedAndProject``: a per-partition top-k heap
-  merged on the driver, one pass, no shuffle of scored rows.
+  merged on the driver, one pass, no shuffle of scored rows. Named
+  ``extra_cols`` of the scanned rows (a search's ``content``) ride
+  through that heap, so a caller that ranks base rows needs no join
+  to hydrate its winners.
 - A driver-side query list (knn_batch) closes its unit query matrix
   over an Arrow pandas UDF: one BLAS matmul per corpus batch, one
   per-query top-k window.
@@ -46,8 +49,11 @@ def knn_brute_force(
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
+    extra_cols: Sequence[str] = (),
 ) -> DataFrame:
-    """Exact top-k by cosine similarity for one literal query vector.
+    """Exact top-k by cosine similarity for one literal query vector:
+    (id_col, score, *extra_cols), at most ``k`` rows in (score desc,
+    id asc) order.
 
     Mirrors BruteForceCosineSimilarityIndex.search
     (/root/reference/src/models/collection.py:294-335), re-expressed as
@@ -58,10 +64,14 @@ def knn_brute_force(
     The query vector is normalized driver-side so per-row work is a
     single dot product plus the row's own norm (cosine = dot(e, q̂)/‖e‖),
     and ties are broken by id ascending (the reference's sort is
-    unstable on ties).
+    unstable on ties). ``extra_cols`` are carried through the top-k
+    heap unchanged (see :func:`score_all`).
     """
     return (
-        score_all(vectors, query_vec, id_col=id_col, vec_col=vec_col)
+        score_all(
+            vectors, query_vec, id_col=id_col, vec_col=vec_col,
+            extra_cols=extra_cols,
+        )
         .orderBy(F.desc("score"), F.asc(id_col))
         .limit(k)
     )
@@ -72,10 +82,13 @@ def score_all(
     query_vec: Sequence[float],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
+    extra_cols: Sequence[str] = (),
 ) -> DataFrame:
-    """(id, score) for EVERY vector vs one literal query — the shared
-    scoring scan under brute-force kNN and graph traversal (lazy: only
-    the rows a consumer touches are ever scored).
+    """(id, score, *extra_cols) for EVERY vector vs one literal query —
+    the shared scoring scan under brute-force kNN and graph traversal
+    (lazy: only the rows a consumer touches are ever scored).
+    ``extra_cols`` name columns of ``vectors`` passed through as they
+    are, so a top-k over this scan returns them with no second read.
 
     The whole score is ONE generated-SQL expr(), so its construction is
     one py4j call instead of ~30 for the Column form (l2_norm +
@@ -101,7 +114,9 @@ def score_all(
         f"round(CASE WHEN {norm} = 0.0D THEN 0.0D"
         f" ELSE {dot} / {norm} END, {SCORE_DECIMALS})"
     )
-    return vectors.select(F.col(id_col), F.expr(score).alias("score"))
+    return vectors.select(
+        F.col(id_col), F.expr(score).alias("score"), *extra_cols
+    )
 
 
 def range_search(
@@ -339,20 +354,26 @@ def hydrate(
 ) -> DataFrame:
     """Join (id, score) results back to their source records (SURVEY Q6).
 
-    The reference hydrates per-result with a file read and silently
-    drops ids whose record vanished
-    (/root/reference/src/models/collection.py:199-215); an inner join
-    reproduces exactly that drop-missing semantics in one shuffle-free
-    broadcast join (the result set is k rows per query — always
-    broadcastable). `keep_cols` carries extra result columns (e.g. the
-    batch path's query_id) through the projection.
+    For rankings that are NOT a scan of the records themselves: the
+    artifact-ranked single searches (sign, ivf, the nsw traversal,
+    hybrid, mmr), the batch searches and the registry's
+    ``knn_hydrated``. A ranking that scans the records carries
+    ``content`` through its own top-k instead (``extra_cols``).
+
+    Invariants: an id whose record is missing is dropped (the
+    reference's hydrate-by-file-read skips it, its
+    src/models/collection.py:199-215), as an inner
+    join whose result side is broadcast (k rows per query); the
+    output is (*keep_cols, id_col, score, content) in (*keep_cols,
+    score desc, id asc) order — the reference sorts before hydrating
+    (collection.py:334-335) and a join keeps no order. A caller that
+    knows its result has at most k rows appends ``.limit(k)``, which
+    turns the sort into a TakeOrderedAndProject instead of a range
+    exchange.
     """
     proj = records.select(
         F.col(record_id_col).alias(id_col), F.col(content_col).alias("content")
     )
-    # re-sort after the join: joins do not preserve order, and the
-    # reference's hydrated response is rank-ordered
-    # (src/models/collection.py:334-335 sorts before hydration)
     return (
         F.broadcast(results)
         .join(proj, id_col, "inner")

@@ -236,12 +236,15 @@ def pq_adc_search(
     n_candidates: int = 50,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
+    extra_cols: Sequence[str] = (),
 ) -> DataFrame:
     """PQ-ADC search: encode → ADC top-`n_candidates` (one map-only
     scan + TakeOrderedAndProject, no shuffle) → exact cosine rescore of
     the candidates → top-k (score desc, id asc).  Output matches every
-    other search surface: (id, score) with the EXACT cosine score, so
-    quantization affects recall only, never the reported score.
+    other search surface: (id, score, *extra_cols) with the EXACT
+    cosine score, so quantization affects recall only, never the
+    reported score. ``extra_cols`` of ``vectors`` ride through both
+    top-k tiers, so the winners need no second read.
 
     Encoding happens inline here for self-containment; a deployment
     materializes `pq_encode` once into a codes table and pays only the
@@ -257,6 +260,7 @@ def pq_adc_search(
         vectors.select(
             F.col(id_col),
             F.col(vec_col),
+            *extra_cols,
             pq_adc_scores(enc(F.col(vec_col)), adc).alias("_adc"),
         )
         .orderBy(F.desc("_adc"), F.asc(id_col))
@@ -268,7 +272,10 @@ def pq_adc_search(
         dot_product(F.col(vec_col), qn) / norm
     )
     return (
-        cand.select(F.col(id_col), F.round(score, SCORE_DECIMALS).alias("score"))
+        cand.select(
+            F.col(id_col), F.round(score, SCORE_DECIMALS).alias("score"),
+            *extra_cols,
+        )
         .orderBy(F.desc("score"), F.asc(id_col))
         .limit(k)
     )

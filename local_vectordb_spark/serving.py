@@ -123,6 +123,17 @@ def _record_df(db: VectorDB, kind: str, body: dict, item_id: str):
 _WRITE_LOCK = threading.Lock()
 
 
+def _json_int(body: dict, name: str, default: int | None = None) -> int | None:
+    """``body[name]`` as a JSON integer (``default`` when absent). A
+    bool, float or string is a ValueError, which answers 400: int()
+    would read ``true`` as 1 and ``2.7`` as 2 and serve a request the
+    client did not send."""
+    v = body.get(name, default)
+    if v is not None and (isinstance(v, bool) or not isinstance(v, int)):
+        raise ValueError(f"{name} must be an integer, got {v!r}")
+    return v
+
+
 class _Handler(BaseHTTPRequestHandler):
     db: VectorDB  # injected by make_server
 
@@ -474,29 +485,16 @@ class _Handler(BaseHTTPRequestHandler):
         if index_type not in INDEX_TYPES:
             self._send(400, {"detail": f"unknown index {index_type!r}"})
             return
-        # time-travel SEARCH (r12): body {"version": N} pins the scan,
-        # the stored index artifacts, and the auto dispatch's count to
-        # a retained generation — the /query face of GET's ?version=N.
-        # A LIVE query is pinned to one pointer read taken HERE, so the
-        # X-Table-Version echo below names exactly the generation the
-        # search served (search()'s own internal read could race a
-        # concurrent commit against a second read for the header).
-        # strict parse like the GET routes (r12 ADVICE): int() would
-        # silently truncate a float pin (3.7 -> 3) or coerce a boolean
-        # (true -> 1) and serve a DIFFERENT generation than the client
-        # asked for — a malformed pin is a 400, never a reinterpreted one
-        raw_version = body.get("version")
-        if raw_version is not None and (
-            isinstance(raw_version, bool) or not isinstance(raw_version, int)
-        ):
-            self._send(
-                400, {"detail": f"version must be an integer, got {raw_version!r}"}
-            )
-            return
-        version = raw_version
+        # ``version`` pins the scan, the stored index artifacts and the
+        # auto dispatch's count to a retained generation (the /query
+        # face of GET's ?version=N). A live query is pinned to the ONE
+        # pointer read taken here, so X-Table-Version names exactly the
+        # generation served, never a second read racing a commit.
+        version = _json_int(body, "version")
+        limit = _json_int(body, "limit", 5)  # search() refuses < 0: 400
         if version is not None and version < 0:
-            # same contract as GET: never a silent live read under a
-            # client that believes it pinned a snapshot (r11 ADVICE)
+            # as on GET: a negative pin is a missing generation, never
+            # a silent live read
             self._send(404, {"detail": f"version {version} never existed"})
             return
         live_v = self.db._current_version("chunks")
@@ -506,17 +504,17 @@ class _Handler(BaseHTTPRequestHandler):
             hits = self.db.search(
                 query=body.get("text"),
                 index_type=index_type,
-                k=int(body.get("limit", 5)),
+                k=limit,
                 metadata=body.get("metadata") or None,
-                # nsw traversal knobs (r10 ADVICE) — validated by
-                # search(): passing them with a non-nsw index answers 400
-                beam=None if body.get("beam") is None else int(body["beam"]),
-                hops=None if body.get("hops") is None else int(body["hops"]),
+                # nsw traversal knobs; search() refuses them (400) with
+                # any other index
+                beam=_json_int(body, "beam"),
+                hops=_json_int(body, "hops"),
                 version=pin,
             ).collect()
         except ValueError as e:
-            # a GC'd / future / negative version is a missing RESOURCE
-            # like on the GET routes; other ValueErrors are bad requests
+            # a GC'd / future version is a missing RESOURCE, as on the
+            # GET routes; other ValueErrors are bad requests
             if version is not None and "not available" in str(e):
                 self._send(404, {"detail": str(e)})
                 return

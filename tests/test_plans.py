@@ -6,6 +6,8 @@ should fail HERE, not in a cluster bill.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import functions as F
 
 from local_vectordb_spark import plans, queries
@@ -966,3 +968,55 @@ def test_point_get_is_partition_pruned_on_bucketed_store(spark, tmp_path):
     assert "bucket" not in hit.columns
     assert d.get("chunks", "does-not-exist").count() == 0
     assert d.exists("chunks", "gX") and not d.exists("chunks", "nope")
+
+
+def test_single_search_plans_rank_and_hydrate_without_range_exchange(
+    spark, tmp_path
+):
+    """No single-query search plan of any strategy, filtered or not,
+    orders its result with a range exchange (a sampling job plus a
+    shuffle): a form that ranks base rows carries ``content`` through
+    its own TakeOrderedAndProject, and a form ranked from an artifact
+    orders its <= k hydrated winners with a top-k. The forms that rank
+    base rows (cosine, auto, pq) join nothing and read the
+    generation's ``content`` only in the ranking scan, which also reads
+    the vectors."""
+    import uuid as _uuid
+
+    from local_vectordb_spark.api import INDEX_TYPES, VectorDB
+    from local_vectordb_spark.sources.json_records import SCHEMAS
+
+    d = VectorDB(spark, str(tmp_path))
+    lib, doc = str(_uuid.uuid4()), str(_uuid.uuid4())
+    d.add("libraries", spark.createDataFrame(
+        [(lib, {}, None, None, "l")], SCHEMAS["libraries"]))
+    d.add("documents", spark.createDataFrame(
+        [(doc, {}, None, None, "d", lib)], SCHEMAS["documents"]))
+    d.add("chunks", spark.createDataFrame(
+        [(f"h{i:02d}", {"par": str(i % 2)}, None, None,
+          f"plan hydration row {i}", None, doc) for i in range(24)],
+        SCHEMAS["chunks"]))
+    v = d._current_version("chunks")
+    for index_type in INDEX_TYPES:
+        for metadata in (None, {"par": "1"}):
+            hits = d.search("plan hydration row 3", index_type=index_type,
+                            k=5, metadata=metadata)
+            plan = plans.plan_string(hits)
+            where = (index_type, metadata)
+            assert "rangepartitioning" not in plan, (where, plan)
+            if index_type not in ("cosine", "auto", "pq"):
+                continue
+            assert plans.broadcast_join_count(hits) == 0, (where, plan)
+            # formatted mode: one detail block per scan node
+            schemas = [
+                block.split("ReadSchema: ", 1)[1].splitlines()[0]
+                for block in plan.split("\n\n")
+                if re.match(r"\(\d+\) Scan parquet", block.strip())
+                and f"chunks/v{v}" in block
+            ]
+            content_scans = [s for s in schemas if "content" in s]
+            assert len(content_scans) == 1, (where, plan)
+            assert "embedding" in content_scans[0], (where, plan)
+    # the mmr re-rank hydrates its winners by a join, ordered by a top-k
+    mmr = d.search("plan hydration row 3", k=3, diversify="mmr")
+    assert "rangepartitioning" not in plans.plan_string(mmr)

@@ -3,7 +3,9 @@
 Every answer the HTTP layer serves must equal the facade's own
 ``VectorDB.search``; query text is embedded on the driver without a
 Spark job; a Column embedder still takes the job path; an embedder
-failure answers 500. The full HTTP e2e suite is test_serving.py."""
+failure answers 500; a warm search runs the pinned number of jobs; a
+``limit`` that is not a non-negative JSON integer answers 400. The
+full HTTP e2e suite is test_serving.py."""
 
 from __future__ import annotations
 
@@ -112,14 +114,16 @@ def test_query_route_matches_facade_search(db, index_type):
 
 
 def test_warm_search_runs_no_embedding_job(spark, db):
-    """A warm cosine search runs 4 Spark jobs, none of them at the
+    """A warm cosine search is ONE Spark job — the ranking scan, which
+    carries the winners' content — and no job sits at the
     query-embedding call site. The Column-embedder fallback (md5 over
-    the same store) is the fifth job this saves, and it does return
-    the same hits as searching with that embedder's vector directly."""
+    the same store) adds the one embedding job this saves, and it does
+    return the same hits as searching with that embedder's vector
+    directly."""
     search = functools.partial(db.search, TEXTS[3], index_type="cosine", k=5)
     search().collect()  # warm: artifact reads, plan compile
     n, sites = _jobs(spark, lambda: search().collect())
-    assert n == 4
+    assert n == 1
     assert _embed_sites(sites) == []
 
     md5_64 = functools.partial(E.md5_embedding, dim=64)
@@ -138,8 +142,112 @@ def test_warm_search_runs_no_embedding_job(spark, db):
     got = col_search().collect()
     assert got == col_db.search(query_vec=qv, index_type="cosine", k=5).collect()
     n, sites = _jobs(spark, lambda: col_search().collect())
-    assert n == 5
+    assert n == 2
     assert len(_embed_sites(sites)) >= 1
+
+
+# the ceiling: warm jobs per search when every form hydrated through a
+# broadcast join and a range-partitioned sort (a sampling job plus a
+# shuffle)
+JOBS_BEFORE = {"cosine": 4, "auto": 4, "sign": 5, "sq8": 5, "pq": 4}
+# the forms that rank rows of the generation itself hydrate in that one
+# ranking job; sign hydrates by one join, sq8 collects its candidates
+JOBS_NOW = {"cosine": 1, "auto": 1, "sign": 2, "sq8": 2, "pq": 1}
+
+
+@pytest.mark.parametrize("index_type", sorted(JOBS_NOW))
+def test_warm_search_job_count_per_strategy(spark, db, index_type):
+    search = functools.partial(
+        db.search, TEXTS[11], index_type=index_type, k=5
+    )
+    want = search().collect()  # warm: artifact builds, plan compile
+    got = []
+    n, _ = _jobs(spark, lambda: got.extend(search().collect()))
+    assert got == want and got[0].content == TEXTS[11]
+    assert n == JOBS_NOW[index_type] < JOBS_BEFORE[index_type]
+
+
+def test_filtered_sq8_reranks_the_probe_without_a_second_filter(spark, db):
+    """The sq8 candidates already satisfy the metadata filter (the
+    layout probe semi-joins the filtered ids), so the rerank reads only
+    the point read: the filtered search returns the exact top-k of the
+    filtered approx candidates and runs exactly one job more than
+    unfiltered: the filter's semi join inside the probe."""
+    from local_vectordb_spark.api import SQ8_RERANK_DEPTH
+    from local_vectordb_spark.operators import knn
+
+    qv = [float(x) for x in db.table("chunks").filter(F.col("id") == "c04")
+          .first().embedding]
+    k, label = 5, {"label": "a"}
+    v = db._current_version("chunks")
+    cand = db._sq8_approx(
+        qv, db._chunks_for_search(label), label, v,
+        max(8 * k, SQ8_RERANK_DEPTH),
+    ).select("id")
+    want = knn.knn_brute_force(
+        db.table("chunks").join(cand, "id", "leftsemi"), qv, k=k,
+        id_col="id", extra_cols=("content",),
+    ).collect()
+    search = functools.partial(
+        db.search, query_vec=qv, index_type="sq8", k=k, metadata=label
+    )
+    assert search().collect() == want
+    assert all(int(r.id[1:]) % 2 == 0 for r in want)
+    n_filtered, _ = _jobs(spark, lambda: search().collect())
+    db.search(query_vec=qv, index_type="sq8", k=k).collect()
+    n_plain, _ = _jobs(
+        spark, lambda: db.search(query_vec=qv, index_type="sq8", k=k).collect()
+    )
+    assert n_filtered == n_plain + 1
+
+
+@pytest.mark.parametrize("index_type", ["cosine", "sign", "sq8", "pq", "auto"])
+def test_query_negative_limit_answers_400(db, index_type):
+    with _serving(db) as base:
+        code, body = _query(
+            base, {"text": TEXTS[1], "index_type": index_type, "limit": -1}
+        )
+    assert code == 400
+    assert "k must be >= 0" in body["detail"]
+
+
+@pytest.mark.parametrize("field, value", [
+    ("limit", True), ("limit", 2.7), ("limit", "5"),
+    ("beam", True), ("beam", 2.7), ("hops", "1"),
+])
+def test_query_non_integer_count_answers_400(db, field, value):
+    """A count that is not a JSON integer is refused, never read as
+    ``int(value)`` (true -> 1, 2.7 -> 2)."""
+    with _serving(db) as base:
+        code, body = _query(
+            base, {"text": TEXTS[1], "index_type": "nsw", field: value}
+        )
+    assert code == 400
+    assert f"{field} must be an integer" in body["detail"]
+
+
+def test_query_limit_zero_serves_no_rows(db):
+    with _serving(db) as base:
+        code, body = _query(
+            base, {"text": TEXTS[1], "index_type": "cosine", "limit": 0}
+        )
+    assert code == 200 and body["results"] == []
+
+
+def test_negative_k_refused_before_any_embedding(spark, db):
+    """search and search_batch refuse k < 0 as a ValueError before the
+    query text reaches the embedder (whose failure would otherwise be
+    the error raised)."""
+    failing = VectorDB(
+        spark, db.root,
+        embedder=E.api_embedding_udf(
+            transport=_gives_up, max_retries=0, backoff_base_s=0.0
+        ),
+    )
+    with pytest.raises(ValueError, match="k must be >= 0"):
+        failing.search("anything", index_type="cosine", k=-1)
+    with pytest.raises(ValueError, match="k must be >= 0"):
+        failing.search_batch([(0, "anything")], index_type="cosine", k=-1)
 
 
 def _gives_up(chunk):
