@@ -371,37 +371,43 @@ def shingles(text: Column, n: int = 3) -> Column:
     """Distinct word n-gram shingles of the normalized text — the unit
     set for Jaccard/MinHash dedup.
 
-    Built as a constant-count zip_with chain over n shifted slices of
-    the token array (the expression-evaluation discipline from
-    ``winnow_fingerprints``): the original
-    ``transform(sequence(...), i -> concat_ws(slice(toks, i+1, n)))``
-    CAPTURES ``toks`` in the lambda, re-running the whole
-    normalize+tokenize pipeline once PER GRAM — O(words²) regex work
-    per document, ~10× the runtime of the shingle scan at sf0.1 under
-    the 4.1.x interpreted HOF path. Semantics are unchanged, including
-    the edges the SQL oracles pin: documents with fewer than n tokens
+    One-evaluation invariant: the normalize+tokenize pipeline (lower →
+    regexp_replace → trim → split → filter) is evaluated ONCE per
+    document. The token array is bound as the argument of one
+    higher-order function, ``element_at(transform(array(toks), t ->
+    grams_of(t)), 1)``, so every use inside ``grams_of`` is the lambda
+    variable ``t``. Written inline, the ~7 copies of ``toks`` (gram
+    count, each shifted slice, the empty guard) inside ``zip_with``'s
+    arguments run under interpreted ``eval``, where subexpression
+    elimination does not apply: the regex pipeline ran ~7× per document.
+
+    Grams are a constant-count zip_with chain over n shifted slices
+    (the expression-evaluation discipline from ``winnow_fingerprints``).
+    The edges the SQL oracles pin: documents with fewer than n tokens
     yield ONE shorter gram (join of the available tokens), and empty/
-    whitespace-only/NULL text yields [''] (the pre-rewrite Column form
-    emitted [''] for NULL too; the coalesce keeps that, where the bare
-    chain would propagate NULL and silently drop the doc from dedup).
+    whitespace-only/NULL text yields [''] (the coalesce keeps NULL
+    docs in dedup, where the bare chain would propagate NULL).
     """
+
+    def grams_of(toks: Column) -> Column:
+        m = F.greatest(F.size(toks) - n, F.lit(0)) + F.lit(1)
+        grams = F.slice(toks, 1, m)
+        for j in range(1, n):
+            # tail grams run past the array: zip_with pads with null —
+            # keep the shorter gram, matching concat_ws-of-available
+            grams = F.zip_with(
+                grams,
+                F.slice(toks, j + 1, m),
+                lambda g, t: F.when(t.isNull(), g).otherwise(
+                    F.concat(g, F.lit(" "), t)
+                ),
+            )
+        return F.when(F.size(toks) == 0, F.array(F.lit(""))).otherwise(grams)
+
     toks = F.coalesce(
         tokens(normalize_text(text)), F.array().cast("array<string>")
     )
-    m = F.greatest(F.size(toks) - n, F.lit(0)) + F.lit(1)
-    grams = F.slice(toks, 1, m)
-    for j in range(1, n):
-        # tail grams run past the array: zip_with pads with null — keep
-        # the shorter gram, matching concat_ws-of-available semantics
-        grams = F.zip_with(
-            grams,
-            F.slice(toks, j + 1, m),
-            lambda g, t: F.when(t.isNull(), g).otherwise(
-                F.concat(g, F.lit(" "), t)
-            ),
-        )
-    grams = F.when(F.size(toks) == 0, F.array(F.lit(""))).otherwise(grams)
-    return F.array_distinct(grams)
+    return F.array_distinct(F.element_at(F.transform(F.array(toks), grams_of), 1))
 
 
 def word_ngrams(text: Column, n: int = 2) -> Column:

@@ -12,6 +12,7 @@ import os
 import threading
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import LongType, StructType
 
 TABLES = (
     "region",
@@ -54,6 +55,13 @@ def get_spark(app_name: str = "local_vectordb_spark") -> SparkSession:
         # job and stage counters come from the status store
         # (tools/profile_query.py, perfbench), which needs no UI
         .config("spark.ui.enabled", "false")
+        # Generated-class cache. The default of 100 entries is split over
+        # Guava's 4 cache segments, each evicting on its own, so a working
+        # set near 100 thrashes: perfbench's curate pass (MinHash, capped
+        # n-gram Jaccard, SimHash, quality) needs ~100 classes, and at the
+        # default Janino recompiled 28-30 of them on every pass, each then
+        # JIT-compiled again. At 1000 a repeated pass recompiles none.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     if not SparkSession.getActiveSession():
         builder = builder.master(f"local[{cpus}]")
@@ -128,21 +136,53 @@ def materialize_once(path: str, write_fn) -> str:
     return path
 
 
+# (path, st_mtime_ns, st_size) -> StructType inferred from the footers.
+# Process-wide: the key names the file's bytes, and load_table sets the
+# one read conf the inference depends on, so every session may share it.
+_SCHEMA_CACHE: dict[tuple[str, int, int], StructType] = {}
+_SCHEMA_CACHE_MAX = 64
+_SCHEMA_LOCK = threading.Lock()
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one star-schema table from a scale-factor directory.
+
+    The parquet schema is inferred once per file: it is cached under the
+    file's ``(path, st_mtime_ns, st_size)`` fingerprint (the one
+    :func:`fixture_cache_dir` uses), so rewriting the file infers again,
+    and a hit reads with that schema instead of running Spark's footer
+    inference job. Every call still returns a FRESH relation, never a
+    shared DataFrame: two loads of one table in one query get distinct
+    attribute ids, so a self-join resolves its sides.
 
     Nanosecond parquet timestamps (events.ts) arrive as long under
     ``nanosAsLong`` and are floored to microsecond TIMESTAMP here.
     """
     from pyspark.sql import functions as F
-    from pyspark.sql.types import LongType
 
     # The driver harness supplies its OWN SparkSession, which won't have the
     # nanosAsLong conf from get_spark(); it's a runtime-settable SQL conf, so
     # set it here unconditionally — without it, reading events.parquet
     # (TIMESTAMP(NANOS)) raises PARQUET_TYPE_ILLEGAL.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    try:
+        st = os.stat(path)
+        key = (path, st.st_mtime_ns, st.st_size)
+    except OSError:
+        key = None  # missing path: the plain read raises PATH_NOT_FOUND
+    with _SCHEMA_LOCK:
+        schema = _SCHEMA_CACHE.pop(key, None)
+    if schema is None:
+        df = spark.read.parquet(path)
+        schema = df.schema
+    else:
+        df = spark.read.schema(schema).parquet(path)
+    if key is not None:
+        with _SCHEMA_LOCK:
+            _SCHEMA_CACHE[key] = schema  # re-insert: dict order is the LRU order
+            while len(_SCHEMA_CACHE) > _SCHEMA_CACHE_MAX:
+                _SCHEMA_CACHE.pop(next(iter(_SCHEMA_CACHE)))
     if name == "events" and isinstance(df.schema["ts"].dataType, LongType):
         # integer `div` — double-precision `/` loses exactness above 2^53 ns
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))

@@ -324,3 +324,58 @@ def test_simhash_votes_arrow_parity(spark, sf_dir):
             }
             assert arrow == expr
         assert arrow[9_100_001] != 0 and arrow[9_100_003] != 0
+
+
+# shingles() of these rows as computed before the token array was bound
+# once: NULL, empty, whitespace-only, 1 and 2 tokens at n=3, repeated
+# grams, and tab/newline/CR/mixed case
+SHINGLE_EDGES = [
+    (0, None, [""]),
+    (1, "", [""]),
+    (2, "   \t \n ", [""]),
+    (3, "One", ["one"]),
+    (4, "one Two", ["one two"]),
+    (5, "a b c", ["a b c"]),
+    (6, "a b a b a b a", ["a b a", "b a b"]),
+    (
+        7,
+        "Foo\tBAR\nbaz  qux\r\nFoo bar BAZ",
+        ["foo bar baz", "bar baz qux", "baz qux foo", "qux foo bar"],
+    ),
+    (8, "x y z x y z x y z", ["x y z", "y z x", "z x y"]),
+    (9, "  Lead and trail  ", ["lead and trail"]),
+]
+
+
+def test_shingles_tokenize_once_and_keep_their_edges(spark):
+    """The normalize+tokenize pipeline appears once in the built
+    expression, and the output equals the earlier form's on every
+    edge row."""
+    from local_vectordb_spark.functions import text as T
+
+    col = T.shingles(F.col("t"), 3)
+    assert str(col).count("regexp_replace") == 1
+    df = local_rows_df(spark, [(i, t) for i, t, _ in SHINGLE_EDGES], "i int, t string")
+    got = {r["i"]: r["s"] for r in df.select("i", col.alias("s")).collect()}
+    assert got == {i: want for i, _, want in SHINGLE_EDGES}
+
+
+def test_shingles_identical_on_sf01_documents(spark, sf_dir):
+    """Row-for-row shingle arrays over the sf0.1 documents table hash
+    to the digest of the earlier (per-use tokenizing) form."""
+    import hashlib
+    import os
+
+    from local_vectordb_spark.functions import text as T
+    from local_vectordb_spark.session import load_table
+
+    docs = load_table(spark, os.path.join(os.path.dirname(sf_dir), "sf0.1"), "documents")
+    h, n = hashlib.sha256(), 0
+    rows = docs.select("doc_id", T.shingles(F.col("text"), 3).alias("s"))
+    for r in rows.orderBy("doc_id").collect():
+        h.update(repr((r["doc_id"], list(r["s"]))).encode())
+        n += 1
+    assert n == 5000
+    assert h.hexdigest() == (
+        "59ae9a0a34a0387252b414ec2b0e922523f78282774fbd0a8ceb0494b3835b8c"
+    )

@@ -19,12 +19,14 @@ routes, same flow:
 from __future__ import annotations
 
 import json
+import os
 import sys
 import tempfile
 import threading
 import urllib.request
 
-sys.path.insert(0, "/root/repo")
+# the checkout this tool belongs to, whatever its path
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from local_vectordb_spark.api import VectorDB  # noqa: E402
 from local_vectordb_spark.serving import make_server  # noqa: E402

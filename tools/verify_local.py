@@ -9,12 +9,14 @@ Usage: python tools/verify_local.py [sf_dir] [name ...]
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+# the checkout this tool belongs to, whatever its path
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from __spark_entry__ import oracle_sql, queries  # noqa: E402
 from local_vectordb_spark.session import TABLES, get_spark  # noqa: E402
