@@ -15,8 +15,9 @@ DataFrame operations over parquet-backed tables:
   (/root/reference/src/models/collection.py:179-215; unknown type is a
   ValueError where the reference returns HTTP 400), with the Q8
   metadata filter applied ahead of scoring; Q6 hydration rides the
-  ranking scan where a form ranks base rows, and is one join of the
-  k winners otherwise (see `_Scope`);
+  ranking scan where the ranked rows carry content (the generation,
+  or the covering sign layout), and is one join of the k winners
+  otherwise (see `_Scope`);
 - storage is read-merge-write on plain parquet with VERSIONED
   DIRECTORY commits: every write stages into a private `_stage_*`
   directory, claims its version slot with an atomic os.rename to
@@ -179,6 +180,44 @@ _CHILDREN = {"libraries": "documents", "documents": "chunks"}
 # ---------------- search strategies (Q7 dispatch) ----------------
 
 
+def _metadata_filtered(rows: DataFrame, metadata: dict | None) -> DataFrame:
+    """``rows`` whose ``metadata`` map holds every (key, str(value)) of
+    the Q8 filter (declared-but-unimplemented in the reference); no
+    filter for None or {}. The one predicate both the generation scan
+    (`_chunks_for_search`) and the sign layout (`_sign_source`) apply,
+    so the two cannot disagree on which rows a filter keeps."""
+    for key, val in (metadata or {}).items():
+        rows = rows.filter(F.col("metadata")[key] == str(val))
+    return rows
+
+
+# the columns of the covering sign layout `_sign_v{N}`: every column a
+# sign, sq8 or pq search reads, so each ranks, filters and hydrates from
+# the probed layout rows alone
+SIGN_LAYOUT_COLS = (
+    "id", "embedding", "metadata", "content", "bucket", "pq", "vmin",
+    "vmax", "codes",
+)
+
+
+def _sign_rows(chunks: DataFrame) -> DataFrame:
+    """The covering sign layout's rows of ``chunks``: SIGN_LAYOUT_COLS,
+    every derived column a pure expression of the row's own vector —
+    the 4-bit axis-sign ``bucket``, the SQ8 triple (``vmin``, ``vmax``,
+    ``codes``) and the md5-codebook PQ codes ``pq`` (NULL for a
+    dimension the book cannot split). The full build, the incremental
+    build and the no-layout fallback all derive rows here, so a
+    rewritten bucket holds exactly the rows a fresh build writes."""
+    from local_vectordb_spark.functions import vector as V
+    from local_vectordb_spark.operators import pq as pq_ops
+
+    return V.sq8_attach(chunks.select(
+        "id", "embedding", "metadata", "content",
+        ivf.sign_bucket("embedding", n_bits=4).alias("bucket"),
+        pq_ops.pq_encode_md5()(F.col("embedding")).alias("pq"),
+    ))
+
+
 class _Scope:
     """What one search or batch reads, fixed before any strategy form
     runs: generation ``disk_v`` of the chunks table (the caller's ONE
@@ -192,13 +231,13 @@ class _Scope:
     such commit. Single-query forms also read ``query`` (text or None),
     ``qvec`` and the nsw ``beam``/``hops``.
 
-    A single-query form that ranks rows of the generation itself —
-    cosine, pq, the exact scan of a filtered or empty nsw search, and
-    sq8's rerank over its point read — carries their ``content``
-    through its top-k (``extra_cols``), so the one job that ranks also
-    hydrates. A form ranked from an artifact (sign, ivf, the nsw
-    traversal, hybrid), mmr and every batch return (id, score) and
-    are hydrated by :meth:`hydrate`."""
+    A single-query form whose ranked rows carry ``content`` — cosine
+    and a filtered or empty nsw over the generation, sign and pq over
+    the covering sign layout (`_sign_source`), sq8's rerank over its
+    point read — carries it through its top-k (``extra_cols``), so the
+    one job that ranks also hydrates. A form that ranks rows without
+    content (ivf, the nsw traversal, hybrid), mmr and every batch
+    return (id, score) and are hydrated by :meth:`hydrate`."""
 
     def __init__(self, db, disk_v, metadata, k, query=None, qvec=None,
                  beam=None, hops=None):
@@ -262,9 +301,11 @@ def _sign(s: _Scope) -> DataFrame:
     """Deterministic IVF tier: bucket = the vector's axis-sign bits, no
     trained state, so results are reproducible in any engine (the
     strategy e2e flows hash-check). Exact cosine over the Hamming-1
-    probe of the query's bucket."""
-    cand = s.db._sign_source(s.chunks, s.metadata, s.disk_v, s.qvec)
-    return knn.knn_brute_force(cand, s.qvec, k=s.k, id_col="id")
+    probe of the query's bucket, hydrated from the layout rows it
+    ranks."""
+    return s.exact(
+        s.db._sign_source(s.chunks, s.metadata, s.disk_v, s.qvec)
+    )
 
 
 def _sign_table(s: _Scope, qdf: DataFrame) -> DataFrame:
@@ -316,7 +357,7 @@ def _sq8_table(s: _Scope, qdf: DataFrame) -> DataFrame:
     from local_vectordb_spark.operators.knn import SCORE_DECIMALS
 
     db = s.db
-    recon = db._sign_source(s.chunks, s.metadata, s.disk_v, sq8=True).select(
+    recon = db._sign_source(s.chunks, s.metadata, s.disk_v).select(
         "id", "bucket",
         V.sq8_reconstruct(
             F.col("codes"), F.col("vmin"), F.col("vmax")
@@ -462,13 +503,15 @@ def _hybrid(s: _Scope) -> DataFrame:
 
 def _pq(s: _Scope) -> DataFrame:
     """Memory-compressed tier (operators/pq.py): ADC candidate scan
-    over md5-codebook codes, exact cosine rescore. The per-query ADC
-    table makes it a single-query surface."""
+    over the md5-codebook codes the sign layout stores (``pq``), exact
+    cosine rescore, content carried from the same rows. The per-query
+    ADC table makes it a single-query surface."""
     from local_vectordb_spark.operators import pq as pq_ops
 
     return pq_ops.pq_adc_search(
-        s.chunks, s.qvec, k=s.k, n_candidates=max(50, 5 * s.k), id_col="id",
-        extra_cols=("content",),
+        s.db._sign_source(s.chunks, s.metadata, s.disk_v), s.qvec, k=s.k,
+        n_candidates=max(50, 5 * s.k), id_col="id", extra_cols=("content",),
+        codes_col="pq",
     )
 
 
@@ -1370,11 +1413,9 @@ class VectorDB:
     def _chunks_for_search(
         self, metadata: dict | None, version: int | None = None
     ) -> DataFrame:
-        chunks = self.table("chunks", version=version)
-        if metadata:  # Q8 — declared-but-unimplemented in the reference
-            for key, val in metadata.items():
-                chunks = chunks.filter(F.col("metadata")[key] == str(val))
-        return chunks
+        return _metadata_filtered(
+            self.table("chunks", version=version), metadata
+        )
 
     def _chunk_count(self, version: int | None = None) -> int:
         """Corpus size for the auto-strategy dispatch, cached per table
@@ -1451,13 +1492,15 @@ class VectorDB:
         (src/models/search.py:17-31) — at most ``k`` rows in (score
         desc, id asc) order; a negative ``k`` is a ValueError.
 
-        Plan shape: a form that ranks rows of the generation (cosine,
-        pq, a filtered or empty nsw, sq8's rerank) carries ``content``
-        through its own TakeOrderedAndProject, so the whole search is
-        one ranking job with no join and no shuffle. Any other form
-        (sign, ivf, the nsw traversal, hybrid) and mmr hydrate with one
-        broadcast join of their <= k winners, ordered by a top-k, never
-        by a range exchange.
+        Plan shape: a form whose ranked rows carry ``content`` (cosine
+        and a filtered or empty nsw over the generation, sign and pq
+        over the covering sign layout, sq8's rerank over its point
+        read) takes it through its own TakeOrderedAndProject, so the
+        whole search is one ranking job with no join; a metadata filter
+        is a predicate on those same rows. Any other form (ivf, the nsw
+        traversal, hybrid) and mmr hydrate with one broadcast join of
+        their <= k winners, ordered by a top-k, never by a range
+        exchange.
 
         The query text is embedded on the driver (``_embed_texts``: a
         pandas-UDF embedder is called in-process, so no Spark job and
@@ -1619,36 +1662,28 @@ class VectorDB:
         metadata: dict | None,
         disk_v: int,
         qvec=None,
-        sq8: bool = False,
     ) -> DataFrame:
-        """The sign tier's rows of generation ``disk_v`` with a
-        ``bucket`` column (the 4-bit axis-sign bucket), cut to the
-        Hamming-1 probe of ``qvec`` when one is given — the one place
-        the stored-layout choice is made, for sign, sq8 and the nsw
-        seed scan. A written store serves the persisted layout
-        (`_sign_stored`), so a probe prunes partition DIRECTORIES
-        instead of filtering rows; a metadata filter intersects it with
-        a semi join against the filtered ``chunks`` ids, whose
-        base-table side is an id+metadata column-pruned scan, so
-        embedding bytes are read only for probed partitions. A store
-        with no rows at ``disk_v`` — or, for ``sq8``, a layout generation
-        without the SQ8 code columns — derives the bucket from the real
-        vector of the already-filtered ``chunks`` (and attaches the
-        codes): same rows, no byte win."""
-        from local_vectordb_spark.functions import vector as V
-
+        """The sign tier's rows of generation ``disk_v`` that pass the
+        ``metadata`` filter, with every SIGN_LAYOUT_COLS column, cut to
+        the Hamming-1 probe of ``qvec`` when one is given — the one
+        place the stored-layout choice is made, for sign, sq8, pq and
+        the nsw seed scan. A written store serves the covering layout
+        (`_sign_stored`): the probe prunes partition DIRECTORIES, the
+        filter reads the layout rows' own ``metadata`` and the winners'
+        ``content`` comes from the same rows, so no search joins or
+        scans the generation. A store with no rows at ``disk_v``, or a
+        layout written before it carried every serving column, derives
+        the same rows from the already-filtered ``chunks`` instead
+        (`_sign_rows`): same answers, no byte win."""
         src = self._sign_stored(disk_v) if self._has_rows(disk_v) else None
-        if src is None or sq8 and "codes" not in src.columns:
-            src = (V.sq8_attach(chunks) if sq8 else chunks).withColumn(
-                "bucket", ivf.sign_bucket("embedding", n_bits=4)
-            )
-            metadata = None  # chunks already carries the filter
+        if src is None or not set(SIGN_LAYOUT_COLS) <= set(src.columns):
+            src = _sign_rows(chunks)
+        else:
+            src = _metadata_filtered(src, metadata)
         if qvec is not None:
             src = src.filter(
                 F.col("bucket").isin(ivf.sign_probe(qvec, n_bits=4))
             )
-        if metadata is not None:
-            src = src.join(chunks.select("id"), "id", "leftsemi")
         return src
 
     def _sq8_approx(
@@ -1666,7 +1701,7 @@ class VectorDB:
         embedding bytes), scored on the reconstructed vectors."""
         from local_vectordb_spark.functions import vector as V
 
-        cand = self._sign_source(chunks, metadata, disk_v, qvec, sq8=True)
+        cand = self._sign_source(chunks, metadata, disk_v, qvec)
         return knn.knn_brute_force(
             cand.select("id", "vmin", "vmax", "codes").withColumn(
                 "embedding",
@@ -1805,14 +1840,14 @@ class VectorDB:
         `_sign_v{version}` (rewrite_partitions): only the sign buckets
         the net delta's old and new rows fall in are rewritten; every
         other bucket is hard-linked. The row set equals the full
-        build's, because the bucket and the SQ8 triple are pure
-        expressions of the vector, so rewritten buckets carry the same
-        columns the linked ones hold. A previous layout without the SQ8
-        columns raises AnalysisException in the rewrite, and the full
-        build upgrades it. Returns True."""
+        build's: the net upserts carry the whole chunk row, and
+        `_sign_rows` derives the same columns from it, so a content-
+        or metadata-only update rewrites its row's bucket too. A
+        previous layout without every SIGN_LAYOUT_COLS column raises
+        AnalysisException in the rewrite, and the full build upgrades
+        it. Returns True."""
         import json as _json
 
-        from local_vectordb_spark.functions import vector as V
         from local_vectordb_spark.operators.incremental import (
             compose_delta_chain,
             rewrite_partitions,
@@ -1820,7 +1855,7 @@ class VectorDB:
 
         ups, olds = compose_delta_chain(steps, key_col="id")
         bucket = ivf.sign_bucket("embedding", n_bits=4).alias("bucket")
-        rows = V.sq8_attach(ups.select("id", "embedding", bucket))
+        rows = _sign_rows(ups)
         touched = {
             r.bucket
             for r in rows.select("bucket")
@@ -2060,33 +2095,25 @@ class VectorDB:
         )))
 
     def _sign_stored(self, version: int) -> DataFrame:
-        """PERSISTED sign-bucket layout: (id, embedding) written
-        hive-partitioned by the 4-bit sign bucket as `_sign_v{version}`
-        beside the table data, the physical form that turns the sign
-        strategy's probe from a full-table row filter into PARTITION
-        PRUNING (the scan reads ~(n_bits+1)/2^n_bits of the FILES; the
-        plan shows PartitionFilters, pinned in tests/test_plans.py).
-        This is the layout the `auto` strategy serves past
-        AUTO_BRUTE_MAX, i.e. the 100 TB default path. Same contract as
-        the other stored artifacts (_stored_artifact): built at most
-        once per table version across processes, pinned to the
-        `v{version}` snapshot, GC'd with its version."""
-        from local_vectordb_spark.functions import vector as V
+        """PERSISTED covering sign layout `_sign_v{version}`: every
+        SIGN_LAYOUT_COLS column of every row (`_sign_rows`),
+        hive-partitioned by the 4-bit sign bucket beside the table
+        data. The sign probe is PARTITION PRUNING (the scan reads
+        ~(n_bits+1)/2^n_bits of the FILES; the plan shows
+        PartitionFilters, pinned in tests/test_plans.py), and a sign,
+        sq8 or pq search filters, ranks and hydrates from these rows
+        alone. Parquet is columnar, so each reads only its columns: sign
+        the fp ``embedding``, sq8's probe the SQ8 triple, pq the ``pq``
+        codes, and every one ``metadata`` when filtered and
+        ``content`` for its winners. This is the layout the `auto`
+        strategy serves past AUTO_BRUTE_MAX, i.e. the 100 TB default
+        path. Same contract as the other stored artifacts
+        (_stored_artifact): built at most once per table version
+        across processes, pinned to the `v{version}` snapshot, GC'd
+        with its version."""
 
         def _full(p: str) -> None:
-            # the SQ8 column triple rides in the SAME layout files:
-            # parquet is columnar, so the sign tier's (id, embedding)
-            # scans never touch the code columns and the sq8 tier's
-            # (id, codes, vmin, vmax) scans never touch the fp column.
-            # One artifact, column pruning picks the bytes; storage
-            # cost ~0.31x of the fp32 column (measured at XL).
-            sel = V.sq8_attach(
-                self.table("chunks", version=version).select(
-                    "id",
-                    "embedding",
-                    ivf.sign_bucket("embedding", n_bits=4).alias("bucket"),
-                )
-            )
+            sel = _sign_rows(self.table("chunks", version=version))
             # the data snapshot's self-sizing policy, applied to the
             # artifact layout. The 16 sign buckets are SEMANTIC (4 sign
             # bits; more would change the probe set and every oracle),
@@ -2119,7 +2146,7 @@ class VectorDB:
             "sign", version, self._sign_build_incremental, _full
         )
         # the physical sub column (when present) is layout, not data:
-        # consumers see the same (id, embedding, bucket) frame at any S
+        # consumers see the same SIGN_LAYOUT_COLS frame at any S
         return self._cached_parquet(
             os.path.join(path, "layout")
         ).drop("sub")

@@ -11,7 +11,8 @@ exact-rescans only the short candidate list. The plan shape is:
 
     codes scan (map-only, tiny)           ← the 100 TB-sized input
       → per-row ADC score = m table lookups + m-1 adds
-      → TakeOrderedAndProject top-C       (no shuffle)
+      → TakeOrderedAndProject top-C       (a top-C heap per scan
+                                           partition, merged in one)
       → exact cosine rescore of C rows    (C ≈ 50 full vectors)
       → top-k
 
@@ -30,6 +31,7 @@ value-checkable, which is the property this repo optimizes for
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import math
 from collections.abc import Sequence
@@ -155,6 +157,22 @@ def pq_encode(vec_col: Column | str, codebook: Sequence) -> Column:
     return F.array(*codes)
 
 
+def _encode_matrix(mat: np.ndarray, cb: Sequence[np.ndarray]):
+    """(n, m) int32 codes of the float64 rows of ``mat`` under the
+    (k_codes, dsub) centroid arrays ``cb``: the numpy kernel behind
+    both Arrow-batched encoders."""
+    n, dsub = mat.shape[0], cb[0].shape[1]
+    out = np.empty((n, len(cb)), dtype=np.int32)
+    for s, cents in enumerate(cb):
+        sub = mat[:, s * dsub : (s + 1) * dsub]
+        acc = np.zeros((n, cents.shape[0]), dtype=np.float64)
+        for i in range(dsub):
+            d = sub[:, i : i + 1] - cents[None, :, i]
+            acc = acc + d * d
+        out[:, s] = np.argmin(acc, axis=1)
+    return out
+
+
 def pq_encode_batch(codebook: Sequence):
     """Arrow-batched twin of :func:`pq_encode` — same codes, bit for
     bit, at BLAS-ish speed (the Column form pays interpreted
@@ -171,23 +189,46 @@ def pq_encode_batch(codebook: Sequence):
     from pyspark.sql.types import ArrayType, IntegerType
 
     cb = [np.array(s, dtype=np.float64) for s in codebook]  # (k, dsub) each
-    dsub = cb[0].shape[1]
 
     @F.pandas_udf(ArrayType(IntegerType()))
     def enc(col: pd.Series) -> pd.Series:
         if col.empty:
             return pd.Series([], dtype=object)
         mat = np.array(col.tolist(), dtype=np.float64)
-        n = mat.shape[0]
-        out = np.empty((n, len(cb)), dtype=np.int32)
-        for s, cents in enumerate(cb):
-            sub = mat[:, s * dsub : (s + 1) * dsub]
-            acc = np.zeros((n, cents.shape[0]), dtype=np.float64)
-            for i in range(dsub):
-                d = sub[:, i : i + 1] - cents[None, :, i]
-                acc = acc + d * d
-            out[:, s] = np.argmin(acc, axis=1)
-        return pd.Series(list(out))
+        return pd.Series(list(_encode_matrix(mat, cb)))
+
+    return enc
+
+
+@functools.lru_cache(maxsize=8)
+def _md5_book_arrays(dim: int) -> tuple[np.ndarray, ...]:
+    return tuple(np.array(s, dtype=np.float64) for s in pq_codebook(dim=dim))
+
+
+def pq_encode_md5():
+    """Arrow-batched encoder of each row under the md5 codebook of the
+    row's OWN dimension (:func:`pq_codebook` defaults), i.e. the codes
+    :func:`pq_adc_search` encodes inline for a query of that dimension,
+    bit for bit (same kernel, same book). A NULL vector, an empty one,
+    or one whose dimension the book's 8 subspaces do not divide
+    encodes to NULL, so a stored-codes build never fails on the data
+    it indexes; a search over such codes still raises in
+    :func:`pq_codebook` for the query's dimension."""
+    from pyspark.sql.types import ArrayType, IntegerType
+
+    @F.pandas_udf(ArrayType(IntegerType()))
+    def enc(col: pd.Series) -> pd.Series:
+        out = [None] * len(col)
+        by_dim: dict[int, list[int]] = {}
+        for i, v in enumerate(col):
+            if v is not None and len(v) and len(v) % 8 == 0:
+                by_dim.setdefault(len(v), []).append(i)
+        for dim, rows in by_dim.items():
+            mat = np.array([col.iloc[i] for i in rows], dtype=np.float64)
+            codes = _encode_matrix(mat, _md5_book_arrays(dim))
+            for i, c in zip(rows, codes):
+                out[i] = c
+        return pd.Series(out, dtype=object)
 
     return enc
 
@@ -237,31 +278,41 @@ def pq_adc_search(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     extra_cols: Sequence[str] = (),
+    codes_col: str | None = None,
 ) -> DataFrame:
-    """PQ-ADC search: encode → ADC top-`n_candidates` (one map-only
-    scan + TakeOrderedAndProject, no shuffle) → exact cosine rescore of
-    the candidates → top-k (score desc, id asc).  Output matches every
-    other search surface: (id, score, *extra_cols) with the EXACT
-    cosine score, so quantization affects recall only, never the
-    reported score. ``extra_cols`` of ``vectors`` ride through both
-    top-k tiers, so the winners need no second read.
+    """PQ-ADC search: ADC top-`n_candidates` (one map-only scan +
+    TakeOrderedAndProject) → exact cosine rescore of the candidates →
+    top-k (score desc, id asc).  Output matches every other search
+    surface: (id, score, *extra_cols) with the EXACT cosine score, so
+    quantization affects recall only, never the reported score.
+    ``extra_cols`` of ``vectors`` ride through both top-k tiers, so
+    the winners need no second read.
 
-    Encoding happens inline here for self-containment; a deployment
-    materializes `pq_encode` once into a codes table and pays only the
-    4-bytes-per-vector ADC scan per query.
+    ``codes_col`` names a stored ARRAY<INT> codes column of
+    ``vectors`` (materialized once with :func:`pq_encode_batch`, or
+    :func:`pq_encode_md5` for the default book): the scan then reads
+    those codes and runs no Python worker. Without it every row is
+    encoded inline by the Arrow-batched encoder. Encoding is
+    deterministic, so both give the same candidates and scores. The
+    codebook defaults to the md5 book of the query's dimension, which
+    raises for a dimension its subspaces do not divide.
     """
     from local_vectordb_spark.functions.vector import dot_product, l2_norm
 
     if codebook is None:
         codebook = pq_codebook(dim=len(list(query_vec)))
     adc = pq_adc_table(query_vec, codebook)
-    enc = pq_encode_batch(codebook)  # bit-identical to pq_encode, Arrow speed
+    if codes_col is None:
+        # bit-identical to pq_encode, Arrow speed
+        codes = pq_encode_batch(codebook)(F.col(vec_col))
+    else:
+        codes = F.col(codes_col)
     cand = (
         vectors.select(
             F.col(id_col),
             F.col(vec_col),
             *extra_cols,
-            pq_adc_scores(enc(F.col(vec_col)), adc).alias("_adc"),
+            pq_adc_scores(codes, adc).alias("_adc"),
         )
         .orderBy(F.desc("_adc"), F.asc(id_col))
         .limit(n_candidates)

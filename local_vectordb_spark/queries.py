@@ -575,17 +575,15 @@ def api_search_sign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def api_search_sign_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q8 on the 100 TB default path (r17): a METADATA-FILTERED sign
-    search must stay partition-pruned. The facade intersects the
-    probed `_sign_v{{N}}` layout partitions with a semi join against
-    the filtered id set — the base-table side is an id+metadata
-    column-pruned scan, so embedding bytes are only read for the
-    probed partitions (the pre-r17 fallback row-filtered the FULL base
-    table: a whole-corpus embedding scan on exactly the path `auto`
-    serves past the brute knee; plan pinned in tests/test_plans.py).
-    FULL ORACLE: the Hamming-1 candidate set ∧ label=3, scored
-    exactly, staged-store string-id tie-break — a silently unfiltered
-    search or a filter applied after the top-k both hash-mismatch."""
+    """Q8 on the 100 TB default path: a METADATA-FILTERED sign search
+    stays partition-pruned and reads nothing else. The covering
+    `_sign_v{{N}}` layout carries each row's metadata and content, so
+    the filter is a predicate on the probed layout rows and the
+    winners hydrate from them: one ranking scan, no join, no scan of
+    the generation (plan pinned in tests/test_plans.py). FULL
+    ORACLE: the Hamming-1 candidate set ∧ label=3, scored exactly,
+    staged-store string-id tie-break — a silently unfiltered search or
+    a filter applied after the top-k both hash-mismatch."""
     db = _staged_vectordb(spark, sf_dir)
     return db.search(
         query_vec=_query_vecs(sf_dir)[0][1], index_type="sign", k=K,

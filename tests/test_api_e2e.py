@@ -2164,12 +2164,15 @@ def test_sq8_tier_two_stage_exact_rerank(spark, tmp_path):
     wrong quantize/reconstruct or a dropped rerank shows up as an
     ordering or score mismatch. `auto` routes here past AUTO_SQ8_MIN
     (monkeypatched low); the incremental layout build carries the code
-    columns; a pre-sq8 layout generation falls back to the expression
-    form rather than failing."""
+    columns; a layout generation written before it carried every
+    serving column (simulated: only id, embedding, bucket) falls back
+    to deriving the rows from the generation, and sq8, sign and pq all
+    answer exactly as they did from the covering layout."""
     import os
     import shutil
 
-    d, doc, q = _seed_sq8_store(spark, tmp_path)
+    # 16-d, so the 8-subspace pq book splits the vectors and pq answers
+    d, doc, q = _seed_sq8_store(spark, tmp_path, dims=16)
     v = d._current_version("chunks")
     assert d._version_buckets(
         os.path.join(d._table_dir("chunks"), f"v{v}")) == 8
@@ -2236,9 +2239,15 @@ def test_sq8_tier_two_stage_exact_rerank(spark, tmp_path):
     assert {"codes", "vmin", "vmax"} <= set(lay2.columns)
     assert rows(d.search(query_vec=q, index_type="sq8", k=7)) == rows(
         d.search(query_vec=q, index_type="sign", k=7))
+    covering = {
+        (t, f and tuple(f.items())): rows(d.search(
+            query_vec=q, index_type=t, k=9, metadata=f))
+        for t in ("sq8", "sign", "pq") for f in (None, {"par": "1"})
+    }
 
-    # pre-sq8 layout generation (simulated: rewrite the layout without
-    # the code columns) -> expression-form fallback, same answers
+    # legacy layout generation (simulated: rewrite the layout with only
+    # id, embedding, bucket) -> rows derived from the generation, same
+    # answers for every layout-served strategy
     root = os.path.join(d._table_dir("chunks"), f"_sign_v{v2}")
     old_cols = spark.read.parquet(os.path.join(root, "layout"))
     legacy = old_cols.select("id", "embedding", "bucket")
@@ -2249,6 +2258,10 @@ def test_sq8_tier_two_stage_exact_rerank(spark, tmp_path):
     assert "codes" not in d._sign_stored(v2).columns
     assert rows(d.search(query_vec=q, index_type="sq8", k=7)) == rows(
         d.search(query_vec=q, index_type="sign", k=7))
+    for (t, f), want in covering.items():
+        got = rows(d.search(query_vec=q, index_type=t, k=9,
+                            metadata=f and dict(f)))
+        assert got == want and got, (t, f)
 
 
 def test_cached_parquet_invalidates_on_dir_replacement(spark, tmp_path):

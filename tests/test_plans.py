@@ -651,15 +651,14 @@ def test_facade_stored_ivf_probe_is_partition_pruned(spark, tmp_path):
 
 
 def test_facade_sign_probe_is_partition_pruned(spark, tmp_path):
-    """r11: the facade's sign strategy (the `auto` default past the
-    brute knee) serves from the persisted `_sign_v{N}` bucket-
-    partitioned layout, so the Hamming-1 probe prunes whole partition
-    directories — and since r17 a METADATA-FILTERED search stays on
-    the pruned layout too: the filter intersects via a semi join whose
-    base-table side is an id+metadata column-pruned scan, so embedding
-    bytes are never read outside the probed partitions (the old
-    fallback row-filtered the full base table — a whole-corpus
-    embedding scan on exactly the path `auto` serves at scale)."""
+    """The facade's sign strategy (the `auto` default past the brute
+    knee) serves from the persisted `_sign_v{N}` bucket-partitioned
+    layout, so the Hamming-1 probe prunes whole partition directories.
+    The layout covers the search: a METADATA-FILTERED search filters
+    the probed layout rows by their own metadata and hydrates from
+    them too, so neither plan scans the generation (`/chunks/v`) at
+    all, and both keep the bucket PartitionFilters on the layout
+    scan."""
     import uuid
 
     from local_vectordb_spark.api import VectorDB
@@ -676,25 +675,22 @@ def test_facade_sign_probe_is_partition_pruned(spark, tmp_path):
           f"sign layout row {i}", None, doc) for i in range(48)],
         SCHEMAS["chunks"]))
 
+    def layout_only(plan):
+        assert "/chunks/v" not in plan, plan
+        locations = [ln for ln in plan.splitlines() if "Location:" in ln]
+        assert locations and all("_sign_v" in ln for ln in locations), plan
+        assert "PartitionFilters" in plan
+        assert "bucket" in plan.split("PartitionFilters", 1)[1][:200]
+
     hits = d.search("sign layout row 9", index_type="sign", k=5)
-    plan = plans.plan_string(hits)
-    assert "PartitionFilters" in plan
-    assert "bucket" in plan.split("PartitionFilters", 1)[1][:200]
+    layout_only(plans.plan_string(hits))
     assert hits.collect()[0].content == "sign layout row 9"
 
-    # metadata filter -> STILL partition-pruned (r17), filter
-    # respected, and the base-table side of the semi join never reads
-    # the embedding column: every scan that reads metadata reads a
-    # schema without embedding
+    # metadata filter -> the same single pruned layout scan, filter
+    # respected
     filtered = d.search("sign layout row 9", index_type="sign", k=48,
                         metadata={"par": "1"})
-    fplan = plans.plan_string(filtered)
-    assert "PartitionFilters" in fplan
-    assert "bucket" in fplan.split("PartitionFilters", 1)[1][:200]
-    for seg in fplan.split("ReadSchema: ")[1:]:
-        schema = seg.splitlines()[0]
-        if "metadata" in schema:
-            assert "embedding" not in schema, schema
+    layout_only(plans.plan_string(filtered))
     got = filtered.collect()
     assert got and all(int(r.content.rsplit(" ", 1)[1]) % 2 == 1 for r in got)
 
@@ -975,12 +971,13 @@ def test_single_search_plans_rank_and_hydrate_without_range_exchange(
 ):
     """No single-query search plan of any strategy, filtered or not,
     orders its result with a range exchange (a sampling job plus a
-    shuffle): a form that ranks base rows carries ``content`` through
-    its own TakeOrderedAndProject, and a form ranked from an artifact
-    orders its <= k hydrated winners with a top-k. The forms that rank
-    base rows (cosine, auto, pq) join nothing and read the
-    generation's ``content`` only in the ranking scan, which also reads
-    the vectors."""
+    shuffle): a form whose ranked rows carry content takes ``content``
+    through its own TakeOrderedAndProject, and any other form orders
+    its <= k hydrated winners with a top-k. The forms whose ranked rows
+    carry content join nothing and read ``content`` only in the
+    ranking scan, which also reads the vectors: cosine and auto scan
+    the generation, sign and pq the covering sign layout (and never
+    the generation). None of them runs a Python UDF."""
     import uuid as _uuid
 
     from local_vectordb_spark.api import INDEX_TYPES, VectorDB
@@ -1004,15 +1001,21 @@ def test_single_search_plans_rank_and_hydrate_without_range_exchange(
             plan = plans.plan_string(hits)
             where = (index_type, metadata)
             assert "rangepartitioning" not in plan, (where, plan)
-            if index_type not in ("cosine", "auto", "pq"):
+            if index_type not in ("cosine", "auto", "sign", "pq"):
                 continue
             assert plans.broadcast_join_count(hits) == 0, (where, plan)
+            # no Python worker: pq reads the codes the layout stores
+            assert "EvalPython" not in plan, (where, plan)
+            src = f"chunks/v{v}"
+            if index_type in ("sign", "pq"):
+                assert src not in plan, (where, plan)
+                src = f"_sign_v{v}"
             # formatted mode: one detail block per scan node
             schemas = [
                 block.split("ReadSchema: ", 1)[1].splitlines()[0]
                 for block in plan.split("\n\n")
                 if re.match(r"\(\d+\) Scan parquet", block.strip())
-                and f"chunks/v{v}" in block
+                and src in block
             ]
             content_scans = [s for s in schemas if "content" in s]
             assert len(content_scans) == 1, (where, plan)

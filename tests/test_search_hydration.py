@@ -1,11 +1,12 @@
 """Hydration invariants of ``VectorDB.search`` for every strategy.
 
-Whether a form hydrates inside its ranking scan (cosine, auto, pq, sq8,
-a filtered nsw) or by one join of its winners (sign, ivf, the nsw
-traversal, hybrid, mmr), every hit carries the content its id has in
-the SERVED generation — live or pinned — rows come in (score desc, id
-asc) order, at most k of them, under one fixed result schema; cosine
-and auto equal a numpy exact top-k."""
+Whether a form hydrates inside its ranking scan (cosine, auto and a
+filtered nsw over the generation, sign and pq over the covering sign
+layout, sq8's rerank over its point read) or by one join of its
+winners (ivf, the nsw traversal, hybrid, mmr), every hit carries the
+content its id has in the SERVED generation — live or pinned — rows
+come in (score desc, id asc) order, at most k of them, under one fixed
+result schema; cosine and auto equal a numpy exact top-k."""
 
 from __future__ import annotations
 

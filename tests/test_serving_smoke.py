@@ -150,9 +150,10 @@ def test_warm_search_runs_no_embedding_job(spark, db):
 # broadcast join and a range-partitioned sort (a sampling job plus a
 # shuffle)
 JOBS_BEFORE = {"cosine": 4, "auto": 4, "sign": 5, "sq8": 5, "pq": 4}
-# the forms that rank rows of the generation itself hydrate in that one
-# ranking job; sign hydrates by one join, sq8 collects its candidates
-JOBS_NOW = {"cosine": 1, "auto": 1, "sign": 2, "sq8": 2, "pq": 1}
+# the forms whose ranked rows carry content (the generation for cosine
+# and auto, the covering sign layout for sign and pq) hydrate in that
+# one ranking job; sq8 collects its candidates, then reranks
+JOBS_NOW = {"cosine": 1, "auto": 1, "sign": 1, "sq8": 2, "pq": 1}
 
 
 @pytest.mark.parametrize("index_type", sorted(JOBS_NOW))
@@ -169,10 +170,11 @@ def test_warm_search_job_count_per_strategy(spark, db, index_type):
 
 def test_filtered_sq8_reranks_the_probe_without_a_second_filter(spark, db):
     """The sq8 candidates already satisfy the metadata filter (the
-    layout probe semi-joins the filtered ids), so the rerank reads only
-    the point read: the filtered search returns the exact top-k of the
-    filtered approx candidates and runs exactly one job more than
-    unfiltered: the filter's semi join inside the probe."""
+    layout probe reads each row's own metadata), so the rerank reads
+    only the point read: the filtered search returns the exact top-k of
+    the filtered approx candidates, and it runs as many jobs as an
+    unfiltered one, because the filter is a predicate on the probed
+    layout rows, not a join that needs its own job."""
     from local_vectordb_spark.api import SQ8_RERANK_DEPTH
     from local_vectordb_spark.operators import knn
 
@@ -198,7 +200,7 @@ def test_filtered_sq8_reranks_the_probe_without_a_second_filter(spark, db):
     n_plain, _ = _jobs(
         spark, lambda: db.search(query_vec=qv, index_type="sq8", k=k).collect()
     )
-    assert n_filtered == n_plain + 1
+    assert n_filtered == n_plain
 
 
 @pytest.mark.parametrize("index_type", ["cosine", "sign", "sq8", "pq", "auto"])
