@@ -63,19 +63,22 @@ from local_vectordb_spark.functions.embedding import (
     hashed_embedding_udf,
 )
 from local_vectordb_spark.operators import crud, ivf, knn
+from local_vectordb_spark.operators.incremental import (
+    auto_buckets,
+    bucket_of,
+    compose_delta_chain,
+    durable_replace,
+    generation_buckets,
+    link_tree,
+    parquet_bytes,
+    rewrite_partitions,
+    seal_buckets,
+    touched_buckets,
+    write_buckets,
+)
 from local_vectordb_spark.session import local_rows_df, staging_suffix
 from local_vectordb_spark.sources.json_records import SCHEMAS
 
-
-def _dir_parquet_bytes(p: str) -> int:
-    """Total parquet bytes under a generation/artifact directory — the
-    input to every self-sizing bucket policy (data snapshot, sign
-    layout subs, CDF mirror)."""
-    return sum(
-        os.path.getsize(os.path.join(r, f))
-        for r, _dirs, fs in os.walk(p)
-        for f in fs if f.endswith(".parquet")
-    )
 
 # auto-strategy knee, mirroring ann.knn_graph_auto's regime bounds: an
 # exact float scan of <=1e5 rows is cheaper than any index's candidate
@@ -369,10 +372,10 @@ def _sq8_table(s: _Scope, qdf: DataFrame) -> DataFrame:
     )
     cand_ids = approx.select("id").distinct()
     gen_dir = os.path.join(db._table_dir("chunks"), f"v{s.disk_v}")
-    B = db._version_buckets(gen_dir) if s.disk_v >= 0 else None
+    B = generation_buckets(gen_dir) if s.disk_v >= 0 else None
     if B is not None:
         base = db.spark.read.parquet(gen_dir).select("id", "embedding", "bucket")
-        cb = cand_ids.withColumn("bucket", F.pmod(F.xxhash64("id"), F.lit(B)))
+        cb = cand_ids.withColumn("bucket", bucket_of(B))
         exact = base.join(F.broadcast(cb), ["bucket", "id"]).select(
             "id", "embedding"
         )
@@ -452,27 +455,6 @@ def _nsw(s: _Scope) -> DataFrame:
     )
 
 
-def _nsw_batch(s: _Scope, vecs) -> DataFrame:
-    """LSH candidates pooled across the queries, then exact cosine per
-    query over the pool (extra pool members can only improve a query's
-    recall vs its own buckets). The pooling is per-query driver work,
-    so nsw has no table-batch form. A store with no rows has nothing
-    to fit LSH on: the exact scan answers, with no rows."""
-    from functools import reduce
-
-    from local_vectordb_spark.operators.ann import lsh_search
-
-    if not s.db._has_rows(s.disk_v):
-        return knn.knn_batch(s.chunks, vecs, k=s.k, id_col="id")
-    pools = [
-        lsh_search(s.chunks, qv, k=s.k, id_col="id").select("id")
-        for _, qv in vecs
-    ]
-    cand_ids = reduce(lambda a, b: a.unionByName(b), pools).distinct()
-    candidates = s.chunks.join(F.broadcast(cand_ids), "id", "left_semi")
-    return knn.knn_batch(candidates, vecs, k=s.k, id_col="id")
-
-
 def _hybrid(s: _Scope) -> DataFrame:
     """BM25 over chunk content fused with the cosine ranking by
     reciprocal-rank fusion; the score column is the RRF score. Needs
@@ -523,23 +505,26 @@ class _Strategy(NamedTuple):
     # strategy is single-query only
     driver_batch: Callable | None
     # (scope, query table (query_id, qv)) -> (query_id, id, score) with
-    # no per-query driver state; None: capped at max_driver_queries
+    # no per-query driver state; None exactly when driver_batch is
     table_batch: Callable | None
 
 
+_COSINE = _Strategy(
+    lambda s: s.exact(s.chunks),
+    lambda s, vecs: knn.knn_batch(s.chunks, vecs, k=s.k, id_col="id"),
+    lambda s, qdf: knn.knn_batch_table(s.chunks, qdf, k=s.k, id_col="id"),
+)
 _STRATEGIES = {
-    "cosine": _Strategy(
-        lambda s: s.exact(s.chunks),
-        lambda s, vecs: knn.knn_batch(s.chunks, vecs, k=s.k, id_col="id"),
-        lambda s, qdf: knn.knn_batch_table(s.chunks, qdf, k=s.k, id_col="id"),
-    ),
+    "cosine": _COSINE,
     "ivf": _Strategy(
         lambda s: _ivf_probe(s, ivf.ivf_search, s.qvec),
         lambda s, vecs: _ivf_probe(s, ivf.ivf_search_batch, vecs),
         lambda s, qdf: _ivf_probe(s, ivf.ivf_search_batch_table, qdf),
     ),
     "sign": _Strategy(_sign, _via_query_table(_sign_table), _sign_table),
-    "nsw": _Strategy(_nsw, _nsw_batch, None),
+    # a batch of nsw searches is the exact scan a filtered nsw search
+    # answers with: cosine's two batch forms
+    "nsw": _COSINE._replace(single=_nsw),
     "hybrid": _Strategy(_hybrid, None, None),
     "pq": _Strategy(_pq, None, None),
     "sq8": _Strategy(_sq8, _via_query_table(_sq8_table), _sq8_table),
@@ -568,28 +553,16 @@ class VectorDB:
         # time-based policy externally) when readers hold snapshots
         # across several writes.
         self.keep_versions = max(1, keep_versions)
-        # hash-bucket count for the DELTA-PROPORTIONAL data layout
-        # (r17, see _write): a delta commit rewrites only the touched
-        # buckets and hard-links the rest, so commit cost is ∝ churn ×
-        # corpus/B instead of ∝ corpus. B is a real trade at BOTH
-        # ends: it is also the generation's FILE count (one file per
-        # bucket), and every read pays it — measured at the fixture
-        # tier, B=64 doubled a stored-layout search's warm serve
-        # (0.89 s vs 0.48 s at B=16) for no write benefit at that
-        # size, while at 100 TB a handful of buckets would make one
-        # bucket a non-task-sized rewrite. The default (None) is
-        # therefore SELF-SIZING from the previous generation's bytes:
-        # B = clamp(16, 8192, bytes / data_bucket_target_bytes), i.e.
-        # one bucket ≈ one task-sized input split (128 MiB, parquet's
-        # conventional row-group/split target), floored at the CDF
-        # mirror's 16 so small stores stay a small-file read. A
-        # corpus that outgrows its layout (bytes/bucket > 4× target)
-        # triggers ONE wholesale re-layout at the new B on its next
-        # delta commit — amortized: once per 4× growth. An explicit
-        # integer pins B and disables both the sizing and the
-        # rebalance (the caller's knob wins); changing it mid-table
-        # is safe — the next delta commit sees the mismatch and lays
-        # the table out fresh.
+        # bucket count B of the data layout (see _write_data): a delta
+        # commit rewrites only the touched buckets, so commit cost is
+        # ∝ churn × corpus/B; B is also the generation's file count,
+        # which every read pays (B=64 doubled a warm stored-layout
+        # search against B=16 at fixture scale). None sizes B with
+        # incremental.auto_buckets from the previous generation's bytes
+        # per data_bucket_target_bytes (one bucket ≈ one task-sized
+        # split) and re-lays out a corpus once its bytes per bucket pass
+        # 4× the target, so once per 4× growth. An integer pins B;
+        # changing it mid-table re-lays out on the next delta commit.
         self.data_buckets = (
             None if data_buckets is None else max(1, data_buckets)
         )
@@ -732,48 +705,40 @@ class VectorDB:
             return int(f.read().strip())
 
     def _read_version(self, kind: str, version: int) -> DataFrame:
-        """One version directory as a DataFrame in the TABLE schema:
-        a bucketed generation (the r17 delta-proportional layout —
-        hive `bucket=` partition dirs) surfaces its physical bucket
-        column, which no reader contract includes, so it is dropped
-        here; flat (pre-r17 or bulk-written) generations pass
-        through untouched. Every snapshot read routes through this
-        one seam."""
+        """One version directory as a DataFrame in the TABLE schema: a
+        bucketed generation's physical ``bucket`` partition column,
+        which no reader contract includes, is dropped; a flat
+        generation passes through. Every snapshot read routes through
+        this one seam."""
         df = self._cached_parquet(
             os.path.join(self._table_dir(kind), f"v{version}")
         )
         return df.drop("bucket") if "bucket" in df.columns else df
 
     def _point_read(self, kind: str, version: int, ids) -> DataFrame:
-        """PARTITION-PRUNED point read: the rows of ``v{version}``
-        whose id is in ``ids`` (a bounded Python list — callers pass
-        <=rerank-depth candidate sets), read by first pruning to the
-        id-hash bucket directories those ids can live in (the r17
-        data layout is ``bucket = pmod(xxhash64(id), B)``, so the
-        target buckets are computable from the ids alone) and then
-        filtering id within them. On a bucketed generation the scan
-        reads at most ``len(ids)`` of B partition directories —
-        task-shaped at any corpus size — instead of scanning every
-        file's id column; a flat generation falls back to the plain
-        pushed-down id filter. The physical bucket column never
-        escapes (same contract as _read_version)."""
+        """The rows of ``v{version}`` whose id is in ``ids`` (a bounded
+        Python list: callers pass <=rerank-depth candidate sets). On a
+        bucketed generation a row's bucket is ``bucket_of(B)`` of its
+        id, so the read first prunes to the bucket directories of
+        ``ids`` (at most ``len(ids)`` of B, task-shaped at any corpus
+        size) and then filters id within them; a flat generation takes
+        the plain pushed-down id filter. The physical bucket column
+        never escapes (same contract as _read_version)."""
         d = os.path.join(self._table_dir(kind), f"v{version}")
         ids = list(ids)
         if not ids:
             return self.spark.createDataFrame([], SCHEMAS[kind])
         df = self._cached_parquet(d)
-        B = self._version_buckets(d)
+        B = generation_buckets(d)
         if B is not None and "bucket" in df.columns:
-            # the ids' buckets (xxhash64 is a Spark-side hash): over an
-            # Arrow table the projection folds into a local relation,
-            # so the collect runs no job and no Python worker
+            # over an Arrow table the bucket projection folds into a
+            # local relation: the collect runs no job and no Python
+            # worker
             bkts = sorted({
                 r.b
                 for r in self.spark.createDataFrame(
                     pa.table({"id": pa.array(ids, pa.string())})
-                )
-                .select(F.pmod(F.xxhash64("id"), F.lit(B)).alias("b"))
-                .collect()
+                ).select(bucket_of(B).alias("b")).collect()
             })
             df = df.filter(F.col("bucket").isin(bkts))
         df = df.filter(F.col("id").isin(ids))
@@ -832,10 +797,6 @@ class VectorDB:
         feed — a silently incomplete change stream corrupts every
         consumer downstream of it, the one failure mode worse than
         no feed."""
-        from local_vectordb_spark.operators.incremental import (
-            compose_delta_chain,
-        )
-
         live = self._current_version(kind)
         v = live if version is None else version
         if version is not None and (version < 0 or version > live):
@@ -878,26 +839,13 @@ class VectorDB:
         )
 
     def _commit_pointer(self, kind: str, version: int) -> None:
-        """Atomically point readers at `version`: write-fsync a temp
-        file, then os.replace over _CURRENT (atomic on POSIX). This is
-        the commit point — everything before it is invisible staging.
-        Split out so tests can inject a crash between data write and
-        commit."""
-        d = self._table_dir(kind)
-        tmp = os.path.join(d, "_CURRENT.tmp")
-        with open(tmp, "w") as f:
-            f.write(str(version))
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, os.path.join(d, "_CURRENT"))
-        # fsync the directory so the rename itself is durable across
-        # power loss, not just process crash (a rename lives in the
-        # directory's metadata, which has its own fd to flush).
-        dirfd = os.open(d, os.O_RDONLY)
-        try:
-            os.fsync(dirfd)
-        finally:
-            os.close(dirfd)
+        """The commit point: ``_CURRENT`` names ``version``, replaced
+        atomically and durably (``durable_replace``); everything before
+        it is invisible staging. A method of its own so a crash between
+        data write and commit can be injected."""
+        durable_replace(
+            os.path.join(self._table_dir(kind), "_CURRENT"), str(version)
+        )
 
     def _write(
         self,
@@ -1018,141 +966,67 @@ class VectorDB:
         finally:
             os.close(lock_fd)  # closing the fd releases the flock
 
-    @staticmethod
-    def _version_buckets(version_dir: str) -> int | None:
-        """The bucket count a generation was laid out with (its
-        `_BUCKETS` marker), or None for a flat (pre-r17 / bulk)
-        generation."""
-        p = os.path.join(version_dir, "_BUCKETS")
-        try:
-            with open(p) as f:
-                return int(f.read().strip())
-        except (OSError, ValueError):
-            return None
-
     def _write_data(self, kind, df, delta, base, stage) -> None:
         """The data half of a commit: delta-proportional when it can
         be, wholesale only when it must.
 
-        The versioned snapshot is laid out hive-partitioned by
-        ``bucket = pmod(xxhash64(id), B)``, the construction the CDF
-        consumer's mirror uses, so a delta commit goes through
-        ``rewrite_partitions``: only the buckets the changed ids hash
-        to are rewritten (prev − changed ids + upserts) and every
-        untouched bucket directory is hard-linked from the previous
-        generation. Commit cost is ∝ churn × (corpus/B), never ∝
-        corpus. The derivation new = prev − changed ids + upserts is
-        the contract the incremental artifact builders and the CDF feed
-        already rely on: the delta IS the net change this commit
-        applies (see _write).
+        A generation written with a delta is laid out hive-partitioned
+        by ``bucket = bucket_of(B)`` of the id (operators/incremental,
+        the layout the CDF mirror shares), so the next delta commit
+        goes through ``rewrite_partitions``: only the buckets the
+        changed ids hash to are rewritten (prev − changed ids +
+        upserts) and every untouched bucket directory is hard-linked.
+        Commit cost is ∝ churn × (corpus/B), never ∝ corpus. The delta
+        IS the net change this commit applies (see _write), the
+        contract the artifact builders and the CDF feed also rely on.
 
-        Wholesale writes (delta=None: reset, initial bulk load; or a
-        flat/differently-bucketed previous generation, a corpus that
-        outgrew its bucket sizing (see __init__), a null id or a
-        null-bucket directory, or a GC race on the previous directory)
-        write the merged ``df``: bucketed when a delta chain could
-        extend this commit (delta given), flat otherwise. The bucket
-        count is self-sized from the previous generation's bytes unless
-        the caller pinned one. A bucketed result with ZERO parquet
-        files (the commit emptied the table; a partitioned directory
-        without files is unreadable) falls back to the flat empty
-        write. Readers never see the physical bucket column
-        (_read_version drops it)."""
-        import math
+        B is ``data_buckets`` when pinned, else ``auto_buckets`` of the
+        previous generation's bytes; a previous layout of another B, or
+        one whose bytes per bucket passed 4× the target while the
+        sizing moves B, is re-laid out wholesale (see __init__).
 
-        from local_vectordb_spark.operators.incremental import (
-            rewrite_partitions,
-        )
-
-        d = self._table_dir(kind)
-        prev_dir = os.path.join(d, f"v{base}")
-        prev_b = self._version_buckets(prev_dir) if base >= 0 else None
-
-        def _auto_b(nbytes: int) -> int:
-            return max(16, min(
-                8192, math.ceil(nbytes / self.data_bucket_target_bytes)
-            ))
-
-        def _sealed() -> bool:
-            # a bucketed write that left no parquet file emptied the
-            # table: drop it for the flat empty write
-            if any(n.endswith(".parquet")
-                   for _r, _d, names in os.walk(stage) for n in names):
-                with open(os.path.join(stage, "_BUCKETS"), "w") as f:
-                    f.write(str(B))
-                return True
-            shutil.rmtree(stage, ignore_errors=True)
-            return False
-
-        # resolve this commit's bucket count and whether the previous
-        # layout can be extended incrementally (see __init__ for the
-        # sizing policy)
+        Wholesale writes take the merged ``df``: bucketed when a delta
+        chain could extend this commit (delta given), flat otherwise
+        (delta=None: reset, initial bulk load). A delta commit falls
+        back to the bucketed wholesale write when the rewrite cannot
+        apply: a flat or differently bucketed previous generation, a
+        null id or hive null-bucket directory, or a previous directory
+        lost to a concurrent GC. A bucketed result that kept no rows is
+        a flat empty parquet (``seal_buckets``). Readers never see the
+        physical bucket column (_read_version drops it)."""
+        prev_dir = os.path.join(self._table_dir(kind), f"v{base}")
+        prev_b = generation_buckets(prev_dir) if base >= 0 else None
+        target = self.data_bucket_target_bytes
         if self.data_buckets is not None:
             B = self.data_buckets
-            extend = prev_b is not None and prev_b == B
-        elif prev_b is not None:
-            prev_bytes = _dir_parquet_bytes(prev_dir)
-            if prev_bytes > 4 * self.data_bucket_target_bytes * prev_b:
-                # outgrown layout: one wholesale re-layout at the new
-                # B, unless the sizing resolves to the SAME count (the
-                # 8192 cap, reached at ~1 TiB per defaults): such a
-                # re-layout would repeat on every later commit, a
-                # permanent full-corpus rewrite. Keep extending at the
-                # cap; oversized buckets are the capped trade.
-                B = _auto_b(prev_bytes)
-                extend = B == prev_b
-            else:
-                B = prev_b
-                extend = True
+        elif prev_b is None:
+            B = auto_buckets(parquet_bytes(prev_dir) if base >= 0 else 0,
+                             target)
         else:
-            B = _auto_b(
-                _dir_parquet_bytes(prev_dir) if base >= 0 else 0
-            )
-            extend = False
-        bucket_of = F.pmod(F.xxhash64(F.col("id")), F.lit(B))
+            prev_bytes = parquet_bytes(prev_dir)
+            # an outgrown layout re-lays out at the resized B; at the
+            # 8192 cap the resize returns prev_b, and the layout keeps
+            # extending rather than rewriting the corpus every commit
+            B = (auto_buckets(prev_bytes, target)
+                 if prev_bytes > 4 * target * prev_b else prev_b)
 
-        if delta is not None and extend:
+        if delta is not None and prev_b == B:
             ups, rem = delta
+            changed = ups.select("id").unionByName(rem.select("id")).distinct()
+            cols = [f.name for f in SCHEMAS[kind].fields]
             try:
-                changed = ups.select("id").unionByName(
-                    rem.select("id")).distinct()
-                touched = {
-                    r.b for r in changed.select(bucket_of.alias("b"))
-                    .distinct().collect()
-                }
-                # a null id hashes to a null bucket, and a generation
-                # holding null-id rows carries a
-                # bucket=__HIVE_DEFAULT_PARTITION__ dir: neither fits
-                # the integer partition arithmetic, and the wholesale
-                # write handles nulls like any other value
-                numeric = None not in touched and all(
-                    n.split("=", 1)[1].lstrip("-").isdigit()
-                    for n in os.listdir(prev_dir) if n.startswith("bucket=")
+                rewrite_partitions(
+                    prev_dir, stage, "bucket", touched_buckets(changed, B),
+                    changed, ups.select(*cols).withColumn("bucket", bucket_of(B)),
                 )
-                if numeric:
-                    cols = [f.name for f in SCHEMAS[kind].fields]
-                    rewrite_partitions(
-                        prev_dir, stage, "bucket", touched, changed,
-                        ups.select(*cols).withColumn("bucket", bucket_of),
-                    )
-                    if _sealed():
-                        return
-            except (FileNotFoundError, AnalysisException):
-                # lost prev to a concurrent GC / unreadable layout:
-                # fall through to the wholesale write below
-                shutil.rmtree(stage, ignore_errors=True)
-
-        if delta is not None:
-            # wholesale but BUCKETED: this is the layout-upgrade (or
-            # first post-bulk) commit later delta commits extend; the
-            # bucket-keyed repartition keeps it at one file per bucket
-            df.withColumn("bucket", bucket_of).repartition(
-                "bucket").write.mode("overwrite").partitionBy(
-                "bucket").parquet(stage)
-            if _sealed():
+                seal_buckets(self.spark, stage, B, df.schema)
                 return
-
-        df.write.mode("overwrite").parquet(stage)
+            except (FileNotFoundError, ValueError, AnalysisException):
+                shutil.rmtree(stage, ignore_errors=True)
+        if delta is not None:
+            write_buckets(df, stage, B)
+        else:
+            df.write.mode("overwrite").parquet(stage)
 
     def reset(self) -> None:
         """C10 — truncate every collection (schema preserved)."""
@@ -1600,10 +1474,9 @@ class VectorDB:
         probed forms (ivf.ivf_search_batch_table, sign, sq8) join a
         broadcast query table, which bounds them at roughly the
         hundreds-of-thousands of queries that fit a broadcast; past
-        that, pre-shard the query set and loop.
-        A strategy with no batch form (hybrid, pq) or no table form
-        (nsw, whose pooled LSH candidates are per-query driver work)
-        is refused before any embedding runs.
+        that, pre-shard the query set and loop. nsw takes cosine's
+        forms: a batch is the exact scan. A strategy with no batch form
+        (hybrid, pq) is refused before any embedding runs.
 
         ``version`` pins the batch to a retained generation, same
         contract as search(): scan, stored artifacts, hydration, and
@@ -1621,16 +1494,8 @@ class VectorDB:
         if query_vecs is None and not queries:
             raise ValueError("provide queries or query_vecs")
         n_queries = len(queries) if query_vecs is None else len(query_vecs)
-        on_driver = n_queries <= max_driver_queries
-        if not on_driver and st.table_batch is None:
-            scalable = tuple(n for n, t in _STRATEGIES.items() if t.table_batch)
-            raise ValueError(
-                f"index {name!r} does not scale past max_driver_queries "
-                "(its candidate generation is per-query driver work); use "
-                f"one of {scalable} for large query sets"
-            )
         s = _Scope(self, disk_v, metadata, k)
-        if on_driver:
+        if n_queries <= max_driver_queries:
             if query_vecs is None:
                 query_vecs = list(zip(
                     [int(i) for i, _ in queries],
@@ -1848,11 +1713,6 @@ class VectorDB:
         it. Returns True."""
         import json as _json
 
-        from local_vectordb_spark.operators.incremental import (
-            compose_delta_chain,
-            rewrite_partitions,
-        )
-
         ups, olds = compose_delta_chain(steps, key_col="id")
         bucket = ivf.sign_bucket("embedding", n_bits=4).alias("bucket")
         rows = _sign_rows(ups)
@@ -1877,7 +1737,7 @@ class VectorDB:
             S = 1
         part_cols = ("bucket",)
         if S > 1:
-            rows = rows.withColumn("sub", F.pmod(F.xxhash64("id"), F.lit(S)))
+            rows = rows.withColumn("sub", bucket_of(S))
             part_cols = ("bucket", "sub")
         rewrite_partitions(
             os.path.join(prev, "layout"), os.path.join(p, "layout"),
@@ -1921,11 +1781,6 @@ class VectorDB:
         partition, by returning False rather than shipping a stale
         row."""
         import json as _json
-
-        from local_vectordb_spark.operators.incremental import (
-            compose_delta_chain,
-            rewrite_partitions,
-        )
 
         prev_dir = self._artifact_dir("ivf", w)
         with open(os.path.join(prev_dir, "centroids.json")) as f:
@@ -2091,7 +1946,7 @@ class VectorDB:
 
         gen = os.path.join(self._table_dir("chunks"), f"v{version}")
         return max(1, min(4096, math.ceil(
-            _dir_parquet_bytes(gen) / 16 / self.data_bucket_target_bytes
+            parquet_bytes(gen) / 16 / self.data_bucket_target_bytes
         )))
 
     def _sign_stored(self, version: int) -> DataFrame:
@@ -2125,9 +1980,7 @@ class VectorDB:
             S = self._sign_subs(version)
             if S > 1:
                 (
-                    sel.withColumn(
-                        "sub", F.pmod(F.xxhash64("id"), F.lit(S))
-                    )
+                    sel.withColumn("sub", bucket_of(S))
                     # one shuffle on the leaf key: one file per
                     # (bucket, sub), bounded file counts
                     .repartition("bucket", "sub")
@@ -2261,11 +2114,6 @@ class VectorDB:
         Deltas past NSW_EXACT_BUILD_MAX rows return False (at that
         size a full build is the cheaper tool)."""
         import json as _json
-
-        from local_vectordb_spark.operators.incremental import (
-            compose_delta_chain,
-            link_tree,
-        )
 
         prev_dir = self._artifact_dir("nsw", w)
         meta_path = os.path.join(prev_dir, "meta.json")
@@ -2450,8 +2298,6 @@ class VectorDB:
         manifest and gated by its own ``_CURRENT`` on open."""
         import json as _json
 
-        from local_vectordb_spark.operators.incremental import link_tree
-
         live = self._current_version("chunks")
         v = live if version is None else version
         d = self._table_dir("chunks")
@@ -2585,12 +2431,8 @@ class VectorDB:
             },
             "checksum_reuse": {"reused": reused, "hashed": hashed},
         }
-        tmp = os.path.join(out_dir, "MANIFEST.json.tmp")
-        with open(tmp, "w") as f:
-            _json.dump(manifest, f, indent=1)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, os.path.join(out_dir, "MANIFEST.json"))
+        durable_replace(os.path.join(out_dir, "MANIFEST.json"),
+                        _json.dumps(manifest, indent=1))
         return manifest
 
     def _lsh_graph_edges(self, chunks: DataFrame, n: int) -> DataFrame:
@@ -2904,12 +2746,7 @@ def sync_bundle(src_bundle: str, dst_bundle: str) -> dict:
             "ino": st.st_ino, "dev": st.st_dev,
             "mtime_ns": st.st_mtime_ns,
         }
-    tmp = cur + ".tmp"
-    with open(tmp, "w") as f:
-        _json.dump(new_manifest, f, indent=1)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, cur)
+    durable_replace(cur, _json.dumps(new_manifest, indent=1))
     if os.path.exists(prev):
         os.remove(prev)
     return {"kept": kept, "relinked": relinked, "shipped": shipped,

@@ -22,28 +22,6 @@ def _as_double(v: Column) -> Column:
     return v.cast("array<double>")
 
 
-def lit_double_array(values) -> Column:
-    """A literal ARRAY<DOUBLE> as ONE parsed SQL expression.
-
-    ``F.array(*[F.lit(x) ...])`` costs one py4j round-trip per element
-    — ~65 driver round-trips for every 64-dim query vector, paid on
-    every search construction (profiled: the literal alone was ~0.06 s
-    of api_search_sign's construction). ``repr(float)`` is the
-    shortest round-tripping decimal form, and Spark's SQL parser reads
-    it back into the identical IEEE double, so the expression — and
-    every score derived from it — is bit-identical to the F.lit form.
-
-    Non-finite elements (NaN/±Inf) have no ``repr``-style SQL literal
-    — ``nanD`` would raise a ParseException where the old F.lit form
-    built a valid literal (r18 ADVICE) — so any such vector falls back
-    to the per-element F.lit construction.
-    """
-    vals = [float(x) for x in values]
-    if any(x != x or x in (float("inf"), float("-inf")) for x in vals):
-        return F.array(*[F.lit(x) for x in vals])
-    return F.expr("array(" + ", ".join(f"{x!r}D" for x in vals) + ")")
-
-
 def dot_product(a: Column, b: Column) -> Column:
     """Sum of elementwise products, computed in double precision."""
     return F.aggregate(

@@ -1,5 +1,6 @@
-"""Delta-chain composition and file-level artifact reuse: the
-machinery behind incremental maintenance of the versioned store.
+"""The store's data layout and its delta maintenance, in one module:
+the versioned data snapshot, the CDF consumer's mirror and the stored
+sign/ivf artifacts all write through these functions.
 
 Every commit records its delta beside the snapshot (``v{N}/_delta``:
 ``upserts`` = the new full rows, ``removes`` = the displaced old full
@@ -12,12 +13,21 @@ the corpus:
 
 - :func:`compose_delta_chain` folds the chain into (final upserted
   rows, displaced old rows), pure delta-sized DataFrame algebra;
+- :func:`bucket_of` is the id-hash bucket of a row, and
+  :func:`auto_buckets` sizes a generation's bucket count from its
+  bytes, so a bucket is one task-sized split at any corpus size;
 - :func:`rewrite_partitions` rewrites only the partition directories
   (data buckets, sign buckets, IVF cells) those rows live in and
   hard-links every untouched one from the previous directory
   (:func:`link_tree`): the filesystem form of Iceberg's
   unchanged-data-file manifest reuse; on an object store this is a
-  metadata copy either way.
+  metadata copy either way;
+- :func:`write_buckets` is the wholesale bucketed write, and
+  :func:`seal_buckets` finishes either write: a generation that kept
+  rows records its bucket count, one that kept none becomes a flat
+  empty parquet a reader can open;
+- :func:`durable_replace` is the commit point of every pointer and
+  manifest file.
 
 A 1k-row write therefore costs a 1k-row assignment plus a handful of
 partition rewrites, where the reference rebuilds every index from
@@ -26,11 +36,107 @@ scratch on each mutation (src/models/collection.py:97-99,198).
 
 from __future__ import annotations
 
+import math
 import os
 import shutil
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+# a bucketed generation's bucket count, beside its partition dirs
+_BUCKETS = "_BUCKETS"
+
+
+def bucket_of(n: int, col: str = "id") -> Column:
+    """The bucket of a row among ``n``: ``pmod(xxhash64(col), n)``.
+    A pure function of the id, so a bucket is computable from ids
+    alone (point reads, candidate joins, the touched set of a delta)."""
+    return F.pmod(F.xxhash64(col), F.lit(n)).cast("int")
+
+
+def touched_buckets(ids: DataFrame, n: int) -> set:
+    """The buckets among ``n`` that the ``id`` column of ``ids`` hashes
+    to; a delta-sized collect."""
+    return {r.b for r in ids.select(bucket_of(n).alias("b")).distinct().collect()}
+
+
+def parquet_bytes(path: str) -> int:
+    """Parquet bytes of a generation, an artifact or a snapshot: a
+    directory of parquet parts, or a single file."""
+    if os.path.isfile(path):
+        return os.path.getsize(path)
+    return sum(
+        os.path.getsize(os.path.join(r, f))
+        for r, _dirs, fs in os.walk(path)
+        for f in fs if f.endswith(".parquet")
+    )
+
+
+def auto_buckets(nbytes: int, target_bytes: int = 128 << 20) -> int:
+    """Bucket count for ``nbytes`` of data: one bucket per
+    ``target_bytes`` (a task-sized split), clamped to [16, 8192], so a
+    small table stays a small-file read and the count stays bounded."""
+    return max(16, min(8192, math.ceil(nbytes / target_bytes)))
+
+
+def generation_buckets(out_dir: str) -> int | None:
+    """The bucket count :func:`seal_buckets` recorded for a generation,
+    or None for a flat one."""
+    try:
+        with open(os.path.join(out_dir, _BUCKETS)) as f:
+            return int(f.read().strip())
+    except (OSError, ValueError):
+        return None
+
+
+def seal_buckets(
+    spark: SparkSession, out_dir: str, n: int, schema: StructType
+) -> bool:
+    """Finish a generation written partitioned by ``bucket`` among
+    ``n``. If it holds a parquet file it records ``n`` and returns
+    True. If it kept no rows it is replaced by a flat empty parquet of
+    ``schema`` and returns False: a partitioned directory without
+    files has no schema a reader could infer."""
+    if any(f.endswith(".parquet")
+           for _r, _d, fs in os.walk(out_dir) for f in fs):
+        with open(os.path.join(out_dir, _BUCKETS), "w") as f:
+            f.write(str(n))
+        return True
+    shutil.rmtree(out_dir, ignore_errors=True)
+    spark.createDataFrame([], schema).write.parquet(out_dir)
+    return False
+
+
+def write_buckets(df: DataFrame, out_dir: str, n: int) -> bool:
+    """Wholesale bucketed write of ``df`` at ``n`` buckets, one file per
+    bucket (a shuffle on the bucket), sealed by :func:`seal_buckets`.
+    Returns whether the result is bucketed (``df`` had rows)."""
+    (
+        df.withColumn("bucket", bucket_of(n)).repartition("bucket")
+        .write.mode("overwrite").partitionBy("bucket").parquet(out_dir)
+    )
+    return seal_buckets(df.sparkSession, out_dir, n, df.schema)
+
+
+def durable_replace(path: str, text: str) -> None:
+    """Replace the file ``path`` with ``text`` atomically and durably:
+    write and fsync a temp file, ``os.replace`` it over ``path`` (atomic
+    on POSIX), then fsync the directory, since the rename lives in the
+    directory's metadata. A reader sees the old file or the new one,
+    never a torn one, and the new one survives power loss."""
+    d = os.path.dirname(path) or "."
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        f.write(text)
+        f.flush()
+        os.fsync(f.fileno())
+    os.replace(tmp, path)
+    dirfd = os.open(d, os.O_RDONLY)
+    try:
+        os.fsync(dirfd)
+    finally:
+        os.close(dirfd)
 
 
 def compose_delta_chain(
@@ -101,7 +207,7 @@ def apply_changes(
     base: DataFrame, feed: DataFrame, key_col: str = "id"
 ) -> DataFrame:
     """Apply a change-data feed to a base snapshot — the CONSUMER side
-    of ``table_changes`` (r14): drop every key the feed names (both
+    of ``table_changes``: drop every key the feed names (both
     'remove' rows and the pre-images of 'upsert's), union the upsert
     rows in the base schema. ``mirror(snapshot@since, feed(since, v))
     == snapshot@v`` row-for-row, timestamps included — the contract
@@ -129,37 +235,57 @@ def rewrite_partitions(
 ) -> None:
     """Write the next generation of a directory hive-partitioned on the
     integer column ``key``: rows = previous rows whose ``id`` is not in
-    ``changed_ids`` + ``new_rows``. Only the ``touched`` partition values are read (one
-    partition-pruned scan of ``prev_dir``), anti-joined against the
-    broadcast id set, unioned with ``new_rows`` and written to
-    ``out_dir``; every other ``key=`` directory is hard-linked. The
-    caller guarantees that every changed id's old and new row lives in
-    a touched partition.
+    ``changed_ids`` + ``new_rows``. The caller guarantees that every
+    changed id's old and new row lives in a ``touched`` partition.
 
-    ``new_rows`` fixes the column set, so a previous directory missing
-    one of its columns (an older layout) raises AnalysisException.
-    ``part_cols`` (default: ``key`` alone) are the written partition
-    columns, ``key`` first; a shuffle on them puts each rewritten leaf
-    in one task, so it holds one file. An empty ``touched`` writes
-    nothing and links everything."""
+    Only the ``touched`` partition directories that exist are listed
+    and read; each is anti-joined against the broadcast id set, unioned
+    with ``new_rows`` and written to ``out_dir``. Every other ``key=``
+    directory is hard-linked. A previous directory with no ``key=``
+    directory holds no rows, so ``new_rows`` alone are written.
+
+    ``new_rows`` fixes the column set: a previous layout missing one of
+    its columns raises AnalysisException, also when no touched
+    directory exists (one untouched directory is then read for its
+    schema and filtered empty), so old-layout partitions are never
+    linked beside new-layout ones. A null in ``touched`` or a
+    non-integer ``key=`` directory (hive's null partition) raises
+    ValueError before anything is written. ``part_cols`` (default:
+    ``key`` alone) are the written partition columns, ``key`` first; a
+    shuffle on them puts each rewritten leaf in one task, so it holds
+    one file. An empty ``touched`` writes nothing and links
+    everything."""
+    if None in touched:
+        raise ValueError(f"a null {key} has no partition directory")
+    parts = {}
+    for name in os.listdir(prev_dir):
+        k, _, val = name.partition("=")
+        if k == key:
+            parts[int(val)] = name
     if touched:
         cols = part_cols or (key,)
-        prev = new_rows.sparkSession.read.parquet(prev_dir)
+        rows = new_rows
+        read = [parts[t] for t in sorted(touched) if t in parts]
+        read = read or list(parts.values())[:1]
+        if read:
+            rows = (
+                new_rows.sparkSession.read.option("basePath", prev_dir)
+                .parquet(*[os.path.join(prev_dir, n) for n in read])
+                .filter(F.col(key).isin(sorted(touched)))
+                .join(F.broadcast(changed_ids), "id", "left_anti")
+                .select(*new_rows.columns)
+                .unionByName(new_rows)
+            )
         (
-            prev.filter(F.col(key).isin(sorted(touched)))
-            .join(F.broadcast(changed_ids), "id", "left_anti")
-            .select(*new_rows.columns)
-            .unionByName(new_rows)
-            .repartition(*cols)
+            rows.repartition(*cols)
             .write.mode("overwrite")
             .partitionBy(*cols)
             .parquet(out_dir)
         )
     else:
         os.makedirs(out_dir, exist_ok=True)
-    for name in os.listdir(prev_dir):
-        k, _, val = name.partition("=")
-        if k == key and int(val) not in touched:
+    for val, name in parts.items():
+        if val not in touched:
             link_tree(os.path.join(prev_dir, name),
                       os.path.join(out_dir, name))
 

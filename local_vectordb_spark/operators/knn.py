@@ -34,6 +34,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
 
+from local_vectordb_spark.operators.incremental import bucket_of
+
 
 SCORE_DECIMALS = 6  # stable cross-engine comparison of double-precision scores
 
@@ -41,6 +43,17 @@ SCORE_DECIMALS = 6  # stable cross-engine comparison of double-precision scores
 def _unit(v: Sequence[float]) -> list[float]:
     n = math.sqrt(sum(float(x) * float(x) for x in v))
     return [float(x) / n if n else 0.0 for x in v]
+
+
+def sql_double(x: float) -> str:
+    """A SQL literal that parses to exactly the double ``x``: the
+    shortest round-tripping decimal, or a cast for NaN and ±Infinity."""
+    x = float(x)
+    if x != x:
+        return "CAST('NaN' AS DOUBLE)"
+    if x in (float("inf"), float("-inf")):
+        return f"CAST('{'-' if x < 0 else ''}Infinity' AS DOUBLE)"
+    return f"{x!r}D"
 
 
 def knn_brute_force(
@@ -96,16 +109,7 @@ def score_all(
     tree, so every score is the Column form's. Non-finite query
     components and backticks in the column name are spelled so the
     string always parses as the intended expression."""
-    def _d(x: float) -> str:
-        if x != x:
-            return "CAST('NaN' AS DOUBLE)"
-        if x == float("inf"):
-            return "CAST('Infinity' AS DOUBLE)"
-        if x == float("-inf"):
-            return "CAST('-Infinity' AS DOUBLE)"
-        return f"{x!r}D"
-
-    qn = "array(" + ", ".join(_d(float(x)) for x in _unit(query_vec)) + ")"
+    qn = "array(" + ", ".join(sql_double(x) for x in _unit(query_vec)) + ")"
     v = f"CAST(`{vec_col.replace('`', '``')}` AS ARRAY<DOUBLE>)"
     fold = "0.0D, (acc, x) -> acc + x"
     norm = f"sqrt(aggregate(zip_with({v}, {v}, (x, y) -> x * y), {fold}))"
@@ -263,19 +267,16 @@ def knn_batch_table(
     else:
         q_id, q_vec, n_q = query_id_col, query_vec_col, _blocks(queries)
 
-    def block(col: str, n: int) -> Column:
-        return F.pmod(F.xxhash64(col), F.lit(n)).cast("int")
-
     def every(n: int) -> Column:
         return F.explode(F.sequence(F.lit(0), F.lit(n - 1)))
 
     qside = queries.select(
         F.col(q_id).alias("_q"), F.col(q_vec).alias("_v"),
-        block(q_id, n_q).alias("_qb"), every(n_c).alias("_cb"),
+        bucket_of(n_q, q_id).alias("_qb"), every(n_c).alias("_cb"),
     )
     cside = vectors.select(
         F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"),
-        every(n_q).alias("_qb"), block(id_col, n_c).alias("_cb"),
+        every(n_q).alias("_qb"), bucket_of(n_c, id_col).alias("_cb"),
     )
     schema = StructType([
         StructField("_q", queries.schema[q_id].dataType),

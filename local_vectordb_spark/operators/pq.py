@@ -33,7 +33,6 @@ from __future__ import annotations
 
 import functools
 import hashlib
-import math
 from collections.abc import Sequence
 
 import numpy as np
@@ -41,8 +40,12 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from local_vectordb_spark.functions.vector import lit_double_array
-from local_vectordb_spark.operators.knn import SCORE_DECIMALS, _unit
+from local_vectordb_spark.operators.knn import (
+    SCORE_DECIMALS,
+    _unit,
+    knn_brute_force,
+    sql_double,
+)
 
 PQ_MD5_SEED = "pq-v1"
 
@@ -258,13 +261,15 @@ def pq_adc_scores(
     codes_col: Column | str, adc_table: Sequence[Sequence[float]]
 ) -> Column:
     """Approximate inner-product score from codes: m table lookups and
-    a left-associative sum — the entire per-row cost of the ADC scan."""
+    a left-associative sum — the entire per-row cost of the ADC scan.
+    Each subspace's row of the table is one parsed SQL literal (each
+    double spelled exactly, ``sql_double``): one py4j call per row, not
+    one per entry."""
     codes = F.col(codes_col) if isinstance(codes_col, str) else codes_col
     total: Column | None = None
     for s, row in enumerate(adc_table):
-        term = F.element_at(
-            F.lit([float(x) for x in row]), F.element_at(codes, s + 1) + 1
-        )
+        lut = F.expr("array(" + ", ".join(sql_double(x) for x in row) + ")")
+        term = F.element_at(lut, F.element_at(codes, s + 1) + 1)
         total = term if total is None else total + term
     return total
 
@@ -297,8 +302,6 @@ def pq_adc_search(
     codebook defaults to the md5 book of the query's dimension, which
     raises for a dimension its subspaces do not divide.
     """
-    from local_vectordb_spark.functions.vector import dot_product, l2_norm
-
     if codebook is None:
         codebook = pq_codebook(dim=len(list(query_vec)))
     adc = pq_adc_table(query_vec, codebook)
@@ -317,18 +320,9 @@ def pq_adc_search(
         .orderBy(F.desc("_adc"), F.asc(id_col))
         .limit(n_candidates)
     )
-    qn = lit_double_array(_unit(query_vec))
-    norm = l2_norm(F.col(vec_col))
-    score = F.when(norm == 0.0, F.lit(0.0)).otherwise(
-        dot_product(F.col(vec_col), qn) / norm
-    )
-    return (
-        cand.select(
-            F.col(id_col), F.round(score, SCORE_DECIMALS).alias("score"),
-            *extra_cols,
-        )
-        .orderBy(F.desc("score"), F.asc(id_col))
-        .limit(k)
+    return knn_brute_force(
+        cand, query_vec, k=k, id_col=id_col, vec_col=vec_col,
+        extra_cols=extra_cols,
     )
 
 
@@ -505,7 +499,6 @@ def ivf_pq_residual_search(
     residual book are data-dependent); the deterministic md5 tiers
     carry the value oracles for the identical ADC machinery.
     """
-    from local_vectordb_spark.functions.vector import dot_product, l2_norm
     from local_vectordb_spark.operators.ivf import probe_clusters
 
     spark = vectors.sparkSession
@@ -540,16 +533,7 @@ def ivf_pq_residual_search(
         .orderBy(F.desc("_adc"), F.asc(id_col))
         .limit(n_candidates)
     )
-    qn = lit_double_array(qhat)
-    norm = l2_norm(F.col(vec_col))
-    score = F.when(norm == 0.0, F.lit(0.0)).otherwise(
-        dot_product(F.col(vec_col), qn) / norm
-    )
-    return (
-        cand.select(F.col(id_col), F.round(score, SCORE_DECIMALS).alias("score"))
-        .orderBy(F.desc("score"), F.asc(id_col))
-        .limit(k)
-    )
+    return knn_brute_force(cand, query_vec, k=k, id_col=id_col, vec_col=vec_col)
 
 
 def ivf_pq_residual_search_batch(

@@ -1,40 +1,39 @@
-"""Streaming change-data-feed consumer (SURVEY §7 step 7, r14
-verdict #7): the client-side loop that keeps a local MIRROR table in
-sync with a served VectorDB table by polling ``GET /{kind}/_changes``
-over HTTP instead of re-reading snapshots.
+"""Streaming change-data-feed consumer: the client-side loop that keeps
+a local MIRROR table in sync with a served VectorDB table by polling
+``GET /{kind}/_changes`` over HTTP instead of re-reading snapshots.
 
-The batch half of this contract already exists —
-``operators/incremental.apply_changes`` applies one composed feed to
-one base snapshot, and the ``crud_cdf_mirror`` registry entry
-hash-checks that ``mirror(snapshot@since, feed(since, v)) ==
-snapshot@v`` byte-for-byte. This module is the SERVING-side closure:
-a consumer that only ever sees the HTTP face (paginated JSON pages,
-``X-Table-Version`` / ``X-More-Changes`` headers, 410 on a broken
-chain) and must drive the continuation contract correctly:
+``operators/incremental.apply_changes`` is the batch form of the same
+contract (``mirror(snapshot@since, feed(since, v)) == snapshot@v``,
+hash-checked by the ``crud_cdf_mirror`` registry entry). This module
+is the consumer that sees only the HTTP face (paginated JSON pages,
+``X-Table-Version`` / ``X-More-Changes`` / ``X-Timeline-Id`` headers,
+410 on a broken chain). Its invariants:
 
 - every page of one poll is cut from the generation PINNED by the
-  first page's ``X-Table-Version`` (an immutable range — offset
+  first page's ``X-Table-Version`` (an immutable range, so offset
   pagination cannot tear across commits), re-polled with
   ``version=<pin>&offset+=limit`` until ``X-More-Changes: false``;
-- **410 Gone** (reset / initial load / GC'd generation in the range)
-  means the feed from this cursor is PERMANENTLY unservable: the
-  consumer falls back to re-reading the full snapshot through the
-  paginated list route, pinned the same way — which is also how a
-  brand-new mirror bootstraps, since a table's initial bulk load
-  records no delta by design;
-- the mirror commit is crash-safe the same way the server's store is:
-  data first into a versioned directory, then the ``_SINCE`` cursor
-  file replaced atomically — a consumer killed mid-sync re-applies an
-  idempotent feed, never serves a half-applied mirror.
+- a feed the server cannot serve (410 Gone, a 404 cursor past a
+  rewound head, or another ``X-Timeline-Id``) is never applied: the
+  consumer re-reads the full snapshot through the list route, pinned
+  the same way, which is also how a new mirror bootstraps, since a
+  table's initial bulk load records no delta;
+- the mirror is the store's own data layout (operators/incremental):
+  generations ``data_v{N}`` hive-partitioned by ``bucket_of`` the id
+  at a width fixed in ``_META`` at the first bootstrap, so a poll
+  rewrites only the buckets its feed touches and hard-links the rest,
+  at cost ∝ churn, never corpus;
+- a commit writes the data generation first and then replaces the
+  ``_SINCE`` cursor durably: a consumer killed mid-sync re-applies an
+  idempotent feed and never serves a half-applied mirror. The previous
+  generation is kept (its files back the new one's links); older ones
+  are removed.
 
-At scale the poll clock is any Structured Streaming source (rate,
-Kafka control topic, a scheduler tick) driving ``foreachBatch``; each
-micro-batch does one drain-and-apply, so mirror maintenance cost is
-∝ churn per poll interval — the same contract the server's own
-incremental index maintenance rides. The reference has no change
-feed at all (src/models/collection.py:86-110 rewrites files and
-rebuilds indexes wholesale); this is capability extension on the
-consumer side of the r13 producer.
+The poll clock is any Structured Streaming source (rate, Kafka control
+topic, a scheduler tick) driving ``foreachBatch``; each micro-batch is
+one drain-and-apply. The reference has no change feed at all
+(src/models/collection.py:86-110 rewrites files and rebuilds indexes
+wholesale).
 """
 
 from __future__ import annotations
@@ -51,44 +50,16 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from local_vectordb_spark.operators.incremental import (
-    apply_changes,
-    link_tree,
+    auto_buckets,
+    bucket_of,
+    durable_replace,
+    parquet_bytes,
+    rewrite_partitions,
+    seal_buckets,
+    touched_buckets,
+    write_buckets,
 )
 from local_vectordb_spark.sources.json_records import SCHEMAS
-
-# Mirror partitioning width: rows live in hash buckets so a sync can
-# rewrite ONLY the buckets the feed touches and hard-link the rest —
-# the same touched-partition discipline the server's incremental index
-# artifacts use. Must stay CONSTANT for a mirror's lifetime (bucket
-# identity is the layout); persisted in the mirror's _META at
-# bootstrap. 16 suits test-scale corpora; at 100 TB size it so one
-# bucket ≈ a few GB (tens of thousands of buckets) — per-poll cost is
-# then (touched buckets × bucket size) + churn, never the corpus.
-# r18 (r17 verdict #7): a parquet-snapshot bootstrap SELF-SIZES the
-# width from the snapshot's bytes with the data snapshot's policy
-# (one bucket ≈ one 128 MiB task split), floored here so test-scale
-# mirrors keep this exact layout; pass n_buckets to pin it.
-N_BUCKETS_DEFAULT = 16
-
-
-def _auto_mirror_buckets(nbytes: int,
-                         target_bytes: int = 128 << 20) -> int:
-    import math
-
-    return max(N_BUCKETS_DEFAULT,
-               min(8192, math.ceil(nbytes / target_bytes)))
-
-
-def _snapshot_parquet_bytes(path: str) -> int:
-    """Bytes of the snapshot backing a bootstrap — a directory of
-    parquet parts or a single file; the self-sizing input."""
-    if os.path.isfile(path):
-        return os.path.getsize(path)
-    return sum(
-        os.path.getsize(os.path.join(r, f))
-        for r, _d, fs in os.walk(path)
-        for f in fs if f.endswith(".parquet")
-    )
 
 
 class FeedGone(Exception):
@@ -197,15 +168,10 @@ def _parse_row(row: dict, schema: T.StructType) -> tuple:
         if v is not None and isinstance(f.dataType, T.TimestampType):
             v = _dt.datetime.fromisoformat(v)
             if v.tzinfo is not None:
-                # r16 wire format: the server serializes with an
-                # explicit UTC offset (r15 ADVICE — a naive string is
-                # re-interpreted in the CONSUMER's session zone, which
-                # may differ from the producer's). Normalize to aware
-                # UTC; Spark converts aware datetimes exactly,
-                # independent of either session's timeZone conf. A
-                # naive string (pre-r16 server) keeps the old
-                # interpretation — producer and consumer must then
-                # share spark.sql.session.timeZone.
+                # the server writes an explicit UTC offset: an aware
+                # datetime converts exactly whatever either session's
+                # timeZone. A naive string is read in this session's
+                # zone, which must then match the producer's.
                 v = v.astimezone(_dt.timezone.utc)
         vals.append(v)
     return tuple(vals)
@@ -225,10 +191,6 @@ def _mirror_data_dir(mirror_dir: str, version: int) -> str:
     return os.path.join(mirror_dir, f"data_v{version}")
 
 
-def _bucket_expr(n_buckets: int):
-    return F.pmod(F.xxhash64("id"), F.lit(n_buckets)).cast("int")
-
-
 def _mirror_meta(mirror_dir: str) -> dict:
     p = os.path.join(mirror_dir, "_META")
     if not os.path.exists(p):
@@ -238,12 +200,7 @@ def _mirror_meta(mirror_dir: str) -> dict:
 
 
 def _write_meta(mirror_dir: str, meta: dict) -> None:
-    tmp = os.path.join(mirror_dir, "_META.tmp")
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, os.path.join(mirror_dir, "_META"))
+    durable_replace(os.path.join(mirror_dir, "_META"), json.dumps(meta))
 
 
 def _mirror_n_buckets(mirror_dir: str) -> int:
@@ -271,29 +228,11 @@ def mirror_cursor(mirror_dir: str) -> int | None:
 
 
 def _point_cursor_and_gc(mirror_dir: str, version: int, prev: int | None) -> None:
-    """Cursor replaced atomically AFTER the data write, older
-    generations GC'd last — the same write-then-point discipline as
-    the server's store, so a consumer killed at any point serves
-    either the previous consistent mirror or the new one, never a
-    torn write. The immediately-previous generation is RETAINED
-    (keep-2): its files back the new generation's hard links, and
-    keeping it observable lets tests (and operators) verify the
-    link-reuse contract; everything older is removed."""
-    tmp = os.path.join(mirror_dir, "_SINCE.tmp")
-    with open(tmp, "w") as f:
-        f.write(str(version))
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, os.path.join(mirror_dir, "_SINCE"))
-    # fsync the DIRECTORY too, mirroring the server's _commit_pointer
-    # (r15 ADVICE): the rename lives in the directory's metadata, and
-    # without flushing that fd the cursor flip may not survive power
-    # loss even though the file contents would.
-    dirfd = os.open(mirror_dir, os.O_RDONLY)
-    try:
-        os.fsync(dirfd)
-    finally:
-        os.close(dirfd)
+    """The mirror's commit point: ``_SINCE`` names ``version``, replaced
+    durably AFTER the data write, then every generation but this one
+    and ``prev`` is removed. ``prev`` is kept: its files back the new
+    generation's hard links."""
+    durable_replace(os.path.join(mirror_dir, "_SINCE"), str(version))
     keep = {f"data_v{version}"} | (
         {f"data_v{prev}"} if prev is not None else set()
     )
@@ -309,34 +248,22 @@ def _commit_mirror_full(
     version: int,
     prev: int | None,
     n_buckets: int,
-    n_rows: int,
     timeline: str | None = None,
 ) -> None:
-    """Bootstrap / 410-recovery commit: the whole snapshot, written
-    once, hash-bucket partitioned so every LATER sync can rewrite
-    only touched buckets. An EMPTY snapshot (a reset table's fresh
-    generation) writes a plain schema-bearing parquet instead — a
-    partitionBy write with zero rows produces a directory no reader
-    can infer a schema from; later syncs see no ``bucket=`` dirs and
-    carry nothing, which is exactly right.
-
-    ``timeline`` pins WHOSE version line the cursor belongs to (the
-    server's ``X-Timeline-Id``): ``n_buckets`` is immutable layout
-    identity, but the timeline is re-pinned on every bootstrap — a
-    bootstrap is exactly the moment the mirror adopts a (possibly
-    new) timeline."""
+    """Bootstrap or recovery commit: the whole snapshot ``df`` as one
+    bucketed generation (``write_buckets``; an empty snapshot is a flat
+    empty parquet). ``n_buckets`` is the mirror's width only when
+    ``_META`` has none yet: the width is layout identity for the
+    mirror's lifetime. ``timeline`` (the server's ``X-Timeline-Id``) is
+    re-pinned on every bootstrap, the moment the mirror adopts a
+    possibly new version line."""
     meta = _mirror_meta(mirror_dir)
-    if "n_buckets" not in meta:
-        meta["n_buckets"] = n_buckets
+    meta.setdefault("n_buckets", n_buckets)
     if timeline is not None:
         meta["timeline"] = timeline
     _write_meta(mirror_dir, meta)
-    target = _mirror_data_dir(mirror_dir, version)
-    if n_rows == 0:
-        df.write.mode("overwrite").parquet(target)
-    else:
-        df.withColumn("bucket", _bucket_expr(_mirror_n_buckets(mirror_dir))) \
-            .write.partitionBy("bucket").mode("overwrite").parquet(target)
+    write_buckets(df, _mirror_data_dir(mirror_dir, version),
+                  meta["n_buckets"])
     _point_cursor_and_gc(mirror_dir, version, prev)
 
 
@@ -348,53 +275,22 @@ def _apply_feed_bucketed(
     since: int,
     pin: int,
 ) -> int:
-    """The cost ∝ churn sync (r15): the feed names its ids, ids name
-    their hash buckets, so the new generation REWRITES only the
-    touched buckets (partition-pruned read of exactly those
-    directories + the broadcast anti-join apply) and HARD-LINKS every
-    untouched bucket directory from the previous generation —
-    `link_tree`, the same file-level reuse the server's incremental
-    index artifacts ride. A full-corpus rewrite per poll (the naive
-    form) costs ∝ corpus at 100 TB no matter how small the delta;
-    this costs (touched buckets + churn). Returns the touched-bucket
-    count."""
-    n_buckets = _mirror_n_buckets(mirror_dir)
-    prev_dir = _mirror_data_dir(mirror_dir, since)
+    """Apply ``feed`` to generation ``since`` as generation ``pin``: the
+    buckets of the ids the feed names are rewritten (their rows minus
+    those ids, plus the upserts) and every other bucket is hard-linked
+    (``rewrite_partitions``), so a poll costs ∝ churn. Returns the
+    touched-bucket count."""
+    n = _mirror_n_buckets(mirror_dir)
     new_dir = _mirror_data_dir(mirror_dir, pin)
-    touched = {
-        r.b
-        for r in feed.select(_bucket_expr(n_buckets).alias("b"))
-        .distinct().collect()
-    }  # churn-sized collect, never corpus-sized
-    existing = {
-        name for name in os.listdir(prev_dir) if name.startswith("bucket=")
-    }
-    touch_paths = [
-        os.path.join(prev_dir, f"bucket={b}")
-        for b in sorted(touched)
-        if f"bucket={b}" in existing
-    ]
-    if touch_paths:
-        base_touched = (
-            spark.read.option("basePath", prev_dir).parquet(*touch_paths)
-            .drop("bucket")
-        )
-    else:  # feed only names ids in buckets the mirror never held
-        base_touched = spark.createDataFrame([], SCHEMAS[kind])
-    out = apply_changes(base_touched, feed).withColumn(
-        "bucket", _bucket_expr(n_buckets)
+    touched = touched_buckets(feed, n)
+    cols = [f.name for f in SCHEMAS[kind].fields]
+    rewrite_partitions(
+        _mirror_data_dir(mirror_dir, since), new_dir, "bucket", touched,
+        feed.select("id"),
+        feed.filter(F.col("change_type") == "upsert").select(*cols)
+        .withColumn("bucket", bucket_of(n)),
     )
-    out.write.partitionBy("bucket").mode("overwrite").parquet(new_dir)
-    for name in existing:
-        if int(name.split("=", 1)[1]) not in touched:
-            link_tree(os.path.join(prev_dir, name),
-                      os.path.join(new_dir, name))
-    if not any(n.startswith("bucket=") for n in os.listdir(new_dir)):
-        # the feed emptied the table (every row removed, nothing to
-        # link): a zero-row partitionBy dir carries no schema, so
-        # rewrite it as a plain empty parquet the reader can open
-        spark.createDataFrame([], SCHEMAS[kind]) \
-            .write.mode("overwrite").parquet(new_dir)
+    seal_buckets(spark, new_dir, n, SCHEMAS[kind])
     _point_cursor_and_gc(mirror_dir, pin, prev=since)
     return len(touched)
 
@@ -409,51 +305,40 @@ def sync_mirror_once(
     n_buckets: int | None = None,
     snapshot_path=None,
 ) -> dict:
-    """One poll: drain the paginated feed from the committed cursor
-    and apply it to the mirror — rewriting ONLY the hash buckets the
-    feed touches (broadcast anti-join over a partition-pruned read,
-    untouched buckets hard-linked), so a poll costs ∝ churn, never ∝
-    corpus. Bootstrap or recover from 410 by paging the full snapshot
-    (that path IS corpus-sized by contract — it exists because the
-    feed from this base is permanently unservable; a production
-    bootstrap at 100 TB reads the snapshot from shared storage
-    instead of HTTP/JSON). ``n_buckets`` applies only at bootstrap —
-    the width is the mirror's layout identity and persists in its
-    ``_META``. Default (None) SELF-SIZES at a parquet-snapshot
-    bootstrap from the snapshot's bytes (one bucket ≈ one task-sized
-    split, floored at ``N_BUCKETS_DEFAULT`` — r17 verdict #7; the
-    HTTP-pages bootstrap keeps the floor width, it is the wire-only
-    small path by contract); an explicit integer pins the width.
-    Returns a progress record ``{action, since,
-    served_version, n_changes, touched_buckets}``.
+    """One poll: drain the feed from the committed cursor and apply it
+    to the mirror (``_apply_feed_bucketed``: cost ∝ churn). Returns a
+    progress record ``{action, since, served_version, n_changes,
+    touched_buckets}``; ``action`` is ``noop``, ``applied``,
+    ``bootstrapped``, ``reset`` or ``empty``.
 
-    A RESET under the consumer is survived, not crashed on: a reset
-    rewinds the server's version line, so a poll from the old cursor
-    answers 404 (cursor ahead of the live head) or 410 (chain gone) —
-    either way the mirror's timeline is dead. The poller falls back
-    to the snapshot read; if the reset table has live generations the
-    mirror re-bootstraps onto the new timeline, and if it is still
-    EMPTY the mirror is wiped (action ``'reset'``) rather than left
-    serving pre-reset rows forever.
+    A feed that cannot extend the mirror's timeline is never applied;
+    the mirror re-reads the full snapshot (corpus-sized by contract)
+    and bootstraps from it instead:
+    - no cursor yet (a new mirror);
+    - 410 Gone (reset, initial load or a GC'd generation in the range);
+    - 404 on a cursor that came from a prior ``X-Table-Version``: the
+      server's version line was rewound under it (a reset);
+    - an ``X-Timeline-Id`` other than the one pinned in ``_META``: a
+      recreated or restored store at the same address whose version
+      line passed the cursor. A mirror with no pinned id adopts the
+      first one it sees.
+    A re-read that finds the table empty wipes a synced mirror to the
+    never-synced state (``reset``) and reports ``empty`` for a new one;
+    neither leaves pre-reset rows served.
 
-    A RECREATED/RESTORED store whose new version line has ADVANCED
-    past the cursor is the case version arithmetic cannot see (r15
-    ADVICE, medium): ``since=cursor`` answers 200 with a complete —
-    but new-timeline — delta chain. The server's ``X-Timeline-Id``
-    (a UUID minted once per store directory) is compared against the
-    id pinned in the mirror's ``_META``; a mismatch is treated
-    exactly like 410 — dead timeline, snapshot re-bootstrap — never
-    applied onto the old-timeline base.
+    ``n_buckets`` sets the mirror's width at its first bootstrap only
+    (``_META`` keeps it for the mirror's lifetime). None sizes it with
+    the store's ``auto_buckets``: from the snapshot's bytes when
+    bootstrapping from parquet, at the floor when bootstrapping from
+    HTTP pages (the small, wire-only path).
 
-    ``snapshot_path`` is the 100 TB bootstrap escape hatch (r15
-    verdict #4): a ``(kind, version) -> path`` hook that names the
-    pinned generation's parquet snapshot on SHARED storage. When set
-    and the path exists, bootstrap/410-recovery reads that parquet
-    directly — a distributed columnar scan, bucket-partitioned write,
-    no rows through the driver — with the HTTP JSON pager kept as the
-    wire-only fallback (the pin and timeline id still come from one
-    header read, so the parquet generation read is exactly the one
-    the server named)."""
+    ``snapshot_path`` is a ``(kind, version) -> path`` hook naming the
+    pinned generation's parquet snapshot on shared storage. When it
+    names an existing path, the bootstrap reads that parquet directly,
+    a distributed scan with no rows through the driver; the pin and
+    timeline id still come from one header read, so it reads exactly
+    the generation the server named. Otherwise the HTTP JSON pager is
+    the fallback."""
     os.makedirs(mirror_dir, exist_ok=True)
     since = mirror_cursor(mirror_dir)
     schema = _changes_schema(kind)
@@ -480,7 +365,6 @@ def sync_mirror_once(
                 # its deltas belong to another timeline — 410 semantics
                 rows, pin = None, None
             elif pinned_tl is None and tid is not None:
-                # a pre-r16 mirror meets a timeline-aware server:
                 # adopt the id now so every later poll is protected
                 meta["timeline"] = tid
                 _write_meta(mirror_dir, meta)
@@ -506,12 +390,9 @@ def sync_mirror_once(
                     [f.name for f in SCHEMAS[kind].fields]
                 )
                 n = snap.count()
-                nb = n_buckets if n_buckets is not None else (
-                    _auto_mirror_buckets(_snapshot_parquet_bytes(path))
-                )
+                nb = n_buckets or auto_buckets(parquet_bytes(path))
                 _commit_mirror_full(snap, mirror_dir, head, prev=since,
-                                    n_buckets=nb, n_rows=n,
-                                    timeline=tid)
+                                    n_buckets=nb, timeline=tid)
                 return {"action": "bootstrapped", "since": since,
                         "served_version": head, "n_changes": n,
                         "touched_buckets": None,
@@ -523,8 +404,7 @@ def sync_mirror_once(
     snap = _rows_to_df(spark, rows, SCHEMAS[kind])
     if pin >= 0:
         _commit_mirror_full(snap, mirror_dir, pin, prev=since,
-                            n_buckets=n_buckets or N_BUCKETS_DEFAULT,
-                            n_rows=len(rows),
+                            n_buckets=n_buckets or auto_buckets(0),
                             timeline=tid)
         return {"action": "bootstrapped", "since": since,
                 "served_version": pin, "n_changes": len(rows),
@@ -540,9 +420,8 @@ def sync_mirror_once(
                               ignore_errors=True)
         return {"action": "reset", "since": since, "served_version": pin,
                 "n_changes": 0, "touched_buckets": None}
-    # never-written table, never-synced mirror: nothing was created —
-    # a distinct action (r15 ADVICE: reporting 'bootstrapped' here
-    # misled monitors; no _SINCE exists and read_mirror still raises)
+    # never-written table, never-synced mirror: nothing was created,
+    # no _SINCE exists and read_mirror still raises
     return {"action": "empty", "since": since,
             "served_version": pin, "n_changes": 0,
             "touched_buckets": None}

@@ -42,7 +42,6 @@ _SLOW_TESTS = {
     "test_cdf_mirror_detects_recreated_store_timeline",
     "test_cdf_mirror_recovers_from_410_by_snapshot_reread",
     "test_cdf_mirror_survives_server_reset",
-    "test_cdf_mirror_empty_store_reports_empty",
     "test_stream_upserts_invalidate_and_rebuild_ivf",
     # test_incremental.py — versioned-layout e2e
     "test_data_bucket_count_self_sizes_and_rebalances",

@@ -15,6 +15,7 @@ from local_vectordb_spark.api import (
     ConcurrentWriteError,
     VectorDB,
 )
+from local_vectordb_spark.operators.incremental import generation_buckets
 from local_vectordb_spark.sources.json_records import SCHEMAS
 
 # strategy capabilities, read from the dispatch table itself; `auto`
@@ -22,10 +23,6 @@ from local_vectordb_spark.sources.json_records import SCHEMAS
 BATCH_TYPES = [n for n, st in _STRATEGIES.items() if st.driver_batch] + ["auto"]
 TABLE_TYPES = [n for n, st in _STRATEGIES.items() if st.table_batch] + ["auto"]
 SINGLE_ONLY = [n for n, st in _STRATEGIES.items() if st.driver_batch is None]
-DRIVER_ONLY = [
-    n for n, st in _STRATEGIES.items()
-    if st.driver_batch is not None and st.table_batch is None
-]
 
 QUESTIONS = [
     "What is the capital of Germany ?",
@@ -525,23 +522,21 @@ def test_search_batch_10k_queries_distributed(db):
         assert top[qid] == QUESTIONS[qid % len(QUESTIONS)]
 
 
-def test_search_batch_nsw_rejects_oversized_set(db):
-    """Strategies without a table-batch form (nsw: pooled LSH
-    candidates are per-query driver work) refuse a set past the driver
-    bound and still serve one within it."""
+def test_search_batch_nsw_equals_cosine_on_both_paths(db):
+    """Every batchable strategy has a table form, and an nsw batch is
+    the exact scan: on the driver and the table path it equals the
+    cosine batch row for row."""
     d, *_ = db
-    assert DRIVER_ONLY == ["nsw"]
-    for t in DRIVER_ONLY:
-        with pytest.raises(ValueError, match="does not scale"):
-            d.search_batch(
-                queries=[(i, "x") for i in range(3)],
-                index_type=t,
-                max_driver_queries=2,
-            )
-        assert d.search_batch(
-            queries=[(0, QUESTIONS[0])], index_type=t, k=1,
-            max_driver_queries=2,
-        ).count() == 1
+    assert TABLE_TYPES == BATCH_TYPES
+    qs = [(i, QUESTIONS[i]) for i in (0, 3, 8)]
+    for mdq in (1024, 0):
+        got = [
+            sorted(map(tuple, d.search_batch(
+                queries=qs, index_type=t, k=3, max_driver_queries=mdq,
+            ).collect()))
+            for t in ("nsw", "cosine")
+        ]
+        assert got[0] == got[1] and len(got[0]) == 9, mdq
 
 
 def test_search_batch_rejects_single_query_strategies(db):
@@ -571,13 +566,11 @@ def test_search_batch_rejects_single_query_types_before_embedding(db, monkeypatc
     monkeypatch.setattr(d, "_embed_texts", no_embedding)
     monkeypatch.setattr(d, "embedder", no_embedding)
     for t in SINGLE_ONLY:
-        with pytest.raises(ValueError, match="single-query only"):
-            d.search_batch(queries=[(0, "q")], index_type=t)
-    for t in DRIVER_ONLY:
-        with pytest.raises(ValueError, match="does not scale"):
-            d.search_batch(
-                queries=[(0, "q")], index_type=t, max_driver_queries=0
-            )
+        for mdq in (1024, 0):
+            with pytest.raises(ValueError, match="single-query only"):
+                d.search_batch(
+                    queries=[(0, "q")], index_type=t, max_driver_queries=mdq
+                )
 
 
 def test_search_batch_sign_matches_cosine_hits(db):
@@ -2174,7 +2167,7 @@ def test_sq8_tier_two_stage_exact_rerank(spark, tmp_path):
     # 16-d, so the 8-subspace pq book splits the vectors and pq answers
     d, doc, q = _seed_sq8_store(spark, tmp_path, dims=16)
     v = d._current_version("chunks")
-    assert d._version_buckets(
+    assert generation_buckets(
         os.path.join(d._table_dir("chunks"), f"v{v}")) == 8
 
     def rows(df):

@@ -22,8 +22,11 @@ import local_vectordb_spark.api as api_mod
 from local_vectordb_spark.api import VectorDB
 from local_vectordb_spark.operators import ivf
 from local_vectordb_spark.operators.incremental import (
+    auto_buckets,
     compose_delta_chain,
+    generation_buckets,
     rewrite_partitions,
+    seal_buckets,
 )
 from local_vectordb_spark.sources.json_records import SCHEMAS
 
@@ -160,6 +163,90 @@ def test_rewrite_partitions_rewrites_touched_and_links_the_rest(
     assert all(n > 1 for n in files2.values())
     assert sorted(os.listdir(out2)) == sorted(
         n for n in os.listdir(prev) if n.startswith("k="))
+
+
+def test_rewrite_partitions_over_a_flat_empty_generation(spark, tmp_path):
+    """A previous generation with no ``k=`` directory (the flat empty
+    parquet an emptied table is sealed to) holds no rows: the rewrite
+    writes the new rows alone, and a rewrite that keeps no rows is
+    sealed back to a readable flat empty parquet."""
+    from pyspark.sql.types import StructType
+
+    schema = "id string, v int"
+    prev = str(tmp_path / "prev")
+    spark.createDataFrame([], schema).write.parquet(prev)
+    new = spark.createDataFrame([("a", 1, 3), ("b", 2, 3)], schema + ", k int")
+    out = str(tmp_path / "out")
+    rewrite_partitions(prev, out, "k", {3}, new.select("id"), new)
+    assert seal_buckets(spark, out, 4, StructType.fromDDL(schema))
+    assert generation_buckets(out) == 4
+    assert sorted(map(tuple, spark.read.parquet(out).collect())) == [
+        ("a", 1, 3), ("b", 2, 3)]
+
+    # the next generation deletes both rows: nothing is left to write
+    # or link, and the sealed result is a flat empty parquet
+    out2 = str(tmp_path / "out2")
+    rewrite_partitions(out, out2, "k", {3}, new.select("id"), new.limit(0))
+    assert not seal_buckets(spark, out2, 4, StructType.fromDDL(schema))
+    assert generation_buckets(out2) is None
+    empty = spark.read.parquet(out2)
+    assert empty.columns == ["id", "v"] and empty.count() == 0
+
+
+def test_rewrite_partitions_scans_only_touched_dirs(spark, tmp_path,
+                                                    monkeypatch):
+    """The rewrite lists and reads only the touched partition
+    directories that exist: every file its scan can read lies under a
+    touched ``k=`` directory, however many partitions there are."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    schema = "id string, v int, k int"
+    prev = str(tmp_path / "prev")
+    spark.createDataFrame([(f"r{i}", i, i % 8) for i in range(32)],
+                          schema).write.partitionBy("k").parquet(prev)
+    reads = []
+    real = DataFrameReader.parquet
+
+    def spy(self, *paths, **kw):
+        df = real(self, *paths, **kw)
+        reads.append(df)
+        return df
+
+    monkeypatch.setattr(DataFrameReader, "parquet", spy)
+    new = spark.createDataFrame([("r1", 100, 1), ("n0", 7, 5)], schema)
+    changed = spark.createDataFrame([("r1",), ("r2",), ("n0",)], "id string")
+    out = str(tmp_path / "out")
+    # k=9 has no directory: it is neither read nor written
+    rewrite_partitions(prev, out, "k", {1, 2, 5, 9}, changed, new)
+    monkeypatch.undo()
+    files = [f for df in reads for f in df.inputFiles()]
+    assert files
+    touched_dirs = {os.path.join(prev, f"k={k}") for k in (1, 2, 5)}
+    for f in files:
+        path = f.removeprefix("file://")
+        assert os.path.dirname(path) in touched_dirs, path
+    got = {tuple(r) for r in spark.read.parquet(out).select(
+        "id", "v", "k").collect()}
+    assert ("r1", 100, 1) in got and ("n0", 7, 5) in got
+    assert len(got) == 32  # r2 deleted, r1 replaced, n0 added
+
+
+def test_rewrite_partitions_checks_the_previous_schema(spark, tmp_path):
+    """A previous layout missing one of the new rows' columns raises
+    AnalysisException (the caller then rebuilds in full), also when
+    none of the touched partitions has a directory: otherwise
+    old-layout partitions would be linked beside new-layout ones."""
+    from pyspark.errors import AnalysisException
+
+    prev = str(tmp_path / "prev")
+    spark.createDataFrame([(f"r{i}", i % 2) for i in range(4)],
+                          "id string, k int").write.partitionBy(
+        "k").parquet(prev)
+    new = spark.createDataFrame([("n0", 7, 5)], "id string, v int, k int")
+    for touched in ({5}, {0, 5}):
+        with pytest.raises(AnalysisException):
+            rewrite_partitions(prev, str(tmp_path / f"out{len(touched)}"),
+                               "k", touched, new.select("id"), new)
 
 
 # ---------- delta recording on the write path ----------
@@ -764,13 +851,13 @@ def test_data_commits_are_delta_proportional(spark, tmp_path):
     # corpus either way)
     d.add("chunks", rows([f"c{i:03d}" for i in range(64)]))
     v1 = d._current_version("chunks")
-    assert d._version_buckets(os.path.join(cdir, f"v{v1}")) is None
+    assert generation_buckets(os.path.join(cdir, f"v{v1}")) is None
 
     # first delta commit -> wholesale UPGRADE to the bucketed layout
     d.add("chunks", rows(["late0"]))
     v2 = d._current_version("chunks")
     v2d = os.path.join(cdir, f"v{v2}")
-    assert d._version_buckets(v2d) == B
+    assert generation_buckets(v2d) == B
     assert any(n.startswith("bucket=") for n in os.listdir(v2d))
 
     # second delta commit -> INCREMENTAL: only touched buckets
@@ -778,7 +865,7 @@ def test_data_commits_are_delta_proportional(spark, tmp_path):
     d.add("chunks", rows(["late1"]))
     v3 = d._current_version("chunks")
     v3d = os.path.join(cdir, f"v{v3}")
-    assert d._version_buckets(v3d) == B
+    assert generation_buckets(v3d) == B
 
     def bucket_inodes(vdir):
         out = {}
@@ -863,7 +950,7 @@ def test_data_bucket_count_self_sizes_and_rebalances(spark, tmp_path):
 
     def buckets_of(d, root):
         v = d._current_version("chunks")
-        return d._version_buckets(
+        return generation_buckets(
             os.path.join(str(tmp_path / root), "chunks", f"v{v}"))
 
     # default target (128 MiB): a fixture-scale store sizes to the 16
@@ -949,7 +1036,7 @@ def test_data_bucket_cap_keeps_extending_incrementally(spark, tmp_path):
     d.add("chunks", rows(["late0"]))   # upgrade: bucketed at auto B
     d.add("chunks", rows(["late1"]))   # outgrown, B jumps to the cap
     vcap = gen_dir()
-    assert d._version_buckets(vcap) == 8192
+    assert generation_buckets(vcap) == 8192
 
     # the decisive commit: prev is AT the cap and still 'outgrown' —
     # it must extend (same _BUCKETS, untouched bucket files are the
@@ -957,7 +1044,7 @@ def test_data_bucket_cap_keeps_extending_incrementally(spark, tmp_path):
     d.add("chunks", rows(["late2"]))
     vnext = gen_dir()
     assert vnext != vcap
-    assert d._version_buckets(vnext) == 8192
+    assert generation_buckets(vnext) == 8192
 
     def bucket_files(vdir):
         out = {}
@@ -1015,7 +1102,7 @@ def test_data_commit_tolerates_hive_default_partition_dir(spark,
     d.add("chunks", rows(["late0"]))  # now on the bucketed layout
     cdir = os.path.join(str(tmp_path / "hd"), "chunks")
     vdir = os.path.join(cdir, f"v{d._current_version('chunks')}")
-    assert d._version_buckets(vdir) == 8
+    assert generation_buckets(vdir) == 8
     os.makedirs(os.path.join(vdir, "bucket=__HIVE_DEFAULT_PARTITION__"))
 
     d.add("chunks", rows(["late1"]))  # pre-fix: ValueError, commit dead
@@ -1135,19 +1222,14 @@ def test_sign_layout_self_sizes_subpartitions(spark, tmp_path):
     assert sub_hits2 == flat_hits2
 
 
-def test_mirror_bucket_width_self_sizes(tmp_path):
-    """r17 verdict #7, mirror half: the CDF mirror's bootstrap width
-    reuses the same policy — floor N_BUCKETS_DEFAULT at test scale
-    (every existing mirror layout unchanged), one bucket per task-sized
-    split past it, capped. Pure policy math; the end-to-end bootstrap
-    path is covered in test_streaming and BENCH_scale."""
-    from local_vectordb_spark.streaming.cdf import (
-        N_BUCKETS_DEFAULT,
-        _auto_mirror_buckets,
-    )
-
+def test_mirror_bucket_width_self_sizes():
+    """The store and the CDF mirror size their bucket count with one
+    function: the 16 floor at test scale, one bucket per task-sized
+    split past it, capped at 8192. Pure policy math; the end-to-end
+    bootstrap path is covered in test_streaming and BENCH_scale."""
     t = 128 << 20
-    assert _auto_mirror_buckets(0) == N_BUCKETS_DEFAULT
-    assert _auto_mirror_buckets(10 * t) == N_BUCKETS_DEFAULT
-    assert _auto_mirror_buckets(100 * t) == 100
-    assert _auto_mirror_buckets(10**15) == 8192  # capped
+    assert auto_buckets(0) == 16
+    assert auto_buckets(10 * t) == 16
+    assert auto_buckets(100 * t) == 100
+    assert auto_buckets(10**15) == 8192  # capped
+    assert auto_buckets(100 * 512, 512) == 100

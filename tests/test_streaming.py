@@ -782,17 +782,24 @@ def test_cdf_mirror_stream_drains_paginated_feed(spark, tmp_path):
     assert [r["action"] for r in s3] == ["noop"]
     assert mirror_cursor(mirror_dir) == live_v
 
-    # tick 4 (r15 — cost ∝ churn at the FILE level): one more commit,
-    # a 1-id feed. The sync must rewrite ONLY that id's hash bucket;
+    # tick 4 (cost ∝ churn at the FILE level): one more commit, a
+    # 1-id feed. The sync must rewrite ONLY that id's hash bucket;
     # every other bucket directory must be HARD-LINKED from the
-    # previous generation (st_nlink > 1 — the same file-level reuse
-    # the server's incremental index artifacts ride), never rewritten.
-    from pyspark.sql import functions as F
+    # previous generation (the same inodes — the file-level reuse the
+    # server's incremental index artifacts ride), never rewritten.
+    from local_vectordb_spark.operators.incremental import touched_buckets
+
     z = req("POST", "/chunks", {"content": "late row",
                                 "document_id": doc["id"]})
-    z_bucket = spark.range(1).select(
-        F.pmod(F.xxhash64(F.lit(z["id"])), F.lit(16)).cast("int").alias("b")
-    ).collect()[0].b
+    (z_bucket,) = touched_buckets(
+        spark.createDataFrame([(z["id"],)], "id string"), 16)
+
+    def inodes(gen, name):
+        return {os.stat(os.path.join(gen, name, f)).st_ino
+                for f in os.listdir(os.path.join(gen, name))
+                if f.endswith(".parquet")}
+
+    prev_gen = os.path.join(mirror_dir, f"data_v{mirror_cursor(mirror_dir)}")
     tick(4)
     s4 = drain([])
     assert [r["action"] for r in s4] == ["applied"]
@@ -812,6 +819,7 @@ def test_cdf_mirror_stream_drains_paginated_feed(spark, tmp_path):
             rewritten += 1
         else:
             assert min(nlinks) > 1, f"untouched bucket {name} rewritten"
+            assert inodes(gen_dir, name) == inodes(prev_gen, name), name
             linked += 1
     assert rewritten == 1 and linked >= 1, (rewritten, linked)
     # and the mirror still equals the live table exactly
